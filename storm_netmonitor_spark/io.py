@@ -471,52 +471,6 @@ def bucketed_artifact_frame(
     return spark.table(tbl)
 
 
-def scratch_bucketed_frame(
-    df: DataFrame, bucket_col: str, n_buckets: int
-) -> tuple[DataFrame, object]:
-    """Stage a LOOP-STATIC frame as a throwaway bucketed table (guide
-    §3.3; VERDICT r14 #5 applied to per-call fold frames): one shuffle
-    writes the frame hash-clustered by ``bucket_col`` (tmpfs when the
-    platform has it — same rationale as the streaming checkpoints), and
-    every loop round that joins or aggregates on ``bucket_col`` then
-    reads a scan that already satisfies the distribution instead of
-    re-exchanging the unchanged frame per round. The staging shuffle is
-    work round 1 would have paid anyway; rounds ≥ 2 get their exchange
-    removed. This replaces the ``localCheckpoint`` pin for such frames —
-    Spark 4.1's ExistingRDD scan drops outputPartitioning, so a
-    checkpointed frame re-exchanges every round no matter how it was
-    partitioned (measured in r14, OPTIMIZATION_r14.md §Not-yet #6).
-
-    Returns ``(frame, cleanup)``; call ``cleanup()`` once the loop's
-    outputs are materialized (the table entry and files are per-call
-    scratch, not artifacts)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    spark = df.sparkSession
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    path = tempfile.mkdtemp(prefix="nm_bktscratch_", dir=base)
-    tbl = "nm_bkt_scratch_" + uuid.uuid4().hex[:12]
-    (
-        df.repartition(n_buckets, bucket_col)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(tbl)
-    )
-
-    def cleanup() -> None:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
-
-    return spark.table(tbl), cleanup
-
-
 def disk_artifact_dir(
     name: str,
     version: str,

@@ -769,12 +769,12 @@ CC_MAX_ITERS = 20
 #: Bucket count for the STANDING symmetric edge tables (guide §3.3/§6.4;
 #: VERDICT r14 #5): the persisted edge artifact is hash-clustered by
 #: ``doc_a`` into this many bucket files so every CC/LPA propagation
-#: round joins it WITHOUT re-exchanging the static side. Local default
-#: matches the harness's small-keyspace sizing (the streaming
-#: STREAM_STATE_PARTITIONS rationale); a production cluster raises it to
-#: its executor-core count via the env — it is part of the artifact
-#: fingerprint, so a change retrains instead of mis-reading.
-CC_EDGE_BUCKETS = int(os.environ.get("NM_CC_EDGE_BUCKETS", "8"))
+#: round joins it WITHOUT re-exchanging the static side. Sized for the
+#: small-keyspace harness (the streaming ``STREAM_STATE_PARTITIONS``
+#: rationale); a production cluster edits it to its executor-core
+#: count — it is part of the artifact fingerprint, so a change retrains
+#: instead of mis-reading.
+CC_EDGE_BUCKETS = 8
 
 
 def _symmetric_edges(edges: DataFrame) -> DataFrame:
@@ -806,7 +806,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     pre_symmetrized: bool = False,
-    stage_edges_bucketed: bool = False,
 ) -> DataFrame:
     """Min-label-propagation connected components: every node starts as its
     own component; each round a node adopts the smallest component id among
@@ -820,41 +819,15 @@ def connected_components(
     not grow with iterations; the per-round convergence count is the only
     driver action, the data never leaves the executors.
 
-    ``stage_edges_bucketed`` stages the symmetrized edge frame as a
-    throwaway ``doc_a``-bucketed table before the loop (guide §3.3;
-    VERDICT r14 #5): the staging shuffle is what round 1 would have paid,
-    and every later round's label⋈edge join reads the bucket-clustered
-    scan instead of re-exchanging the unchanged frame — the
-    localCheckpoint pin cannot provide that (Spark 4.1's ExistingRDD scan
-    drops outputPartitioning; measured in r14). Callers whose edge frame
-    is per-call (the merge/retract folds) use it; callers that maintain a
-    STANDING bucketed edge artifact pass ``pre_symmetrized=True`` with
-    that table instead."""
-    from ..io import scratch_bucketed_frame
-
+    A caller that maintains a STANDING bucketed edge artifact passes
+    ``pre_symmetrized=True`` with that table."""
     labels = nodes.select("doc_id", F.col("doc_id").alias("component"))
     # materialize the symmetric edge list ONCE: edges may be an expensive
     # upstream pipeline (text_dedup_components feeds the full shingle-join
     # Jaccard plan in here) and the loop would otherwise re-execute it
-    # every round — measured 2× wall at sf0.1. A caller that maintains the
-    # edge table across refreshes passes pre_symmetrized=True.
-    cleanup = None
-    if pre_symmetrized:
-        bi = edges
-    elif stage_edges_bucketed:
-        bi, cleanup = scratch_bucketed_frame(
-            _symmetric_edges(edges), "doc_a", CC_EDGE_BUCKETS
-        )
-    else:
-        bi = _symmetrized(edges)
-    try:
-        return _cc_loop(labels, bi)
-    finally:
-        # scratch files are safe to drop once the loop's outputs are
-        # materialized: every returned round frame is localCheckpoint-
-        # pinned by its convergence count
-        if cleanup is not None:
-            cleanup()
+    # every round — measured 2× wall at sf0.1.
+    bi = edges if pre_symmetrized else _symmetrized(edges)
+    return _cc_loop(labels, bi)
 
 
 def _cc_loop(labels: DataFrame, bi: DataFrame) -> DataFrame:

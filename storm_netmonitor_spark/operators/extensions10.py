@@ -319,8 +319,6 @@ def dedup_components_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved = connected_components(
         members,
         sub_pairs,
-        stage_edges_bucketed=os.environ.get("NM_CC_STAGE_BUCKETED", "0")
-        == "1",
     )
     LAST_RETRACT_STATS.extend(
         (n_affected, untouched.count(), n_sub_pairs)

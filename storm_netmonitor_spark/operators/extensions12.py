@@ -442,7 +442,7 @@ def stream_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
     from .extensions8 import _doc_split
 
     split = _doc_split(spark, sf_dir)
@@ -486,19 +486,14 @@ def stream_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         LAST_GATE_BATCH_WALLS.append(_time.perf_counter() - t0)
 
-    q = (
+    drain(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "documents")
         )
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(score_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        score_batch,
     )
-    q.awaitTermination()
 
     out = spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
         "doc_id", "n_tokens", "oov_tokens", "xent", "keep"

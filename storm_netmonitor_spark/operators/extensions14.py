@@ -498,7 +498,7 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time as _time
 
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
     from .extensions6 import (
         STREAM_ANN_QUERY_IDS,
         STREAM_ANN_TOPK,
@@ -601,19 +601,14 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             LAST_SERVE_RECALL_WALLS.append(_time.perf_counter() - t0)
 
-    q = (
+    drain(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(score_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        score_batch,
     )
-    q.awaitTermination()
 
     # driver-side fold of the driver-landed Q-bounded hit censuses (the
     # land_bounded_frame mirror, io.read_landed_local — r14); the SAME

@@ -492,7 +492,7 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at scale: per batch one (type, minute)-keyed rollup
     (map-side combining, O(|batch|)); the standing state is the landed
     census, O(types × minutes), never raw events."""
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
 
     out_dir = tempfile.mkdtemp(prefix="nm_fano_fold_")
     LAST_FANO_BATCH_WALLS.clear()
@@ -536,14 +536,7 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, fold_batch)
 
     minutes = (
         _read_landed(

@@ -402,21 +402,16 @@ def _vec_delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _drain_vecs(spark: SparkSession, sf_dir: str, fn) -> None:
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
 
-    q = (
+    drain(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
-        .parquet(_vec_delta_stream_dir(spark, sf_dir))
-        .writeStream.foreachBatch(fn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(_vec_delta_stream_dir(spark, sf_dir)),
+        fn,
     )
-    q.awaitTermination()
 
 
 def _energy_cells_sql(where: str) -> str:

@@ -435,21 +435,16 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             LAST_SERVE_BATCH_WALLS.append(_time.perf_counter() - _t0)
 
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
 
-    q = (
+    drain(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(serve_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        serve_batch,
     )
-    q.awaitTermination()
 
     # driver-side fold of the driver-landed Q·topk-bounded servings
     # (the land_bounded_frame mirror, io.read_landed_local — r14: the

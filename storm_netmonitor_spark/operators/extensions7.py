@@ -616,7 +616,7 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
     from .extensions6 import minhash_band_rows, verify_band_candidates
     from .text import _with_shingles
 
@@ -718,21 +718,16 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         folded_bands[batch_id] = batch_bands
         LAST_MERGE_BATCH_WALLS.append(_time.perf_counter() - t0)
 
-    q = (
+    drain(
         # the staged delta files are pyarrow rewrites of the documents
         # table, so the already-loaded frame's schema IS the stream's
         # read schema (the previous spark.read.parquet(...) paid a
         # second driver-side footer read per rebuilt sample)
         spark.readStream.schema(d.schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        merge_batch,
     )
-    q.awaitTermination()
 
     out = spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
         "doc_a", "doc_b", "jaccard"

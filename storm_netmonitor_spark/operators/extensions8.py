@@ -258,8 +258,6 @@ def dedup_components_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(
         d.select("doc_id"),
         tagged.select("doc_a", "doc_b"),
-        stage_edges_bucketed=os.environ.get("NM_CC_STAGE_BUCKETED", "0")
-        == "1",
     )
 
 
@@ -304,7 +302,7 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..streaming.core import ckpt_dir
+    from ..streaming.core import drain
 
     split = _embed_split(spark, sf_dir)
     cents = base_trained_cents(spark, sf_dir, split)
@@ -377,19 +375,14 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             LAST_DRIFT_BATCH_WALLS.append(_time.perf_counter() - t0)
 
-    q = (
+    drain(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(census_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        census_batch,
     )
-    q.awaitTermination()
 
     # driver-side fold of the driver-landed ≤K-row censuses (the
     # land_bounded_frame mirror; integer sums are exact in python), then

@@ -329,7 +329,10 @@ ORACLE_UPGRADED: tuple[str, ...] = (
 #: slots ahead of the plain oldest-first re-verification sweep until a
 #: verdict from >= their touch round lands, then drop back automatically.
 TOUCHED_SINCE_VERDICT: dict[str, int] = {
-    # r14 optimization session (OPTIMIZATION_r14.md change sections)
+    # r14 optimization session (OPTIMIZATION_r14.md change sections);
+    # the operator-side streaming ops are at 16: their foreachBatch
+    # drains moved onto streaming.core.drain(), which sizes their shuffle
+    # to the state partition count (they ran at the batch width before)
     "incremental_join_view": 14,
     "vec_index_drift": 14,
     "text_profile_drift": 14,
@@ -339,23 +342,26 @@ TOUCHED_SINCE_VERDICT: dict[str, int] = {
     "sink_backfill_apply": 14,
     "sink_targeted_delete": 14,
     "sink_orphan_quarantine": 14,
-    "stream_index_drift": 14,
-    "stream_serve_recall": 14,
-    "stream_vocab_gate": 14,
-    "stream_fertility_gate": 14,
-    "stream_decontaminate_gate": 14,
-    "stream_profile_gate": 14,
-    "stream_ann_serve": 14,
+    "stream_index_drift": 16,
+    "stream_serve_recall": 16,
+    "stream_vocab_gate": 16,
+    "stream_fertility_gate": 16,
+    "stream_decontaminate_gate": 16,
+    "stream_profile_gate": 16,
+    "stream_ann_serve": 16,
     "vec_rank_metrics": 14,
-    "stream_minhash_index_merge": 14,
-    "dedup_components_merge": 14,
-    "dedup_components_retract": 14,
-    "text_dedup_components": 14,  # shares the CC kernel's lazy checkpoint
-    "graph_community_lpa": 14,
-    "stream_gate_scores": 14,
+    "stream_minhash_index_merge": 16,
+    "dedup_components_merge": 15,
+    "dedup_components_retract": 15,
+    "text_dedup_components": 15,  # shares the CC kernel's lazy checkpoint
+    "graph_community_lpa": 15,
+    "stream_gate_scores": 16,
     "text_ppl_frozen_score": 14,
-    "stream_pii_gate": 14,
-    "stream_fano_fold": 14,
+    "stream_pii_gate": 16,
+    "stream_fano_fold": 16,
+    # r15 optimization session (OPTIMIZATION_r15.md change sections)
+    "graph_pagerank_links": 15,
+    "multimodal_joined_dedup": 15,
 }
 
 

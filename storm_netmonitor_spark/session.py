@@ -13,9 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Confs that are runtime-settable and REQUIRED for correctness. They are
-#: (re-)applied to any session we are handed (the driver owns its own
-#: SparkSession, so build-time config is not enough).
+#: Confs that are runtime-settable and REQUIRED for correctness, plus the
+#: session-wide streaming drain tuning. They are (re-)applied to any
+#: session we are handed (the driver owns its own SparkSession, so
+#: build-time config is not enough).
 RUNTIME_CONFS: dict[str, str] = {
     # testdata timestamps are naive/UTC-intended (FIXTURES.md); DuckDB's
     # TIMESTAMP is naive, so both engines must agree on UTC.
@@ -50,6 +51,24 @@ RUNTIME_CONFS: dict[str, str] = {
     # any fixed cluster size anyway; 32 matches the driver's local[32] and
     # AQE coalescing right-sizes below it at runtime.
     "spark.sql.shuffle.partitions": "32",
+    # Throwaway-drain tuning (every streaming query this engine starts is
+    # a streaming.core.drain() with a fresh checkpoint; production
+    # deployments with durable checkpoints keep Spark's defaults). These
+    # only affect streaming queries and hold for the whole session:
+    # retain only the latest checkpoint batch, push the store-maintenance
+    # cadence past the drain's lifetime, and write the offset/commit/state
+    # logs through the plain-FileSystem checkpoint manager instead of the
+    # default FileContext one. The FileContext layer buys atomic-rename
+    # guarantees on filesystems whose rename is not atomic (object
+    # stores); on the local/tmpfs paths these throwaway checkpoints live
+    # on, rename IS atomic and the extra ceremony is ~30% of the whole
+    # sf0.1 tumbling drain (measured 0.60→0.42 s median of 7).
+    "spark.sql.streaming.minBatchesToRetain": "1",
+    "spark.sql.streaming.stateStore.maintenanceInterval": "600s",
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 #: Streaming state store provider (SURVEY §1.1's Storm-state mapping).

@@ -26,14 +26,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..functions.stable import dround_sql, dsum_sql, ts_str_sql
 from ..operators.extensions4 import _BURN_BUCKET_S, _BURN_FAST_T, _BURN_SLOW_T
 from ..registry import query
-from .core import (
-    ckpt_dir,
-    drain_to_memory,
-    drain_to_memory_until,
-    events_stream,
-    _drain_tuned,
-    _state_sized_shuffle,
-)
+from .core import drain, drain_to_memory, drain_to_memory_until, events_stream
 from .stateful import _stage_once, _stream_staged
 
 _GAP_US = 6 * 3_600 * 10**6  # same threshold as ts_sla_gap_detect
@@ -188,15 +181,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials_dir)
         )
 
-    writer = (
-        s.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(s, merge_batch)
 
     partials = spark.read.parquet(partials_dir)
     return partials.groupBy("event_type").agg(
@@ -271,15 +256,7 @@ def sink_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.write.mode("overwrite").parquet(new_version)  # atomic swap
         versions.append(new_version)
 
-    writer = (
-        s.writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(s, apply_batch)
 
     return spark.read.parquet(versions[-1]).select(
         "user_id",
@@ -330,14 +307,7 @@ def stream_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _stage_once("rollup_parts", sf_dir, build)  # shared staging
     s = _stream_staged(spark, src, one_file_per_batch=True)
-    writer = (
-        s.writeStream.format("noop")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    q = drain(s, "noop")
     rows = [
         (int(p["batchId"]), int(p["numInputRows"]))
         for p in (q.recentProgress or [])
@@ -576,15 +546,7 @@ def stream_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
-        s.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(s, merge_batch)
 
     hourly = (
         spark.read.option("basePath", partials_dir)
@@ -702,15 +664,7 @@ def stream_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
-        s.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(s, merge_batch)
 
     merged = (
         spark.read.option("basePath", partials_dir)
@@ -814,15 +768,7 @@ def stream_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
-        s.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(s, merge_batch)
 
     merged = (
         spark.read.option("basePath", partials_dir)
@@ -900,15 +846,7 @@ def stream_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(base, "exact"))
         )
 
-    writer = (
-        s.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(s, merge_batch)
 
     sketch = (
         spark.read.parquet(os.path.join(partials_dir, "batch_id=*", "sketch"))

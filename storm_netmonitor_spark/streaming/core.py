@@ -1,11 +1,12 @@
-"""Streaming infrastructure: event-stream source + drain-to-memory runner.
+"""Streaming infrastructure: event-stream source + the one drain runner.
 
 The netmonitor reference is a continuously-running metrics pipeline; here
 every streaming query runs with ``trigger(availableNow=True)`` so it drains
 the test input deterministically and can be hash-compared against a batch
 oracle (SURVEY §2.I). In production the same code runs with a processing-
 time trigger and a real directory of arriving parquet — nothing else
-changes.
+changes. Every streaming query in the package starts here, in ``drain``
+(or ``drain_to_memory_until`` for custom Python sources).
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -95,84 +97,100 @@ _stage_cache: dict[str, str] = {}
 #: count, not the batch shuffle width. The test/bench keyspaces (hourly
 #: windows × event types, user ids) are thousands of keys, where 32
 #: partitions is pure checkpoint-file overhead (measured: 32→8 cuts the
-#: sf0.1 drain ~25%). Production deployments raise this via
-#: ``NM_STREAM_STATE_PARTITIONS`` to match their cluster.
-STREAM_STATE_PARTITIONS = int(os.environ.get("NM_STREAM_STATE_PARTITIONS", "8"))
+#: sf0.1 drain ~25%). A production deployment edits this to match its
+#: cluster. ``drain(..., state_partitions=n)`` overrides it for a single
+#: drain: JVM-native windowed aggregations with few thousand keys want
+#: FEWER state partitions (each one costs store-commit files per batch),
+#: while Python-stateful operators (``applyInPandasWithState``) want MORE
+#: — their Arrow worker parallelism follows the state partitioning
+#: (measured both ways at sf0.1: tumbling 8→2 −15%, stateful_counter 8→2
+#: +34%).
+STREAM_STATE_PARTITIONS = 8
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 @contextmanager
-def _state_sized_shuffle(spark: SparkSession, n: int | None = None):
-    """Temporarily size shuffle partitions for streaming state; the value
-    is captured into the query's checkpoint at start, so restoring the
-    batch setting afterwards does not affect the running drain.
+def _started(
+    df: DataFrame,
+    sink,
+    mode: str,
+    trigger: dict,
+    query_name: str | None = None,
+    path: str | None = None,
+    checkpoint: str | None = None,
+    state_partitions: int | None = None,
+):
+    """Build the writer, start the query and yield it under the per-drain
+    confs, which are restored to the session's previous values when the
+    ``with`` block exits, also when the query raises.
 
-    ``n`` overrides the default for a single drain: JVM-native windowed
-    aggregations with few thousand keys want FEWER state partitions (each
-    one costs store-commit files per batch), while Python-stateful
-    operators (``applyInPandasWithState``) want MORE — their Arrow worker
-    parallelism follows the state partitioning (measured both ways at
-    sf0.1: tumbling 8→2 −15%, stateful_counter 8→2 +34%)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(n or STREAM_STATE_PARTITIONS)
+    The shuffle width is captured into the query's checkpoint at start,
+    so restoring the batch setting afterwards does not affect the drain.
+    Complete mode re-emits the full state every batch, so a trailing
+    no-data micro-batch (whose only purpose is watermark-driven FINAL
+    emission in append mode) buys nothing there; append-mode drains keep
+    it: their last rows emit in that batch. The session-wide drain confs
+    (``session.RUNTIME_CONFS``) ride ``apply_runtime_confs`` instead."""
+    writer = df.writeStream.outputMode(mode).option(
+        "checkpointLocation", checkpoint or ckpt_dir()
     )
+    writer = (
+        writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if path is not None:
+        writer = writer.option("path", path)
+    spark = df.sparkSession
+    apply_runtime_confs(spark)
+    scoped = {
+        _SHUFFLE_PARTITIONS: str(state_partitions or STREAM_STATE_PARTITIONS)
+    }
+    if mode == "complete":
+        scoped[_NO_DATA_BATCHES] = "false"
+    prev = {k: spark.conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
-        yield
+        yield writer.trigger(**trigger).start()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-#: Throwaway-drain tuning, set around every ``drain_to_memory`` and
-#: restored after (production deployments with durable checkpoints keep
-#: Spark's defaults): retain only the latest checkpoint batch, push the
-#: store-maintenance cadence past the drain's lifetime, and write the
-#: offset/commit/state logs through the plain-FileSystem checkpoint
-#: manager instead of the default FileContext one. The FileContext layer
-#: buys atomic-rename guarantees on filesystems whose rename is not atomic
-#: (object stores); on the local/tmpfs paths these throwaway checkpoints
-#: live on, rename IS atomic and the extra ceremony is ~30% of the whole
-#: sf0.1 tumbling drain (measured 0.60→0.42 s median of 7).
-_DRAIN_CONFS = {
-    "spark.sql.streaming.minBatchesToRetain": "1",
-    "spark.sql.streaming.stateStore.maintenanceInterval": "600s",
-    "spark.sql.streaming.checkpointFileManagerClass": (
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager"
-    ),
-}
-
-
-#: Sessions whose static drain confs are already applied (id()-keyed; the
-#: sticky confs only affect streaming queries, every one of which in this
-#: process is a drain, so set-once beats ~8 py4j conf round-trips per drain
-#: — measured ~60 ms of the sub-second drain wall).
-_drain_conf_applied: set[int] = set()
-
-#: Session default of noDataMicroBatches (Spark ships "true"); cached so
-#: the per-mode toggle below never has to read it back.
-_NODATA_DEFAULT = "true"
-
-
-@contextmanager
-def _drain_tuned(spark: SparkSession, mode: str):
-    if id(spark) not in _drain_conf_applied:
-        for k, v in _DRAIN_CONFS.items():
+        for k, v in prev.items():
             spark.conf.set(k, v)
-        _drain_conf_applied.add(id(spark))
-    toggled = mode == "complete"
-    if toggled:
-        # complete mode re-emits the full state every batch — a trailing
-        # no-data micro-batch (whose only purpose is watermark-driven
-        # FINAL emission in append mode) buys nothing here. Append-mode
-        # drains keep it: their last rows emit in that batch.
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        if toggled:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", _NODATA_DEFAULT
-            )
+
+
+def drain(
+    df: DataFrame,
+    sink,
+    mode: str = "append",
+    query_name: str | None = None,
+    path: str | None = None,
+    checkpoint: str | None = None,
+    state_partitions: int | None = None,
+) -> StreamingQuery:
+    """THE streaming query lifecycle: run ``df`` to completion with
+    ``trigger(availableNow=True)`` and return the terminated query (its
+    ``recentProgress`` stays readable).
+
+    ``sink`` is a format name (``memory``/``parquet``/``noop``; the memory
+    sink takes ``query_name``, file sinks take ``path``) or a
+    ``foreachBatch`` function. ``checkpoint`` defaults to a fresh
+    throwaway ``ckpt_dir()``; a caller that restarts a query passes the
+    same location to every lifecycle. ``state_partitions`` overrides
+    ``STREAM_STATE_PARTITIONS`` for this drain."""
+    with _started(
+        df,
+        sink,
+        mode,
+        {"availableNow": True},
+        query_name=query_name,
+        path=path,
+        checkpoint=checkpoint,
+        state_partitions=state_partitions,
+    ) as q:
+        q.awaitTermination()
+    return q
 
 
 def cached_stream_df(spark: SparkSession, key: tuple, builder) -> DataFrame:
@@ -253,27 +271,14 @@ def drain_to_memory(
     df: DataFrame,
     mode: str = "complete",
     state_partitions: int | None = None,
-    **stream_opts,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into an
     in-memory sink; return the final result as a batch DataFrame.
 
     Checkpoints go to a fresh temp dir — never into the repo."""
     name = "nm_mem_" + uuid.uuid4().hex[:10]
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    for k, v in stream_opts.items():
-        writer = writer.option(k, v)
-    spark = df.sparkSession
-    with _state_sized_shuffle(spark, state_partitions), _drain_tuned(spark, mode):
-        q = writer.start()
-        q.awaitTermination()
-    return spark.table(name)
+    drain(df, "memory", mode, query_name=name, state_partitions=state_partitions)
+    return df.sparkSession.table(name)
 
 
 def drain_to_memory_until(
@@ -292,17 +297,9 @@ def drain_to_memory_until(
     import time
 
     name = "nm_mem_" + uuid.uuid4().hex[:10]
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(processingTime="0 seconds")
-    )
-    with _state_sized_shuffle(df.sparkSession), _drain_tuned(
-        df.sparkSession, mode
-    ):
-        q = writer.start()
+    with _started(
+        df, "memory", mode, {"processingTime": "0 seconds"}, query_name=name
+    ) as q:
         try:
             deadline = time.time() + timeout_s
             while time.time() < deadline:

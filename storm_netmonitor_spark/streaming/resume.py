@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_sql
 from ..registry import query
-from .core import _drain_tuned, _state_sized_shuffle, ckpt_dir, events_stream
+from .core import ckpt_dir, drain, events_stream
 from .stateful import (
     _COUNTER_OUT,
     _COUNTER_STATE,
@@ -65,15 +65,15 @@ def _two_phase_drain(
     build_agg,
     mode: str,
     columns: tuple[str, ...],
-    make_writer,
+    sink_for,
     state_partitions: int = 2,
 ) -> None:
     """Run ``build_agg(stream_df)`` through the two-lifecycle protocol.
-    ``make_writer(agg, phase)`` configures the sink (the helper adds the
-    shared checkpoint + availableNow trigger). Raises if either phase's
-    ingested row count deviates from its staged half — the offset-log
-    audit that stops a silent full recompute from masquerading as a
-    resume."""
+    ``sink_for(phase)`` returns the phase's ``(sink, query_name)`` for
+    ``drain`` (the helper adds the shared checkpoint). Raises if either
+    phase's ingested row count deviates from its staged half — the
+    offset-log audit that stops a silent full recompute from
+    masquerading as a resume."""
     halves_dir, n_first, n_second = _staged_halves(sf_dir)
     run_dir = tempfile.mkdtemp(prefix="nm_resume_src_")
     os.symlink(
@@ -85,20 +85,19 @@ def _two_phase_drain(
     agg = build_agg(events_stream(spark, sf_dir, source_dir=run_dir,
                                   columns=columns))
 
-    def drain(phase: str) -> int:
-        with _state_sized_shuffle(spark, state_partitions), _drain_tuned(
-            spark, mode
-        ):
-            q = (
-                make_writer(agg, phase)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return sum(int(p["numInputRows"]) for p in q.recentProgress)
+    def run(phase: str) -> int:
+        sink, query_name = sink_for(phase)
+        q = drain(
+            agg,
+            sink,
+            mode,
+            query_name=query_name,
+            checkpoint=ckpt,
+            state_partitions=state_partitions,
+        )
+        return sum(int(p["numInputRows"]) for p in q.recentProgress)
 
-    got_first = drain("p1")
+    got_first = run("p1")
     if got_first != n_first:
         raise RuntimeError(
             f"phase 1 ingested {got_first} rows, staged half has {n_first}"
@@ -108,7 +107,7 @@ def _two_phase_drain(
         os.path.join(halves_dir, "half1.parquet"),
         os.path.join(run_dir, "half1.parquet"),
     )
-    got_second = drain("p2")
+    got_second = run("p2")
     if got_second != n_second:
         raise RuntimeError(
             "resume integrity violated: phase 2 ingested "
@@ -145,17 +144,13 @@ def stream_resume_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     names = {}
 
-    def make_writer(agg: DataFrame, phase: str):
+    def sink_for(phase: str):
         names[phase] = f"nm_resume_{phase}_" + uuid.uuid4().hex[:8]
-        return (
-            agg.writeStream.format("memory")
-            .queryName(names[phase])
-            .outputMode("complete")
-        )
+        return "memory", names[phase]
 
     _two_phase_drain(
         spark, sf_dir, build, mode="complete",
-        columns=("event_type", "value"), make_writer=make_writer,
+        columns=("event_type", "value"), sink_for=sink_for,
     )
     return spark.table(names["p2"])
 
@@ -197,17 +192,17 @@ def stream_resume_python_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emissions = tempfile.mkdtemp(prefix="nm_resume_emit_")
 
-    def make_writer(agg: DataFrame, phase: str):
+    def sink_for(phase: str):
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(
                 os.path.join(emissions, f"phase={phase}", f"batch={batch_id}")
             )
 
-        return agg.writeStream.foreachBatch(sink).outputMode("update")
+        return sink, None
 
     _two_phase_drain(
         spark, sf_dir, build, mode="update",
-        columns=("user_id", "value"), make_writer=make_writer,
+        columns=("user_id", "value"), sink_for=sink_for,
     )
     both = spark.read.parquet(os.path.join(emissions, "*", "*"))
     return both.groupBy("user_id").agg(

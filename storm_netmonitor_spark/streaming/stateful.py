@@ -56,13 +56,7 @@ from ..functions.stable import dsum_sql, ts_str, ts_str_sql
 from ..io import table_path
 from ..registry import query
 from ..session import apply_runtime_confs
-from .core import (
-    EVENTS_RAW_SCHEMA,
-    ckpt_dir,
-    drain_to_memory,
-    _drain_tuned,
-    _state_sized_shuffle,
-)
+from .core import EVENTS_RAW_SCHEMA, drain, drain_to_memory
 
 HOUR_US = 3_600 * 10**6
 
@@ -522,21 +516,15 @@ def sink_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     out_dir = tempfile.mkdtemp(prefix="nm_stream_parquet_")
-    writer = (
+    drain(
         agg.select(
             ts_str(F.col("w.start")).alias("window_start"),
             "event_type",
             "n_events",
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir())
-        .outputMode("append")
-        .trigger(availableNow=True)
+        ),
+        "parquet",
+        path=out_dir,
     )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "append"):
-        q = writer.start()
-        q.awaitTermination()
     back = spark.read.schema(
         "window_start string, event_type string, n_events long"
     ).parquet(out_dir)

@@ -20,14 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_sql, sketch_ok, ts_str, ts_str_sql
 from ..registry import query
-from .core import (
-    cached_stream_df,
-    ckpt_dir,
-    drain_to_memory,
-    events_stream,
-    _drain_tuned,
-    _state_sized_shuffle,
-)
+from .core import cached_stream_df, drain, drain_to_memory, events_stream
 
 
 @query(
@@ -89,7 +82,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~0.1 s/call of py4j analysis; measured 0.54 → 0.43 s steady-state)
     agg = cached_stream_df(spark, ("stream_tumbling", sf_dir), build)
     # ~3.6k keys of JVM-native state: 2 store partitions beat the default
-    # (fewer per-batch commit files; see _state_sized_shuffle docstring)
+    # (fewer per-batch commit files; see STREAM_STATE_PARTITIONS)
     return drain_to_memory(agg, mode="complete", state_partitions=2)
 
 
@@ -245,15 +238,7 @@ def sink_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(d)
         batch_dirs.append(d)
 
-    writer = (
-        agg.writeStream.foreachBatch(push_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with _state_sized_shuffle(spark), _drain_tuned(spark, "complete"):
-        q = writer.start()
-        q.awaitTermination()
+    drain(agg, push_batch, "complete")
     # complete mode: the last batch carries the full final aggregate
     return spark.read.parquet(batch_dirs[-1]).select(
         "event_type", F.col("n_events").cast("long").alias("n_events")

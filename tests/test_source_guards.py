@@ -337,3 +337,24 @@ def test_collect_sites_are_exactly_the_audited_set():
     assert not gone, (
         f"audited collect sites no longer exist — prune the registry: {gone}"
     )
+
+
+#: Tokens of a hand-written streaming query lifecycle (writer, trigger,
+#: wait) — only ``streaming.core.drain`` / ``drain_to_memory_until`` may
+#: spell them, so every query gets the same checkpoint, state sizing and
+#: conf scoping.
+_LIFECYCLE_TOKENS = ("writeStream", ".trigger(", "awaitTermination")
+
+
+def test_streaming_lifecycle_lives_only_in_streaming_core():
+    offenders = {
+        (p.relative_to(PKG).as_posix(), tok)
+        for p in sorted(PKG.rglob("*.py"))
+        if p.relative_to(PKG).as_posix() != "streaming/core.py"
+        for tok in _LIFECYCLE_TOKENS
+        if tok in p.read_text()
+    }
+    assert not offenders, (
+        "streaming query started outside streaming/core.py — route it "
+        f"through streaming.core.drain(): {sorted(offenders)}"
+    )
