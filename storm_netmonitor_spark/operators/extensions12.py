@@ -435,14 +435,12 @@ def stream_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-class join + a keyed aggregate — the monitor's
     steady-state cost tracks the ingest stream, never the standing
     corpus; the LM artifact loads once per scoring session."""
-    import shutil
     import tempfile
-    import time as _time
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..streaming.core import drain
+    from ..streaming.core import drain_partials
     from .extensions8 import _doc_split
 
     split = _doc_split(spark, sf_dir)
@@ -468,38 +466,24 @@ def stream_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir=sf_dir,
     )
 
-    out_dir = tempfile.mkdtemp(prefix="nm_gate_out_")
-    LAST_GATE_BATCH_WALLS.clear()
-
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
+    def score_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # no take(1) emptiness guard (r14): the staged delta stream
         # delivers one NON-EMPTY batch per file, so the guard was a
         # full extra Spark job per micro-batch; a hypothetical empty
-        # batch would land an empty-but-typed parquet the read-back
-        # glob tolerates
-        scored = frozen_ppl_score(
-            batch_df.select("doc_id", "text"), lm, lm_total
-        )
-        scored.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        LAST_GATE_BATCH_WALLS.append(_time.perf_counter() - t0)
+        # batch would land an empty-but-typed parquet
+        return frozen_ppl_score(batch_df.select("doc_id", "text"), lm, lm_total)
 
-    drain(
+    return drain_partials(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "documents")
         )
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
         score_batch,
+        lambda landed: landed.select(
+            "doc_id", "n_tokens", "oov_tokens", "xent", "keep"
+        ),
+        "doc_id long, n_tokens long, oov_tokens long, xent double,"
+        " keep boolean",
+        walls=LAST_GATE_BATCH_WALLS,
     )
-
-    out = spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "doc_id", "n_tokens", "oov_tokens", "xent", "keep"
-    )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result

@@ -494,11 +494,9 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     that catches quality regressions that population censuses cannot
     (e.g. a drifted quantizer still balanced by cell count but routing
     queries into the wrong cells)."""
-    import shutil
     import tempfile
-    import time as _time
 
-    from ..streaming.core import drain
+    from ..streaming.core import drain_partials
     from .extensions6 import (
         STREAM_ANN_QUERY_IDS,
         STREAM_ANN_TOPK,
@@ -540,11 +538,7 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir=sf_dir,
     )
 
-    out_dir = tempfile.mkdtemp(prefix="nm_serve_rec_")
-    LAST_SERVE_RECALL_WALLS.clear()
-
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
+    def score_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         qframe = batch_df.select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         )
@@ -593,40 +587,28 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # one executor-side census job + a driver-side ≤|batch queries|-
         # row landing replaces the take(1) guard and per-batch write
-        # jobs (io.land_bounded_frame, r14); empty batches land nothing
-        from ..io import land_bounded_frame
+        # jobs (io.land_bounded_frame, r14)
+        return hits
 
-        if land_bounded_frame(
-            hits, os.path.join(out_dir, f"batch_id={batch_id}")
-        ):
-            LAST_SERVE_RECALL_WALLS.append(_time.perf_counter() - t0)
+    def fold(landed: DataFrame) -> DataFrame:
+        # the SAME Spark projection runs on the local relation
+        return landed.select(
+            F.col("qid").cast("long").alias("qid"),
+            F.col("n_hits").cast("long").alias("n_hits"),
+            dratio(F.col("n_hits") * 1000000, F.lit(STREAM_ANN_TOPK)).alias(
+                "recall_pct"
+            ),
+        )
 
-    drain(
+    return drain_partials(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
         score_batch,
+        fold,
+        "qid long, n_hits long",
+        bounded=True,
+        walls=LAST_SERVE_RECALL_WALLS,
     )
-
-    # driver-side fold of the driver-landed Q-bounded hit censuses (the
-    # land_bounded_frame mirror, io.read_landed_local — r14); the SAME
-    # Spark projection runs on the local relation
-    from ..io import read_landed_local
-
-    out = (
-        read_landed_local(spark, out_dir, "qid long, n_hits long")
-        .select(
-            F.col("qid").cast("long").alias("qid"),
-            F.col("n_hits").cast("long").alias("n_hits"),
-            dratio(
-                F.col("n_hits") * 1000000, F.lit(STREAM_ANN_TOPK)
-            ).alias("recall_pct"),
-        )
-    )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result

@@ -40,7 +40,6 @@ from ..functions.stable import dratio_sql
 from ..io import (
     disk_artifact_frame,
     disk_artifact_json,
-    land_bounded_frame,
     load_table,
     raw_table_schema,
     session_memo,
@@ -86,16 +85,12 @@ def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _drain_docs(spark: SparkSession, sf_dir: str, fn) -> None:
-    from ..streaming.core import drain
-
-    drain(
-        spark.readStream.schema(
-            raw_table_schema(spark, sf_dir, "documents")
-        )
+def _delta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged delta-doc stream, one file per micro-batch."""
+    return (
+        spark.readStream.schema(raw_table_schema(spark, sf_dir, "documents"))
         .option("maxFilesPerTrigger", "1")
-        .parquet(_delta_stream_dir(spark, sf_dir)),
-        fn,
+        .parquet(_delta_stream_dir(spark, sf_dir))
     )
 
 
@@ -241,54 +236,36 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny next to any training corpus) + a lang-keyed counter fold —
     the gate's steady-state cost tracks the ingest stream; the
     benchmark index extracts once per benchmark version."""
-    import shutil
-    import tempfile
-    import time as _time
-
+    from ..streaming.core import drain_partials
     from .corpus import BENCH_SOURCE, DECON_NGRAM
 
     bench = _bench_grams(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="nm_decon_gate_")
-    LAST_DECON_BATCH_WALLS.clear()
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        train = batch_df.filter(F.col("source") != BENCH_SOURCE)
+    def gate_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # one executor-side census job + a driver-side ≤|langs|-row
         # landing replaces the take(1) guard and per-batch write jobs
-        # (io.land_bounded_frame, r14); empty censuses land nothing
-        if land_bounded_frame(
-            decon_lang_counts(train, bench),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        ):
-            LAST_DECON_BATCH_WALLS.append(_time.perf_counter() - t0)
+        # (io.land_bounded_frame, r14)
+        train = batch_df.filter(F.col("source") != BENCH_SOURCE)
+        return decon_lang_counts(train, bench)
 
-    _drain_docs(spark, sf_dir, gate_batch)
-
-    # driver-side fold of the driver-landed ≤|langs|-row censuses (the
-    # land_bounded_frame mirror, io.read_landed_local — r14: the
-    # distributed read-back + shuffle was ~0.9 s of fixed cost per
-    # drain); the SAME Spark aggregate runs on the local relation
-    from ..io import read_landed_local
-
-    out = (
-        read_landed_local(
-            spark,
-            out_dir,
-            "lang string, n_train long, n_contaminated long, n_kept long",
-        )
-        .groupBy("lang")
-        .agg(
+    def fold(landed: DataFrame) -> DataFrame:
+        # the SAME Spark aggregate runs on the local relation (r14: the
+        # distributed read-back + shuffle was ~0.9 s of fixed cost per
+        # drain)
+        return landed.groupBy("lang").agg(
             F.sum("n_train").cast("long").alias("n_train"),
             F.sum("n_contaminated").cast("long").alias("n_contaminated"),
             F.sum("n_kept").cast("long").alias("n_kept"),
         )
-    )
-    from ..io import detach_result
 
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        gate_batch,
+        fold,
+        "lang string, n_train long, n_contaminated long, n_kept long",
+        bounded=True,
+        walls=LAST_DECON_BATCH_WALLS,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -333,37 +310,23 @@ def stream_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to the delta. Row-local end to end: per batch the gate
     costs one codegen'd pass over the batch bytes — no shuffle, no
     Python, no state."""
-    import shutil
-    import tempfile
-    import time as _time
-
+    from ..streaming.core import drain_partials
     from .corpus import pii_report
 
-    out_dir = tempfile.mkdtemp(prefix="nm_pii_gate_")
-    LAST_PII_BATCH_WALLS.clear()
-
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        # no take(1) emptiness guard (r14): the staged delta stream
-        # delivers one NON-EMPTY batch per file (maxFilesPerTrigger=1,
-        # availableNow), so the guard was a full extra Spark job per
-        # micro-batch; a hypothetical empty batch would land an
-        # empty-but-typed parquet the read-back glob tolerates
-        pii_report(batch_df).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        LAST_PII_BATCH_WALLS.append(_time.perf_counter() - t0)
-
-    _drain_docs(spark, sf_dir, gate_batch)
-
-    out = spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "doc_id", "n_emails", "n_phones", "redacted_md5", "redacted_len"
+    # no take(1) emptiness guard (r14): the staged delta stream delivers
+    # one NON-EMPTY batch per file (maxFilesPerTrigger=1, availableNow),
+    # so the guard was a full extra Spark job per micro-batch; a
+    # hypothetical empty batch would land an empty-but-typed parquet
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        lambda batch_df, batch_id: pii_report(batch_df),
+        lambda landed: landed.select(
+            "doc_id", "n_emails", "n_phones", "redacted_md5", "redacted_len"
+        ),
+        "doc_id long, n_emails long, n_phones long, redacted_md5 string,"
+        " redacted_len long",
+        walls=LAST_PII_BATCH_WALLS,
     )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -397,10 +360,8 @@ def stream_profile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_base_census`` precedent); per batch the work is a row-local
     scan plus a bounded counter fold, so the monitor's steady-state
     cost tracks the ingest stream, never the standing corpus."""
-    import shutil
-    import tempfile
-    import time as _time
-
+    from ..streaming.core import drain_partials
+    from .extensions7 import census_drift_local
     from .extensions8 import _PROFILE_CELLS, _doc_split, profile_cells
 
     split = _doc_split(spark, sf_dir)
@@ -430,76 +391,29 @@ def stream_profile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir=sf_dir,
     )
 
-    out_dir = tempfile.mkdtemp(prefix="nm_profile_gate_")
-    LAST_PROFILE_BATCH_WALLS.clear()
-
-    def census_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
+    def census_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # one executor-side census job + a driver-side ≤|cells|-row
         # landing replaces the take(1) guard and per-batch write jobs
-        # (io.land_bounded_frame, r14); empty censuses land nothing
-        if land_bounded_frame(
+        # (io.land_bounded_frame, r14)
+        return (
             profile_cells(batch_df)
             .groupBy("cid")
-            .agg(F.count("*").alias("n_delta")),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        ):
-            LAST_PROFILE_BATCH_WALLS.append(_time.perf_counter() - t0)
-
-    _drain_docs(spark, sf_dir, census_batch)
-
-    # driver-side fold of the driver-landed ≤|cells|-row censuses (the
-    # land_bounded_frame mirror; integer sums are exact in python) —
-    # the distributed read-back + shuffle + collect was fixed cost
-    # proportional to nothing (r14)
-    import pyarrow.parquet as _pq
-
-    delta: dict[int, int] = {}
-    for entry in sorted(os.listdir(out_dir)):
-        if not entry.startswith("batch_id="):
-            continue
-        d_ = os.path.join(out_dir, entry)
-        for f_ in sorted(os.listdir(d_)):
-            if f_.endswith(".parquet"):
-                t_ = _pq.read_table(os.path.join(d_, f_))
-                for r in t_.to_pylist():
-                    cid = int(r["cid"])
-                    delta[cid] = delta.get(cid, 0) + int(r["n_delta"])
-    shutil.rmtree(out_dir, ignore_errors=True)
-    # the final drift table is BOUNDED (exactly _PROFILE_CELLS rows) and
-    # both censuses are already driver-side integers, so the
-    # drift_from_census arithmetic folds in PYTHON — same dratio
-    # half-away formula (_py_dratio), same DECIMAL-class integer
-    # cross-multiplication (python ints are exact), same empty-
-    # population guard — and the result ships as a VALUES local
-    # relation. Distributing a 160-row fold cost ~0.7 s of plan/window
-    # work per monitoring refresh for zero scale benefit.
-    from ..io import tiny_local_frame
-    from .extensions7 import _DRIFT_DEN
-    from .extensions13 import _py_dratio
-
-    base = {int(c): int(n) for c, n in base_census}
-    tot_b = sum(base.values())
-    tot_d = sum(delta.values())
-    rows = []
-    for cid in range(_PROFILE_CELLS):
-        nb, nd = base.get(cid, 0), delta.get(cid, 0)
-        rows.append(
-            (
-                cid,
-                nb,
-                nd,
-                _py_dratio(nb * 1_000_000, tot_b) if tot_b > 0 else None,
-                _py_dratio(nd * 1_000_000, tot_d) if tot_d > 0 else None,
-                tot_b > 0
-                and tot_d > 0
-                and abs(nd * tot_b - nb * tot_d) * _DRIFT_DEN
-                >= tot_b * tot_d,
-            )
+            .agg(F.count("*").alias("n_delta"))
         )
-    return tiny_local_frame(
-        spark,
-        rows,
-        "cid int, n_base long, n_delta long, share_base double, "
-        "share_delta double, drifted boolean",
+
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        census_batch,
+        # the final drift table is BOUNDED (exactly _PROFILE_CELLS rows)
+        # and both censuses are driver-side integers, so the fold runs in
+        # PYTHON (drift_table_local: same dratio formula, exact integer
+        # cross-multiplication, same empty-population guard) — a
+        # distributed 160-row fold cost ~0.7 s of plan/window work per
+        # monitoring refresh for zero scale benefit
+        lambda rows: census_drift_local(
+            spark, base_census, rows, _PROFILE_CELLS
+        ),
+        None,
+        bounded=True,
+        walls=LAST_PROFILE_BATCH_WALLS,
     )

@@ -39,22 +39,14 @@ a single output bit.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import time as _time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dratio, dratio_sql
-from ..io import (
-    disk_artifact_frame,
-    disk_artifact_json,
-    land_bounded_frame,
-    read_landed_local,
-    session_memo,
-)
+from ..io import disk_artifact_frame, disk_artifact_json, session_memo
 from ..registry import query
-from .extensions15 import _delta_stream_dir, _drain_docs
+from .extensions15 import _delta_docs
 from .extensions17 import _BPE_ROUNDS, _VOCAB_K, greedy_bpe_merges
 from .extensions19 import apply_merges_token_counts, bpe_apply_rounds_sql
 
@@ -66,20 +58,6 @@ def _doc_split_point(spark: SparkSession, sf_dir: str) -> int:
     from .extensions8 import _doc_split
 
     return _doc_split(spark, sf_dir)
-
-
-def _read_landed(spark: SparkSession, out_dir: str, ddl: str) -> DataFrame:
-    """Read back the batch_id-keyed landings, tolerating an
-    all-empty stream: ``gate_batch``/``fold_batch`` early-return
-    without writing on empty micro-batches, so an empty delta leaves
-    NO ``batch_id=*`` directory and a bare ``spark.read.parquet``
-    would throw PATH_NOT_FOUND instead of producing the empty ledger
-    (ADVICE r13). ``ddl`` is the landed-counter schema."""
-    if not any(e.startswith("batch_id=") for e in os.listdir(out_dir)):
-        from ..io import tiny_local_frame
-
-        return tiny_local_frame(spark, [], ddl)
-    return spark.read.parquet(os.path.join(out_dir, "batch_id=*"))
 
 
 # ---------------------------------------------------------------------------
@@ -218,49 +196,40 @@ def stream_vocab_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counter fold (one fused map-side stage — the per-batch broadcast
     rebuild is gone, r15); steady-state cost tracks the ingest stream,
     never the standing corpus."""
+    from ..streaming.core import drain_partials
+
     vocab = _standing_vocab_tokens(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="nm_vocab_gate_")
-    LAST_VOCAB_GATE_WALLS.clear()
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        # one executor-side census job + a driver-side ≤|sources|-row
-        # landing replaces the take(1) guard and per-batch write jobs
-        # (io.land_bounded_frame, r14); empty censuses land nothing
-        if land_bounded_frame(
-            vocab_coverage_counters(batch_df, vocab),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        ):
-            LAST_VOCAB_GATE_WALLS.append(_time.perf_counter() - t0)
+    def fold(landed: DataFrame) -> DataFrame:
+        return (
+            landed.groupBy("source")
+            .agg(
+                F.sum("n_tokens").cast("long").alias("n_tokens"),
+                F.sum("n_covered_tokens")
+                .cast("long")
+                .alias("n_covered_tokens"),
+            )
+            .select(
+                "source",
+                "n_tokens",
+                "n_covered_tokens",
+                dratio(
+                    F.col("n_covered_tokens") * 1_000_000, F.col("n_tokens")
+                ).alias("coverage_pct"),
+            )
+        )
 
-    _drain_docs(spark, sf_dir, gate_batch)
-
-    out = (
-        read_landed_local(
-            spark, out_dir,
-            "source string, n_tokens long, n_covered_tokens long",
-        )
-        .groupBy("source")
-        .agg(
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_covered_tokens")
-            .cast("long")
-            .alias("n_covered_tokens"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            "n_covered_tokens",
-            dratio(
-                F.col("n_covered_tokens") * 1_000_000, F.col("n_tokens")
-            ).alias("coverage_pct"),
-        )
+    # one executor-side census job + a driver-side ≤|sources|-row landing
+    # per batch replaces the take(1) guard and per-batch write jobs
+    # (io.land_bounded_frame, r14)
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        lambda batch_df, batch_id: vocab_coverage_counters(batch_df, vocab),
+        fold,
+        "source string, n_tokens long, n_covered_tokens long",
+        bounded=True,
+        walls=LAST_VOCAB_GATE_WALLS,
     )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -389,49 +358,40 @@ def stream_fertility_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at scale: per batch one (source, word) rollup + one
     Arrow-batched row-local tokenize pass + a source-keyed counter
     fold; the merge table loads once per gating session."""
+    from ..streaming.core import drain_partials
+
     merges = _standing_merges(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="nm_fert_gate_")
-    LAST_FERTILITY_GATE_WALLS.clear()
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        # one executor-side census job + a driver-side ≤|sources|-row
-        # landing replaces the take(1) guard and per-batch write jobs
-        # (io.land_bounded_frame, r14); empty censuses land nothing
-        if land_bounded_frame(
-            fertility_counters(batch_df, merges),
-            os.path.join(out_dir, f"batch_id={batch_id}"),
-        ):
-            LAST_FERTILITY_GATE_WALLS.append(_time.perf_counter() - t0)
+    def fold(landed: DataFrame) -> DataFrame:
+        return (
+            landed.groupBy("source")
+            .agg(
+                F.sum("n_words").cast("long").alias("n_words"),
+                F.sum("n_chars").cast("long").alias("n_chars"),
+                F.sum("n_tokens").cast("long").alias("n_tokens"),
+            )
+            .select(
+                "source",
+                "n_words",
+                "n_chars",
+                "n_tokens",
+                dratio(F.col("n_tokens") * 1_000_000, F.col("n_words")).alias(
+                    "fertility"
+                ),
+            )
+        )
 
-    _drain_docs(spark, sf_dir, gate_batch)
-
-    out = (
-        read_landed_local(
-            spark, out_dir,
-            "source string, n_words long, n_chars long, n_tokens long",
-        )
-        .groupBy("source")
-        .agg(
-            F.sum("n_words").cast("long").alias("n_words"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .select(
-            "source",
-            "n_words",
-            "n_chars",
-            "n_tokens",
-            dratio(F.col("n_tokens") * 1_000_000, F.col("n_words")).alias(
-                "fertility"
-            ),
-        )
+    # one executor-side census job + a driver-side ≤|sources|-row landing
+    # per batch replaces the take(1) guard and per-batch write jobs
+    # (io.land_bounded_frame, r14)
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        lambda batch_df, batch_id: fertility_counters(batch_df, merges),
+        fold,
+        "source string, n_words long, n_chars long, n_tokens long",
+        bounded=True,
+        walls=LAST_FERTILITY_GATE_WALLS,
     )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -492,19 +452,16 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at scale: per batch one (type, minute)-keyed rollup
     (map-side combining, O(|batch|)); the standing state is the landed
     census, O(types × minutes), never raw events."""
-    from ..streaming.core import drain
+    from ..streaming.core import drain_partials
 
-    out_dir = tempfile.mkdtemp(prefix="nm_fano_fold_")
-    LAST_FANO_BATCH_WALLS.clear()
     src = _events_stream_dir_split(spark, sf_dir)
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # no take(1) emptiness guard (r14): the staged event stream
         # delivers one NON-EMPTY batch per file, so the guard was a
         # full extra Spark job per micro-batch (×{_FANO_BATCHES} here);
         # a hypothetical empty batch would land an empty-but-typed
-        # parquet the _read_landed glob tolerates
+        # parquet
         #
         # negative result, kept on purpose (r14 optimization): a
         # single-stage mapInArrow PARTIAL census (per-partition pyarrow
@@ -515,15 +472,27 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round trip costs more than the tiny census exchange it
         # removes (guide §1.1's "ideal plan loses to the gotcha", the
         # drift-census codegen-twin precedent)
-        (
-            batch_df.groupBy(
-                "event_type", F.date_trunc("minute", "ts").alias("m")
-            )
-            .agg(F.count(F.lit(1)).alias("c"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
+        return batch_df.groupBy(
+            "event_type", F.date_trunc("minute", "ts").alias("m")
+        ).agg(F.count(F.lit(1)).alias("c"))
+
+    def fold(landed: DataFrame) -> DataFrame:
+        minutes = landed.groupBy("event_type", "m").agg(F.sum("c").alias("c"))
+        moments = minutes.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("c").alias("sum_c"),
+            F.sum(F.col("c") * F.col("c")).alias("sum_sq"),
         )
-        LAST_FANO_BATCH_WALLS.append(_time.perf_counter() - t0)
+        return moments.select(
+            "event_type",
+            F.col("n").cast("long").alias("n_minutes"),
+            F.col("sum_c").cast("long").alias("n_events"),
+            dratio(
+                (F.col("n") * F.col("sum_sq") - F.col("sum_c") * F.col("sum_c"))
+                * 1_000_000,
+                F.col("n") * F.col("sum_c"),
+            ).alias("fano"),
+        )
 
     # maxFilesPerTrigger is a SOURCE option — one staged file per
     # micro-batch, so the ≥{_FANO_BATCHES}-batch fold is real; the
@@ -536,32 +505,10 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    drain(stream, fold_batch)
-
-    minutes = (
-        _read_landed(
-            spark, out_dir, "event_type string, m timestamp, c long"
-        )
-        .groupBy("event_type", "m")
-        .agg(F.sum("c").alias("c"))
+    return drain_partials(
+        stream,
+        fold_batch,
+        fold,
+        "event_type string, m timestamp, c long",
+        walls=LAST_FANO_BATCH_WALLS,
     )
-    moments = minutes.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("sum_c"),
-        F.sum(F.col("c") * F.col("c")).alias("sum_sq"),
-    )
-    out = moments.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_minutes"),
-        F.col("sum_c").cast("long").alias("n_events"),
-        dratio(
-            (F.col("n") * F.col("sum_sq") - F.col("sum_c") * F.col("sum_c"))
-            * 1_000_000,
-            F.col("n") * F.col("sum_c"),
-        ).alias("fano"),
-    )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result

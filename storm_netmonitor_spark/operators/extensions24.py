@@ -39,24 +39,15 @@ BIGINT, so arrival order cannot change a single output bit.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import time as _time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dec_scaled, dec_scaled_sql, dratio, dratio_sql
-from ..io import (
-    detach_result,
-    load_table,
-    raw_table_schema,
-    session_memo,
-    tiny_local_frame,
-)
+from ..io import load_table, raw_table_schema, session_memo, tiny_local_frame
 from .extensions8 import _doc_split
 from .extensions12 import _STREAM_GATE_BATCHES
-from .extensions15 import _delta_stream_dir, _drain_docs
-from .extensions20 import _read_landed
+from .extensions15 import _delta_docs
 from .extensions22 import (
     _RESAMPLE_BUDGET,
     _STAGE_BOUNDS,
@@ -139,47 +130,39 @@ def stream_mixture_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (S-row landing); the final fold and the S-row broadcast target
     join run on censuses. Counters are additive — arrival order
     cannot change a bit."""
+    from ..streaming.core import drain_partials
+
     target = _standing_mix_target(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="nm_mix_gate_")
-    LAST_MIX_GATE_WALLS.clear()
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        if not batch_df.take(1):
-            return
-        (
-            batch_df.groupBy("source")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
+    def fold(landed: DataFrame) -> DataFrame:
+        folded = landed.groupBy("source").agg(
+            F.sum("n_docs").cast("long").alias("n_docs_delta")
         )
-        LAST_MIX_GATE_WALLS.append(_time.perf_counter() - t0)
-
-    _drain_docs(spark, sf_dir, gate_batch)
-
-    folded = (
-        _read_landed(spark, out_dir, "source string, n_docs long")
-        .groupBy("source")
-        .agg(F.sum("n_docs").cast("long").alias("n_docs_delta"))
-    )
-    tot = folded.agg(F.sum("n_docs_delta").alias("t"))
-    dshare = dratio(F.col("n_docs_delta") * 1_000_000, F.col("t"))
-    out = (
-        folded.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(target), "source")
-        .select(
-            "source",
-            "n_docs_delta",
-            dshare.alias("delta_share_pct"),
-            "target_share_pct",
-            (dshare - F.col("target_share_pct"))
-            .cast("double")
-            .alias("drift_ppm"),
+        tot = folded.agg(F.sum("n_docs_delta").alias("t"))
+        dshare = dratio(F.col("n_docs_delta") * 1_000_000, F.col("t"))
+        return (
+            folded.crossJoin(F.broadcast(tot))
+            .join(F.broadcast(target), "source")
+            .select(
+                "source",
+                "n_docs_delta",
+                dshare.alias("delta_share_pct"),
+                "target_share_pct",
+                (dshare - F.col("target_share_pct"))
+                .cast("double")
+                .alias("drift_ppm"),
+            )
         )
+
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        lambda batch_df, batch_id: batch_df.groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs")
+        ),
+        fold,
+        "source string, n_docs long",
+        walls=LAST_MIX_GATE_WALLS,
     )
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -295,57 +278,46 @@ def stream_curriculum_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at scale: per batch one row-local token count + a 4-row
     stage fold; counters are additive integers, the final fold and
     the 4-row standing join are census-sized."""
+    from ..streaming.core import drain_partials
+
     standing = _standing_stage_shares(spark, sf_dir)
     lab = tiny_local_frame(
         spark,
         [(i + 1, l) for i, l in enumerate(_STAGE_LABELS)],
         "stage int, stage_label string",
     )
-    out_dir = tempfile.mkdtemp(prefix="nm_curr_gate_")
-    LAST_CURR_GATE_WALLS.clear()
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        if not batch_df.take(1):
-            return
-        stage_counters_over(batch_df.select("text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-        LAST_CURR_GATE_WALLS.append(_time.perf_counter() - t0)
-
-    _drain_docs(spark, sf_dir, gate_batch)
-
-    folded = (
-        _read_landed(
-            spark, out_dir, "stage int, n_docs long, n_tokens long"
-        )
-        .groupBy("stage")
-        .agg(
+    def fold(landed: DataFrame) -> DataFrame:
+        folded = landed.groupBy("stage").agg(
             F.sum("n_docs").cast("long").alias("n_docs_delta"),
             F.sum("n_tokens").cast("long").alias("n_tokens_delta"),
         )
-    )
-    tot = folded.agg(F.sum("n_tokens_delta").alias("t"))
-    dshare = dratio(F.col("n_tokens_delta") * 1_000_000, F.col("t"))
-    out = (
-        folded.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(standing), "stage")
-        .join(F.broadcast(lab), "stage")
-        .select(
-            "stage",
-            "stage_label",
-            "n_docs_delta",
-            "n_tokens_delta",
-            dshare.alias("delta_token_share_pct"),
-            "standing_token_share_pct",
-            (dshare - F.col("standing_token_share_pct"))
-            .cast("double")
-            .alias("drift_ppm"),
+        tot = folded.agg(F.sum("n_tokens_delta").alias("t"))
+        dshare = dratio(F.col("n_tokens_delta") * 1_000_000, F.col("t"))
+        return (
+            folded.crossJoin(F.broadcast(tot))
+            .join(F.broadcast(standing), "stage")
+            .join(F.broadcast(lab), "stage")
+            .select(
+                "stage",
+                "stage_label",
+                "n_docs_delta",
+                "n_tokens_delta",
+                dshare.alias("delta_token_share_pct"),
+                "standing_token_share_pct",
+                (dshare - F.col("standing_token_share_pct"))
+                .cast("double")
+                .alias("drift_ppm"),
+            )
         )
+
+    return drain_partials(
+        _delta_docs(spark, sf_dir),
+        lambda batch_df, batch_id: stage_counters_over(batch_df.select("text")),
+        fold,
+        "stage int, n_docs long, n_tokens long",
+        walls=LAST_CURR_GATE_WALLS,
     )
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -401,16 +373,12 @@ def _vec_delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _drain_vecs(spark: SparkSession, sf_dir: str, fn) -> None:
-    from ..streaming.core import drain
-
-    drain(
-        spark.readStream.schema(
-            raw_table_schema(spark, sf_dir, "embeddings")
-        )
+def _delta_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged delta-embedding stream, one file per micro-batch."""
+    return (
+        spark.readStream.schema(raw_table_schema(spark, sf_dir, "embeddings"))
         .option("maxFilesPerTrigger", "1")
-        .parquet(_vec_delta_stream_dir(spark, sf_dir)),
-        fn,
+        .parquet(_vec_delta_stream_dir(spark, sf_dir))
     )
 
 
@@ -503,41 +471,36 @@ def stream_energy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); the final fold and the dim-row standing join are
     census-sized. Scaled-decimal BIGINTs are additive, so arrival
     order cannot change a bit."""
+    from ..streaming.core import drain_partials
+
     standing = _standing_energy_shares(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="nm_energy_gate_")
-    LAST_ENERGY_GATE_WALLS.clear()
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        if not batch_df.take(1):
-            return
-        energy_counters_over(batch_df.select("embedding")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-        LAST_ENERGY_GATE_WALLS.append(_time.perf_counter() - t0)
-
-    _drain_vecs(spark, sf_dir, gate_batch)
-
-    folded = (
-        _read_landed(spark, out_dir, "pos int, e_scaled long")
-        .groupBy("pos")
-        .agg(F.sum("e_scaled").cast("long").alias("energy_micro_delta"))
-    )
-    tot = folded.agg(F.sum("energy_micro_delta").alias("t"))
-    dshare = dratio(F.col("energy_micro_delta") * 1_000_000, F.col("t"))
-    out = (
-        folded.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(standing), "pos")
-        .select(
-            F.col("pos").cast("long").alias("pos"),
-            "energy_micro_delta",
-            dshare.alias("delta_share_pct"),
-            "standing_share_pct",
-            (dshare - F.col("standing_share_pct"))
-            .cast("double")
-            .alias("drift_ppm"),
+    def fold(landed: DataFrame) -> DataFrame:
+        folded = landed.groupBy("pos").agg(
+            F.sum("e_scaled").cast("long").alias("energy_micro_delta")
         )
+        tot = folded.agg(F.sum("energy_micro_delta").alias("t"))
+        dshare = dratio(F.col("energy_micro_delta") * 1_000_000, F.col("t"))
+        return (
+            folded.crossJoin(F.broadcast(tot))
+            .join(F.broadcast(standing), "pos")
+            .select(
+                F.col("pos").cast("long").alias("pos"),
+                "energy_micro_delta",
+                dshare.alias("delta_share_pct"),
+                "standing_share_pct",
+                (dshare - F.col("standing_share_pct"))
+                .cast("double")
+                .alias("drift_ppm"),
+            )
+        )
+
+    return drain_partials(
+        _delta_vecs(spark, sf_dir),
+        lambda batch_df, batch_id: energy_counters_over(
+            batch_df.select("embedding")
+        ),
+        fold,
+        "pos int, e_scaled long",
+        walls=LAST_ENERGY_GATE_WALLS,
     )
-    result = detach_result(spark, out)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result

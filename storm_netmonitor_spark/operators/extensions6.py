@@ -408,13 +408,7 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir=sf_dir,
     )
 
-    out_dir = tempfile.mkdtemp(prefix="nm_ann_serve_out_")
-    LAST_SERVE_BATCH_WALLS.clear()
-
-    def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        _t0 = _time.perf_counter()
+    def serve_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # (plain re-reads of the tiny micro-batch file, NOT a
         # localCheckpoint: checkpoint blocks are the one non-recoverable
         # class under executor loss, and the --chaos-serve drill SIGKILLs
@@ -423,42 +417,25 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("qid"),
             F.col("embedding").alias("qvec"),
         )
-        top = serve_topk_plan(cells, corpus, cents, qframe)
-        # one executor-side serve job + a driver-side ≤Q·topk-row
-        # landing replaces the take(1) guard and per-batch write jobs
-        # (io.land_bounded_frame, r14); empty batches land nothing —
-        # the probe/join/top-k work itself stays executor-side
-        from ..io import land_bounded_frame
+        # the probe/join/top-k work stays executor-side; only the
+        # ≤Q·topk-row result lands driver-side
+        return serve_topk_plan(cells, corpus, cents, qframe)
 
-        if land_bounded_frame(
-            top, os.path.join(out_dir, f"batch_id={batch_id}")
-        ):
-            LAST_SERVE_BATCH_WALLS.append(_time.perf_counter() - _t0)
+    from ..streaming.core import drain_partials
 
-    from ..streaming.core import drain
-
-    drain(
+    # the landed columns ARE the result columns
+    return drain_partials(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
         serve_batch,
+        lambda landed: landed,
+        "qid long, vec_id long, cos_sim double",
+        bounded=True,
+        walls=LAST_SERVE_BATCH_WALLS,
     )
-
-    # driver-side fold of the driver-landed Q·topk-bounded servings
-    # (the land_bounded_frame mirror, io.read_landed_local — r14: the
-    # distributed read-back + detach collect was fixed cost for a
-    # bounded result); the landed columns ARE the result columns
-    from ..io import read_landed_local
-
-    result = read_landed_local(
-        spark, out_dir, "qid long, vec_id long, cos_sim double"
-    )
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------

@@ -561,6 +561,22 @@ def drift_table_local(
     )
 
 
+def census_drift_local(
+    spark: SparkSession,
+    base_census: list,
+    delta_rows: list[tuple],
+    n_cells: int,
+) -> DataFrame:
+    """:func:`drift_table_local` of the landed ``(cid, n)`` delta census
+    rows of a streaming monitor (summed per cell — python ints, exact)
+    against a standing ``[[cid, n], ...]`` census artifact."""
+    delta: dict[int, int] = {}
+    for cid, n in delta_rows:
+        delta[int(cid)] = delta.get(int(cid), 0) + int(n)
+    base = {int(c): int(n) for c, n in base_census}
+    return drift_table_local(spark, base, delta, n_cells)
+
+
 # ---------------------------------------------------------------------------
 # stream_minhash_index_merge — the streaming twin of the r11 batch merge
 # ---------------------------------------------------------------------------
@@ -611,12 +627,11 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch op maintains (one index, three consumers: batch merge,
     streaming merge, and any future serve path)."""
     import tempfile
-    import time as _time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..streaming.core import drain
+    from ..streaming.core import drain_partials
     from .extensions6 import minhash_band_rows, verify_band_candidates
     from .text import _with_shingles
 
@@ -677,24 +692,20 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir=sf_dir,
     )
 
-    out_dir = tempfile.mkdtemp(prefix="nm_merge_out_")
-    LAST_MERGE_BATCH_WALLS.clear()
     # the fold state: the already-materialized band frames of the folded
     # batches, keyed by batch_id. localCheckpoint pins each batch's bands
     # on the executors, so folding is a union of cached frames — the
     # previous parquet round-trip (write job + per-batch listing/scan of
     # the fold directory) was 2 extra jobs' worth of work per micro-batch
     # for state this op deletes at drain end anyway (r14 optimization,
-    # guide §2.4/§5). Retry-idempotence is unchanged: a batch folds into
-    # the dict ONLY after its pairs are out, and a batch_id re-delivery
-    # overwrites its own slot, so a retry sees the same prior state the
-    # parquet read-back gave it. (At 100 TB the fold state is the standing
-    # index's own bucketed table — this dict is the micro-batch-scale
-    # stand-in, exactly like the temp dir it replaces.)
+    # guide §2.4/§5). Retry-idempotent: a batch never sees its own slot,
+    # and a batch_id re-delivery overwrites that slot, so a retry sees the
+    # same prior state as the first attempt. (At 100 TB the fold state is
+    # the standing index's own bucketed table — this dict is the
+    # micro-batch-scale stand-in.)
     folded_bands: dict[int, DataFrame] = {}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # no take(1) emptiness guard (r14): the staged delta stream
         # delivers one NON-EMPTY batch per file, so the guard was a
         # full extra Spark job per micro-batch; a hypothetical empty
@@ -705,38 +716,26 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             if bid != batch_id:  # a retried batch must not see itself
                 index = index.unionByName(folded_bands[bid])
         index = index.unionByName(batch_bands)
+        folded_bands[batch_id] = batch_bands
         # one merge step, two execution modes: the shared kernels keep the
         # candidate dedup, threshold, and rounding identical to the
         # registered batch merge (their test-pinned equivalence depends
         # on it)
-        verified = verify_band_candidates(batch_bands, index, sh_tbl)
-        verified.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
+        return verify_band_candidates(batch_bands, index, sh_tbl)
+
+    try:
+        return drain_partials(
+            # the staged delta files are pyarrow rewrites of the documents
+            # table, so the already-loaded frame's schema IS the stream's
+            # read schema (the previous spark.read.parquet(...) paid a
+            # second driver-side footer read per rebuilt sample)
+            spark.readStream.schema(d.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src),
+            merge_batch,
+            lambda landed: landed.select("doc_a", "doc_b", "jaccard"),
+            "doc_a long, doc_b long, jaccard double",
+            walls=LAST_MERGE_BATCH_WALLS,
         )
-        # fold the batch into the index ONLY after its pairs are out —
-        # a retry re-reads the same prior index state (idempotent)
-        folded_bands[batch_id] = batch_bands
-        LAST_MERGE_BATCH_WALLS.append(_time.perf_counter() - t0)
-
-    drain(
-        # the staged delta files are pyarrow rewrites of the documents
-        # table, so the already-loaded frame's schema IS the stream's
-        # read schema (the previous spark.read.parquet(...) paid a
-        # second driver-side footer read per rebuilt sample)
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src),
-        merge_batch,
-    )
-
-    out = spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "doc_a", "doc_b", "jaccard"
-    )
-    from ..io import detach_result
-
-    result = detach_result(spark, out)
-    folded_bands.clear()  # checkpoint blocks release via the ContextCleaner
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
+    finally:
+        folded_bands.clear()  # checkpoint blocks release via the ContextCleaner

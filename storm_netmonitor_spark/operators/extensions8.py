@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..io import (
     disk_artifact_frame,
     disk_artifact_json,
-    land_bounded_frame,
     load_table,
     raw_table_schema,
     scatter,
@@ -297,12 +296,12 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing plus a K-row counter fold, so the monitor's steady-state
     cost tracks the insert stream, never the standing corpus."""
     import tempfile
-    import time as _time
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..streaming.core import drain
+    from ..streaming.core import drain_partials
+    from .extensions7 import census_drift_local
 
     split = _embed_split(spark, sf_dir)
     cents = base_trained_cents(spark, sf_dir, split)
@@ -352,68 +351,36 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir=sf_dir,
     )
 
-    out_dir = tempfile.mkdtemp(prefix="nm_drift_out_")
-    LAST_DRIFT_BATCH_WALLS.clear()
-
-    def census_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
+    def census_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # routing kernel choice (r14, measured): the Arrow kernel keeps
         # the batch wall at ~0.28 s; the codegen twin was TRIED here and
         # measured 1.48 s/batch — its K×dim literal expression tree is
         # re-analyzed/compiled per micro-batch plan, which dwarfs the
-        # Python-worker round trip it avoids at this batch size
-        counts = route_to_centroids(
-            batch_df.select("vec_id", "embedding"), cents
-        ).groupBy("cid").agg(F.count("*").alias("n_delta"))
-        # ONE executor-side census job + a driver-side ≤K-row landing
-        # (io.land_bounded_frame) replaces the take(1) guard job, the
-        # per-batch write job, and its commit ceremony (r14: measured
-        # −28% per-drain at sf0.1); empty batches land nothing, as the
-        # guard used to ensure
-        if land_bounded_frame(
-            counts, os.path.join(out_dir, f"batch_id={batch_id}")
-        ):
-            LAST_DRIFT_BATCH_WALLS.append(_time.perf_counter() - t0)
+        # Python-worker round trip it avoids at this batch size. ONE
+        # executor-side census job + a driver-side ≤K-row landing (r14:
+        # measured −28% per-drain at sf0.1 vs the executor write path)
+        return (
+            route_to_centroids(batch_df.select("vec_id", "embedding"), cents)
+            .groupBy("cid")
+            .agg(F.count("*").alias("n_delta"))
+        )
 
-    drain(
+    return drain_partials(
         spark.readStream.schema(
             raw_table_schema(spark, sf_dir, "embeddings")
         )
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
         census_batch,
+        # the drift arithmetic runs in PYTHON on the landed ≤K-row
+        # censuses (r14: the distributed read-back + range-join-window
+        # drift plan was ~1.6 s of fixed plan/collect cost per refresh
+        # for a 16-row table)
+        lambda rows: census_drift_local(spark, base_census, rows, IVF_K),
+        None,
+        bounded=True,
+        walls=LAST_DRIFT_BATCH_WALLS,
     )
-
-    # driver-side fold of the driver-landed ≤K-row censuses (the
-    # land_bounded_frame mirror; integer sums are exact in python), then
-    # the drift arithmetic in PYTHON — the stream_profile_gate precedent
-    # (r14): both censuses are bounded driver-side integers, so the
-    # distributed read-back + range-join-window drift plan was ~1.6 s of
-    # fixed plan/collect cost per refresh for a 16-row table. Same
-    # _py_dratio half-away formula, same integer cross-multiplication
-    # (python ints are exact), same empty-population guard as
-    # drift_from_census; result ships as a VALUES local relation.
-    import pyarrow.parquet as _pq
-
-    delta: dict[int, int] = {}
-    for entry in sorted(os.listdir(out_dir)):
-        if not entry.startswith("batch_id="):
-            continue
-        d_ = os.path.join(out_dir, entry)
-        for f_ in sorted(os.listdir(d_)):
-            if f_.endswith(".parquet"):
-                for r in _pq.read_table(os.path.join(d_, f_)).to_pylist():
-                    cid = int(r["cid"])
-                    delta[cid] = delta.get(cid, 0) + int(r["n_delta"])
-    from .extensions7 import drift_table_local
-
-    result = drift_table_local(
-        spark, {int(c): int(n) for c, n in base_census}, delta, IVF_K
-    )
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------

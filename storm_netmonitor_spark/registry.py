@@ -359,6 +359,14 @@ TOUCHED_SINCE_VERDICT: dict[str, int] = {
     "text_ppl_frozen_score": 14,
     "stream_pii_gate": 16,
     "stream_fano_fold": 16,
+    # the five streaming/alerts.py partials folds moved onto
+    # streaming.core.drain_partials() (batch_id-keyed overwrite
+    # landings, detached results)
+    "stream_incremental_rollup": 16,
+    "stream_burn_rate": 16,
+    "stream_expectations_gate": 16,
+    "stream_histogram_log2": 16,
+    "stream_sketch_cms": 16,
     # r15 optimization session (OPTIMIZATION_r15.md change sections)
     "graph_pagerank_links": 15,
     "multimodal_joined_dedup": 15,

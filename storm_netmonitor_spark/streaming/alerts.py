@@ -14,7 +14,6 @@ cluster network monitor exists to do.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 from typing import Iterable
 
@@ -26,8 +25,14 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..functions.stable import dround_sql, dsum_sql, ts_str_sql
 from ..operators.extensions4 import _BURN_BUCKET_S, _BURN_FAST_T, _BURN_SLOW_T
 from ..registry import query
-from .core import drain, drain_to_memory, drain_to_memory_until, events_stream
-from .stateful import _stage_once, _stream_staged
+from .core import (
+    drain,
+    drain_partials,
+    drain_to_memory,
+    drain_to_memory_until,
+    events_stream,
+)
+from .stateful import _read_events_arrow, _stage_once, _stream_staged
 
 _GAP_US = 6 * 3_600 * 10**6  # same threshold as ts_sla_gap_detect
 
@@ -40,6 +45,28 @@ _GAP_OUT = StructType(
     ]
 )
 _GAP_STATE = StructType([StructField("last_ts_us", LongType())])
+
+
+def _staged_quarters(sf_dir: str) -> str:
+    """The events table as 4 mtime-ordered parquet files of ceil(n/4)
+    rows — one micro-batch each under ``maxFilesPerTrigger=1`` — staged
+    once per sf_dir and shared by every 4-batch op in this module."""
+    import pyarrow.parquet as pq
+
+    def build(d: str) -> str:
+        t = _read_events_arrow(sf_dir)
+        step = (t.num_rows + 3) // 4
+        for i in range(4):
+            f = os.path.join(d, f"p{i}.parquet")
+            pq.write_table(t.slice(i * step, step), f)
+            os.utime(f, (1_700_000_000 + i * 1000,) * 2)
+        return d
+
+    return _stage_once("quarters", sf_dir, build)
+
+
+def _quarter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _stream_staged(spark, _staged_quarters(sf_dir), one_file_per_batch=True)
 
 
 def _fmt_us(us: int) -> str:
@@ -141,52 +168,35 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     network report every interval without recomputing history): each
     micro-batch's foreachBatch callback aggregates ONLY that batch's rows
     into algebraic partials (count + exact DECIMAL sum — order-independent,
-    SURVEY §7.4.1) and appends them executor-side as parquet; the published
-    report is the partial-merge (counts add, decimal sums add exactly).
+    SURVEY §7.4.1) and lands them executor-side keyed by batch_id (a
+    replayed batch overwrites its own partials); the published report is
+    the partial-merge (counts add, decimal sums add exactly).
     Four staged micro-batches (maxFilesPerTrigger=1) prove the merge is
     batch-split-invariant: the oracle is the plain one-shot aggregate.
     This is the streaming twin of ``agg_incremental_rollup`` — same
     algebra, arriving data instead of delta-day scans."""
-    import pyarrow.parquet as pq
 
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        n_parts = 4
-        step = (t.num_rows + n_parts - 1) // n_parts
-        for i in range(n_parts):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = _stage_once("rollup_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
-
-    partials_dir = tempfile.mkdtemp(prefix="nm_rollup_partials_")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def partials(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # per-batch partials only — never a recompute over history; the
         # decimal sum column keeps the merge exact in any order
-        (
-            batch_df.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("double").cast("decimal(28,6)")).alias(
-                    "dec_sum"
-                ),
-            )
-            .write.mode("append")
-            .parquet(partials_dir)
+        return batch_df.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("double").cast("decimal(28,6)")).alias(
+                "dec_sum"
+            ),
         )
 
-    drain(s, merge_batch)
+    def fold(landed: DataFrame) -> DataFrame:
+        return landed.groupBy("event_type").agg(
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.round(F.sum("dec_sum"), 2).cast("double").alias("total_value"),
+        )
 
-    partials = spark.read.parquet(partials_dir)
-    return partials.groupBy("event_type").agg(
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.round(F.sum("dec_sum"), 2).cast("double").alias("total_value"),
+    return drain_partials(
+        _quarter_stream(spark, sf_dir),
+        partials,
+        fold,
+        "event_type string, n_events long, dec_sum decimal(38,6)",
     )
 
 
@@ -212,26 +222,10 @@ def sink_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is batch-split-invariant: the final state equals the one-shot
     latest-per-key over all events — the same oracle as
     ``dedup_latest_per_key``. State size is O(live keys), not O(stream)."""
-    import os
-
     from pyspark.sql import Window
     from ..functions.stable import ts_str
 
-    def build(d: str) -> str:
-        import pyarrow.parquet as pq
-
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        step = (t.num_rows + 3) // 4
-        for i in range(4):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000,) * 2)
-        return d
-
-    src = _stage_once("cdc_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
+    s = _quarter_stream(spark, sf_dir)
 
     root = tempfile.mkdtemp(prefix="nm_cdc_state_")
     versions: list[str] = []
@@ -292,21 +286,7 @@ def stream_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count — any dropped or double-read batch breaks the hash.
     Progress metadata is 4 rows on the driver (observability scale, like
     observe_metrics), never data."""
-    import pyarrow.parquet as pq
-
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        step = (t.num_rows + 3) // 4
-        for i in range(4):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000,) * 2)
-        return d
-
-    src = _stage_once("rollup_parts", sf_dir, build)  # shared staging
-    s = _stream_staged(spark, src, one_file_per_batch=True)
+    s = _quarter_stream(spark, sf_dir)
     q = drain(s, "noop")
     rows = [
         (int(p["batchId"]), int(p["numInputRows"]))
@@ -437,22 +417,7 @@ def stream_alert_suppress(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (batch-split invariance, the stream_incremental_rollup
     discipline). State is ONE timestamp per key — O(hosts), bounded,
     watermark-free."""
-    import pyarrow.parquet as pq
-
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        n_parts = 4
-        step = (t.num_rows + n_parts - 1) // n_parts
-        for i in range(n_parts):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = _stage_once("suppress_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
+    s = _quarter_stream(spark, sf_dir)
     per_batch = (
         s.filter(F.col("value") > _SUP_THRESHOLD)
         .select("user_id", "ts", "event_id")
@@ -503,65 +468,36 @@ def stream_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage as the batch op on the merged O(hours) frame. Four staged
     micro-batches prove batch-split invariance; the oracle is the batch
     twin's oracle verbatim."""
-    import pyarrow.parquet as pq
-
     from ..operators.extensions4 import _BURN_BUCKET_S as BUCKET_S
     from ..operators.extensions4 import burn_windows_over
 
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        n_parts = 4
-        step = (t.num_rows + n_parts - 1) // n_parts
-        for i in range(n_parts):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = _stage_once("rollup_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
-
-    partials_dir = tempfile.mkdtemp(prefix="nm_burn_partials_")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # this batch's hourly partials only — never a recompute of history.
-        # foreachBatch is at-least-once: a replayed batch_id must land in
-        # the SAME subdirectory with overwrite, so a retry replaces its own
-        # partials instead of double-counting them (ADVICE r4).
-        (
-            batch_df.groupBy(
-                F.expr(f"unix_micros(ts) div {BUCKET_S * 1_000_000}").alias(
-                    "hour_num"
-                )
+    def partials(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        # this batch's hourly partials only — never a recompute of history
+        return batch_df.groupBy(
+            F.expr(f"unix_micros(ts) div {BUCKET_S * 1_000_000}").alias(
+                "hour_num"
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.count(F.when(F.col("event_type") == "error", 1)).alias(
-                    "n_errors"
-                ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count(F.when(F.col("event_type") == "error", 1)).alias(
+                "n_errors"
+            ),
         )
 
-    drain(s, merge_batch)
-
-    hourly = (
-        spark.read.option("basePath", partials_dir)
-        .parquet(os.path.join(partials_dir, "batch_id=*"))
-        .groupBy("hour_num")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("n_errors").cast("long").alias("n_errors"),
+    def fold(landed: DataFrame) -> DataFrame:
+        return burn_windows_over(
+            landed.groupBy("hour_num").agg(
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.sum("n_errors").cast("long").alias("n_errors"),
+            )
         )
+
+    return drain_partials(
+        _quarter_stream(spark, sf_dir),
+        partials,
+        fold,
+        "hour_num long, n_events long, n_errors long",
     )
-    out = burn_windows_over(hourly)
-    # materialize before cleaning up the partials the plan reads from
-    rows = out.collect()
-    shutil.rmtree(partials_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -615,81 +551,55 @@ def stream_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-equal to the batch gate run over the full input — which is what
     the oracle checks. Retry-idempotent: a replayed batch_id overwrites
     its own partials subdirectory."""
-    import pyarrow.parquet as pq
 
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        n_parts = 4
-        step = (t.num_rows + n_parts - 1) // n_parts
-        for i in range(n_parts):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = _stage_once("rollup_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
-
-    partials_dir = tempfile.mkdtemp(prefix="nm_gate_partials_")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                (F.count(F.lit(1)) - F.count("user_id")).alias("null_user"),
-                F.count(
-                    F.when(~F.col("event_type").isin(*_SEG_TYPES), 1)
-                ).alias("bad_type"),
-                F.count(
-                    F.when(
-                        (F.col("value") <= 0.0)
-                        | (F.col("value") > _SEG_VALUE_MAX),
-                        1,
-                    )
-                ).alias("value_oor"),
-                F.count(
-                    F.when(
-                        (F.col("ts") < F.lit("2024-01-01").cast("timestamp"))
-                        | (
-                            F.col("ts")
-                            >= F.lit("2025-01-01").cast("timestamp")
-                        ),
-                        1,
-                    )
-                ).alias("ts_oor"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
+    def partials(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return batch_df.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            (F.count(F.lit(1)) - F.count("user_id")).alias("null_user"),
+            F.count(F.when(~F.col("event_type").isin(*_SEG_TYPES), 1)).alias(
+                "bad_type"
+            ),
+            F.count(
+                F.when(
+                    (F.col("value") <= 0.0) | (F.col("value") > _SEG_VALUE_MAX),
+                    1,
+                )
+            ).alias("value_oor"),
+            F.count(
+                F.when(
+                    (F.col("ts") < F.lit("2024-01-01").cast("timestamp"))
+                    | (F.col("ts") >= F.lit("2025-01-01").cast("timestamp")),
+                    1,
+                )
+            ).alias("ts_oor"),
         )
 
-    drain(s, merge_batch)
-
-    merged = (
-        spark.read.option("basePath", partials_dir)
-        .parquet(os.path.join(partials_dir, "batch_id=*"))
-        .agg(
+    def fold(landed: DataFrame) -> DataFrame:
+        merged = landed.agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
             F.sum("null_user").cast("long").alias("null_user"),
             F.sum("bad_type").cast("long").alias("bad_type"),
             F.sum("value_oor").cast("long").alias("value_oor"),
             F.sum("ts_oor").cast("long").alias("ts_oor"),
         )
+        return merged.select(
+            F.expr(
+                "stack(4,"
+                " 'not_null:user_id', null_user,"
+                " 'in_set:event_type', bad_type,"
+                " 'range:value', value_oor,"
+                " 'range:ts', ts_oor)"
+            ).alias("expectation", "n_violations"),
+            F.col("n_rows").alias("n_checked"),
+        ).withColumn("passed", F.col("n_violations") == 0)
+
+    return drain_partials(
+        _quarter_stream(spark, sf_dir),
+        partials,
+        fold,
+        "n_rows long, null_user long, bad_type long, value_oor long,"
+        " ts_oor long",
     )
-    report = merged.select(
-        F.expr(
-            "stack(4,"
-            " 'not_null:user_id', null_user,"
-            " 'in_set:event_type', bad_type,"
-            " 'range:value', value_oor,"
-            " 'range:ts', ts_oor)"
-        ).alias("expectation", "n_violations"),
-        F.col("n_rows").alias("n_checked"),
-    ).withColumn("passed", F.col("n_violations") == 0)
-    rows = report.collect()
-    shutil.rmtree(partials_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, report.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -728,28 +638,10 @@ def stream_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     same exact bit-length integer trick — no libm in either engine.
     Retry-idempotent: a replayed batch_id overwrites its own partials
     subdirectory."""
-    import pyarrow.parquet as pq
 
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
-
-        t = _read_events_arrow(sf_dir)
-        n_parts = 4
-        step = (t.num_rows + n_parts - 1) // n_parts
-        for i in range(n_parts):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = _stage_once("rollup_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
-
-    partials_dir = tempfile.mkdtemp(prefix="nm_hist_partials_")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def partials(batch_df: DataFrame, batch_id: int) -> DataFrame:
         cents = F.round(F.col("value") * 100).cast("long")
-        (
+        return (
             batch_df.filter(F.col("value") > 0.0)
             .select("event_type", cents.alias("cents"))
             .withColumn(
@@ -764,25 +656,22 @@ def stream_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("cents").alias("min_cents"),
                 F.max("cents").alias("max_cents"),
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
         )
 
-    drain(s, merge_batch)
-
-    merged = (
-        spark.read.option("basePath", partials_dir)
-        .parquet(os.path.join(partials_dir, "batch_id=*"))
-        .groupBy("event_type", "bucket")
-        .agg(
+    def fold(landed: DataFrame) -> DataFrame:
+        return landed.groupBy("event_type", "bucket").agg(
             F.sum("n").cast("long").alias("n"),
             F.min("min_cents").cast("long").alias("min_cents"),
             F.max("max_cents").cast("long").alias("max_cents"),
         )
+
+    return drain_partials(
+        _quarter_stream(spark, sf_dir),
+        partials,
+        fold,
+        "event_type string, bucket long, n long, min_cents long,"
+        " max_cents long",
     )
-    rows = merged.collect()
-    shutil.rmtree(partials_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, merged.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -811,60 +700,41 @@ def stream_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     then identical to the batch op, which is what the shared oracle
     pins. Retry-idempotent: a replayed batch_id overwrites its own
     partials subdirectory."""
-    import pyarrow.parquet as pq
-
     from ..operators.extensions5 import cms_counters, cms_point_estimates
 
-    def build(d: str) -> str:
-        from .stateful import _read_events_arrow
+    def partials(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        return {
+            "sketch": cms_counters(batch_df),
+            "exact": batch_df.groupBy("event_type").agg(
+                F.count(F.lit(1)).alias("n")
+            ),
+        }
 
-        t = _read_events_arrow(sf_dir)
-        n_parts = 4
-        step = (t.num_rows + n_parts - 1) // n_parts
-        for i in range(n_parts):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = _stage_once("rollup_parts", sf_dir, build)
-    s = _stream_staged(spark, src, one_file_per_batch=True)
-
-    partials_dir = tempfile.mkdtemp(prefix="nm_cms_partials_")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        base = os.path.join(partials_dir, f"batch_id={batch_id}")
-        (
-            cms_counters(batch_df)
-            .write.mode("overwrite")
-            .parquet(os.path.join(base, "sketch"))
+    def fold(landed: dict[str, DataFrame]) -> DataFrame:
+        sketch = (
+            landed["sketch"]
+            .groupBy("row_i", "bucket")
+            .agg(F.sum("c").cast("long").alias("c"))
         )
-        (
-            batch_df.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(base, "exact"))
+        exact = (
+            landed["exact"]
+            .groupBy("event_type")
+            .agg(F.sum("n").cast("long").alias("n_exact"))
+        )
+        est = cms_point_estimates(sketch, exact.select("event_type"))
+        return exact.join(est, "event_type").select(
+            "event_type",
+            "n_exact",
+            "cms_est",
+            (F.col("cms_est") >= F.col("n_exact")).alias("lower_bound_ok"),
         )
 
-    drain(s, merge_batch)
-
-    sketch = (
-        spark.read.parquet(os.path.join(partials_dir, "batch_id=*", "sketch"))
-        .groupBy("row_i", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
+    return drain_partials(
+        _quarter_stream(spark, sf_dir),
+        partials,
+        fold,
+        {
+            "sketch": "row_i int, bucket int, c long",
+            "exact": "event_type string, n long",
+        },
     )
-    exact = (
-        spark.read.parquet(os.path.join(partials_dir, "batch_id=*", "exact"))
-        .groupBy("event_type")
-        .agg(F.sum("n").cast("long").alias("n_exact"))
-    )
-    est = cms_point_estimates(sketch, exact.select("event_type"))
-    out = exact.join(est, "event_type").select(
-        "event_type",
-        "n_exact",
-        "cms_est",
-        (F.col("cms_est") >= F.col("n_exact")).alias("lower_bound_ok"),
-    )
-    rows = out.collect()
-    shutil.rmtree(partials_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)

@@ -6,13 +6,16 @@ the test input deterministically and can be hash-compared against a batch
 oracle (SURVEY §2.I). In production the same code runs with a processing-
 time trigger and a real directory of arriving parquet — nothing else
 changes. Every streaming query in the package starts here, in ``drain``
-(or ``drain_to_memory_until`` for custom Python sources).
+(or ``drain_to_memory_until`` for custom Python sources); every op that
+folds per-micro-batch partials into one report runs ``drain_partials``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import time
 import uuid
 from contextlib import contextmanager
 
@@ -27,7 +30,14 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..io import table_path
+from ..io import (
+    detach_result,
+    land_bounded_frame,
+    landed_rows,
+    read_landed_local,
+    table_path,
+    tiny_local_frame,
+)
 from ..session import apply_runtime_confs
 
 
@@ -191,6 +201,88 @@ def drain(
     ) as q:
         q.awaitTermination()
     return q
+
+
+def drain_partials(
+    df: DataFrame,
+    per_batch,
+    fold,
+    ddl,
+    *,
+    bounded: bool = False,
+    walls: list[float] | None = None,
+) -> DataFrame:
+    """THE per-micro-batch partials fold: drain ``df``, land each batch's
+    partials keyed by its ``batch_id``, fold the landings into one report
+    and return it detached (``io.detach_result``), deleting the landings
+    also when the drain or the fold raises.
+
+    ``per_batch(batch_df, batch_id)`` returns the batch's partials frame,
+    or a ``{name: frame}`` dict to land several executor-side (read back
+    as a dict of frames, ``ddl`` then a dict of the same names). Landings
+    overwrite ``batch_id=<id>``, so a retried batch (``foreachBatch`` is
+    at-least-once) replaces its own partials instead of adding to them.
+    The frame is written executor-side; ``bounded=True`` is for partials
+    whose row count is bounded by key cardinality: they land driver-side
+    through ``io.land_bounded_frame`` (an empty one lands nothing) and
+    read back as one local relation (``io.read_landed_local``).
+
+    ``fold(landed)`` turns the landed partials (columns as landed; an
+    empty frame typed by ``ddl`` when nothing landed) into the report. A
+    bounded drain with ``ddl=None`` hands ``fold`` the landed rows as
+    python tuples instead (``io.landed_rows``), for folds that run in
+    python on the driver. ``walls``, if given, is cleared and receives
+    one wall (seconds) per batch that landed."""
+    spark = df.sparkSession
+    out_dir = tempfile.mkdtemp(prefix="nm_partials_")
+    if walls is not None:
+        walls.clear()
+    try:
+        drain(df, _landing_sink(out_dir, per_batch, bounded, walls))
+        return detach_result(
+            spark, fold(_read_landed(spark, out_dir, ddl, bounded))
+        )
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def _landing_sink(out_dir: str, per_batch, bounded: bool, walls):
+    """The ``foreachBatch`` function of ``drain_partials``."""
+
+    def land(frame: DataFrame, path: str) -> bool:
+        if bounded:
+            return land_bounded_frame(frame, path)
+        frame.write.mode("overwrite").parquet(path)
+        return True
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        t0 = time.perf_counter()
+        part = per_batch(batch_df, batch_id)
+        base = os.path.join(out_dir, f"batch_id={batch_id}")
+        if isinstance(part, dict):
+            landed = [land(f, os.path.join(base, n)) for n, f in part.items()]
+        else:
+            landed = [land(part, base)]
+        if walls is not None and any(landed):
+            walls.append(time.perf_counter() - t0)
+
+    return sink
+
+
+def _read_landed(spark: SparkSession, out_dir: str, ddl, bounded: bool):
+    """The read-back half of ``drain_partials`` (see there)."""
+    if bounded:
+        if ddl is None:
+            return landed_rows(out_dir)
+        return read_landed_local(spark, out_dir, ddl)
+    if not any(e.startswith("batch_id=") for e in os.listdir(out_dir)):
+        if isinstance(ddl, dict):
+            return {n: tiny_local_frame(spark, [], t) for n, t in ddl.items()}
+        return tiny_local_frame(spark, [], ddl)
+    glob = os.path.join(out_dir, "batch_id=*")
+    if isinstance(ddl, dict):
+        return {n: spark.read.parquet(os.path.join(glob, n)) for n in ddl}
+    return spark.read.parquet(glob)
 
 
 def cached_stream_df(spark: SparkSession, key: tuple, builder) -> DataFrame:

@@ -179,22 +179,23 @@ def test_run_to_run_determinism(spark, name):
 
 
 def test_read_landed_tolerates_an_all_empty_stream(spark):
-    """ADVICE r13 regression: gate_batch/fold_batch early-return
-    without writing on empty micro-batches, so an all-empty stream
-    leaves NO batch_id=* directory — the read-back must produce the
-    empty ledger frame (right schema, foldable), not PATH_NOT_FOUND."""
+    """The gates early-return without landing on empty micro-batches,
+    so an all-empty stream leaves NO batch_id=* directory — the
+    read-back must produce the empty ledger frame (right schema,
+    foldable), executor-side and bounded alike, not PATH_NOT_FOUND."""
     import tempfile
 
-    from storm_netmonitor_spark.operators.extensions20 import _read_landed
-
-    d = tempfile.mkdtemp(prefix="nm_empty_landing_")
-    df = _read_landed(
-        spark, d, "source string, n_tokens long, n_covered_tokens long"
-    )
-    assert df.columns == ["source", "n_tokens", "n_covered_tokens"]
-    assert df.count() == 0
-    # the downstream fold over the empty landing must also run clean
     from pyspark.sql import functions as F
 
-    folded = df.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
-    assert folded.collect() == []
+    from storm_netmonitor_spark.streaming.core import _read_landed
+
+    for bounded in (False, True):
+        d = tempfile.mkdtemp(prefix="nm_empty_landing_")
+        df = _read_landed(
+            spark, d, "source string, n_tokens long, n_covered_tokens long", bounded
+        )
+        assert df.columns == ["source", "n_tokens", "n_covered_tokens"]
+        assert df.count() == 0
+        # the downstream fold over the empty landing must also run clean
+        folded = df.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
+        assert folded.collect() == []

@@ -224,24 +224,25 @@ def test_mixture_target_trains_on_the_standing_corpus_only(spark):
 
 
 def test_read_landed_guard_covers_the_new_gates(spark):
-    """ADVICE r13 regression, applied forward: an all-empty stream
-    leaves no batch_id=* landing — the read-back must produce the
-    empty ledger with each gate's schema, and the downstream fold
-    must run clean."""
+    """An all-empty stream leaves no batch_id=* landing — the read-back
+    must produce the empty ledger with each gate's schema, executor-side
+    and bounded alike, and the downstream fold must run clean."""
     import tempfile
 
-    from storm_netmonitor_spark.operators.extensions20 import _read_landed
+    from storm_netmonitor_spark.streaming.core import _read_landed
 
     for ddl, key in (
         ("source string, n_docs long", "source"),
         ("stage int, n_docs long, n_tokens long", "stage"),
         ("pos int, e_scaled long", "pos"),
     ):
-        d = tempfile.mkdtemp(prefix="nm_empty_landing24_")
-        df = _read_landed(spark, d, ddl)
-        assert df.count() == 0
-        folded = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-        assert folded.collect() == []
+        for bounded in (False, True):
+            d = tempfile.mkdtemp(prefix="nm_empty_landing24_")
+            df = _read_landed(spark, d, ddl, bounded)
+            assert df.schema == spark.createDataFrame([], ddl).schema
+            assert df.count() == 0
+            folded = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
+            assert folded.collect() == []
 
 
 def test_run_to_run_determinism(spark):

@@ -42,7 +42,6 @@ PKG = Path(__file__).resolve().parent.parent / "storm_netmonitor_spark"
 #:     stage factored out of vec_ann_ivf, r10)
 #:   vectors.vec_ann_ivf             — 1 query vector
 #:   vectors.vec_ann_lsh             — 1 query vector
-#:   streaming/alerts.*              — post-drain memory-sink reads
 _AUDITED_COLLECT_SITES = {
     "operators/corpus.py": {"semdedup_assignment": 1},
     "operators/extensions3.py": {"scan_cache_reuse": 1, "pagerank_over": 1},
@@ -201,12 +200,6 @@ _AUDITED_COLLECT_SITES = {
         "vec_ann_ivf": 1,
         "vec_ann_lsh": 1,
     },
-    "streaming/alerts.py": {
-        "stream_burn_rate": 1,
-        "stream_expectations_gate": 1,
-        "stream_histogram_log2": 1,
-        "stream_sketch_cms": 1,
-    },
 }
 
 
@@ -357,4 +350,22 @@ def test_streaming_lifecycle_lives_only_in_streaming_core():
     assert not offenders, (
         "streaming query started outside streaming/core.py — route it "
         f"through streaming.core.drain(): {sorted(offenders)}"
+    )
+
+
+def test_partials_landing_layout_lives_only_in_core_and_io():
+    """The ``batch_id=<id>`` landing layout of a per-batch partials fold
+    is spelled by ``streaming.core.drain_partials`` (and the driver-side
+    landing reader in ``io``) only, so every fold gets the same
+    retry-overwrite, read-back, detach and cleanup."""
+    offenders = sorted(
+        rel
+        for p in PKG.rglob("*.py")
+        if (rel := p.relative_to(PKG).as_posix())
+        not in ("streaming/core.py", "io.py")
+        and "batch_id=" in p.read_text()
+    )
+    assert not offenders, (
+        "batch_id-keyed landing outside streaming/core.py and io.py — "
+        f"fold the partials through streaming.core.drain_partials(): {offenders}"
     )
