@@ -258,9 +258,10 @@ def _load_family_baselines() -> dict[str, float]:
     from the committed `BASELINE_R*_FAMILIES.json` sidecars — the SAME
     records BASELINE.md's addenda quote — so re-measured baselines
     update the bench ratios without editing constants (ADVICE r12: the
-    hardcoded dict and the sidecars were two sources of truth). Rows
-    measured by tools/baseline_r11/r12/r13_families.py: same method and
-    parameters, plain renderings, local[8]. bench emits timing/baseline
+    hardcoded dict and the sidecars were two sources of truth). The
+    sidecars are frozen measurements (same method and parameters, plain
+    renderings, local[8]); the generators that took them live in git
+    history. bench emits timing/baseline
     ratios for these rows in the detail record so the 2× criterion is
     evaluable per round; sub-100 ms rows are read structurally
     (BASELINE.md noise-floor note)."""

@@ -55,11 +55,4 @@ _MODULES = (
 def load() -> None:
     """Import every operator module so @query registrations run."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(f"{__name__}.{mod}")
-        except ModuleNotFoundError as exc:
-            # Module not built yet (incremental rounds) — skip only if it is
-            # the module itself that's missing, not one of its imports.
-            if exc.name and exc.name.endswith(mod):
-                continue
-            raise
+        importlib.import_module(f"{__name__}.{mod}")

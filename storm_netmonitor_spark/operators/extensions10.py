@@ -2,11 +2,11 @@
 
 Staged first (plain callables + oracle builders, the §2.W–§2.Z staging
 discipline applied forward), these three passed BOTH halves of the
-registration gate before the registering commit — vanilla-session
-DuckDB hash parity in ``tests/test_extensions10_staged.py`` (12/12,
-including the partition-minimality, retraction-equivalence, and
-spliced-Lloyd identity tests) and ``tools/preflight_local_cluster
---staged`` under real executor JVMs — so the continued round-11
+registration gate before the registering commit — vanilla-session DuckDB
+hash parity in ``tests/test_extensions10_staged.py`` (12/12, including
+the partition-minimality, retraction-equivalence, and spliced-Lloyd
+identity tests) and ``tools/preflight_local_cluster`` (its since-deleted
+staged mode) under real executor JVMs — so the continued round-11
 session registers them with the standard ``@query`` decorator.
 
 Capability anchor: SURVEY §2.AA — the RETRACTION & REPAIR triple,

@@ -6,9 +6,9 @@ halves of the registration gate before the registering commit —
 vanilla-session DuckDB hash parity in
 ``tests/test_extensions11_staged.py`` (work-list completeness, bin
 capacity/contiguity, planted-orphan, and key-pruned-scan property tests
-included) and ``tools/preflight_local_cluster --staged`` under real
-executor JVMs (6/6 at round-12 open) — so round 12's opening move
-registers them with the standard ``@query`` decorator.
+included) and ``tools/preflight_local_cluster`` (its since-deleted
+staged mode) under real executor JVMs (6/6 at round-12 open) — so round
+12's opening move registers them with the standard ``@query`` decorator.
 
 Capability anchor: SURVEY §2.AB — the ORCHESTRATION PLANNING &
 INTEGRITY triple: the work-list computations a pipeline SCHEDULER runs

@@ -6,9 +6,9 @@ halves of the registration gate before the registering commit —
 vanilla-session DuckDB hash parity in
 ``tests/test_extensions12_staged.py`` (planted-OOV, gate-census
 conservation, streaming-fold, and plan-guard property tests included)
-and ``tools/preflight_local_cluster --staged`` under real executor JVMs
-(6/6 at round-12 open) — so they register with the standard ``@query``
-decorator right after the §2.AB batch.
+and ``tools/preflight_local_cluster`` (its since-deleted staged mode)
+under real executor JVMs (6/6 at round-12 open) — so they register with
+the standard ``@query`` decorator right after the §2.AB batch.
 
 Capability anchor: SURVEY §2.AC — the FROZEN-MODEL SCORING lifecycle.
 The registered quality gates score the corpus against a model trained

@@ -3,10 +3,10 @@
 Staged at round-12 close (plain callables + oracle builders, the
 standing pre-registration discipline: staged-suite parity + property
 tests + the two gate halves — vanilla-session oracle parity and
-`tools/preflight_local_cluster.py --staged` under real executor
-JVMs, run twice at round-13 open for run-to-run determinism) — so
-they register with the standard ``@query`` decorator at round-13
-open.
+`tools/preflight_local_cluster.py` (its since-deleted staged mode) under
+real executor JVMs, run twice at round-13 open for run-to-run
+determinism) — so they register with the standard ``@query`` decorator
+at round-13 open.
 
 Capability anchor: SURVEY §2.AD — the ORCHESTRATION APPLY triple.
 Round 12 registered the PLANS (backfill work-list, compaction packing,

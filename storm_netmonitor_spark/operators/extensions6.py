@@ -3,9 +3,10 @@
 Staged unregistered through round 10 (plain callables + oracle builders,
 registry frozen at 282), these three passed BOTH halves of the
 registration gate all round — vanilla-session DuckDB hash parity in
-``tests/test_extensions6_staged.py`` and ``tools/preflight_local_cluster
---staged`` under real executor JVMs — so round 11 registers them with
-the standard ``@query`` decorator (registry 282 → 285).
+``tests/test_extensions6_staged.py`` and
+``tools/preflight_local_cluster`` (its since-deleted staged mode) under
+real executor JVMs — so round 11 registers them with the standard
+``@query`` decorator (registry 282 → 285).
 
 Capability anchor: SURVEY §2.W (the three ops compose EXISTING audited
 kernels — the IVF router, the banded/shingled pair CTEs, the SemDeDup

@@ -1,12 +1,12 @@
 """Round-11 operators, second batch — §2.X, REGISTERED (registry 285 → 288).
 
-Staged first (plain callables + oracle builders, the r10→r11 discipline),
-these three passed BOTH halves of the registration gate before the
-registering commit — vanilla-session DuckDB hash parity in
+Staged first (plain callables + oracle builders, the r10→r11
+discipline), these three passed BOTH halves of the registration gate
+before the registering commit — vanilla-session DuckDB hash parity in
 ``tests/test_extensions7_staged.py`` (9/9, including property tests) and
-``tools/preflight_local_cluster --staged`` under real executor JVMs —
-so the continued round-11 session registers them with the standard
-``@query`` decorator.
+``tools/preflight_local_cluster`` (its since-deleted staged mode) under
+real executor JVMs — so the continued round-11 session registers them
+with the standard ``@query`` decorator.
 
 Capability anchor: SURVEY §2.X — the INDEX LIFECYCLE triple. Round 11
 completed serve (``stream_ann_serve``) and one-shot merge

@@ -5,9 +5,9 @@ discipline applied forward), these three passed BOTH halves of the
 registration gate before the registering commit — vanilla-session DuckDB
 hash parity in ``tests/test_extensions8_staged.py`` (10/10, including
 the incrementality and exact-boundary property tests) and
-``tools/preflight_local_cluster --staged`` under real executor JVMs —
-so the continued round-11 session registers them with the standard
-``@query`` decorator.
+``tools/preflight_local_cluster`` (its since-deleted staged mode) under
+real executor JVMs — so the continued round-11 session registers them
+with the standard ``@query`` decorator.
 
 Capability anchor: SURVEY §2.Y — the MONITORING / INCREMENTAL
 MAINTENANCE triple. Rounds 10–11 shipped the index lifecycle (serve,

@@ -4,10 +4,10 @@ Staged first (plain callables + oracle builders, the §2.W/§2.X/§2.Y
 staging discipline applied forward), these three passed BOTH halves of
 the registration gate before the registering commit — vanilla-session
 DuckDB hash parity in ``tests/test_extensions9_staged.py`` (12/12,
-including the S-curve-vs-theory, confusion-identity, and margin
-property tests) and ``tools/preflight_local_cluster --staged`` under
-real executor JVMs — so the continued round-11 session registers them
-with the standard ``@query`` decorator.
+including the S-curve-vs-theory, confusion-identity, and margin property
+tests) and ``tools/preflight_local_cluster`` (its since-deleted staged
+mode) under real executor JVMs — so the continued round-11 session
+registers them with the standard ``@query`` decorator.
 
 Capability anchor: SURVEY §2.Z — the APPROXIMATION-QUALITY EVALUATION
 triple. Rounds 10–11 shipped the index/dedup lifecycle (build, serve,

@@ -9,9 +9,4 @@ _MODULES = ("windows", "stateful", "alerts", "resume")
 
 def load() -> None:
     for mod in _MODULES:
-        try:
-            importlib.import_module(f"{__name__}.{mod}")
-        except ModuleNotFoundError as exc:
-            if exc.name and exc.name.endswith(mod):
-                continue
-            raise
+        importlib.import_module(f"{__name__}.{mod}")

@@ -164,9 +164,9 @@ def test_drain_partials_deletes_its_landings_when_the_fold_raises(
     assert not os.path.exists(landing_dir())
 
 
-#: (landed ddl, fold key) of the streaming gates whose read-back must
-#: survive an all-empty stream: stream_vocab_gate and the three
-#: extensions24 gates.
+#: (landed ddl, fold key) shapes whose read-back must survive an
+#: all-empty stream: stream_vocab_gate's landing plus three more
+#: partials shapes (a string key, an int key, a two-measure int key).
 _GATE_LANDINGS = (
     ("source string, n_tokens long, n_covered_tokens long", "source"),
     ("source string, n_docs long", "source"),

@@ -69,18 +69,6 @@ _AUDITED_COLLECT_SITES = {
         # the drift tail computes driver-side (drift_table_local)
         "vec_index_drift": 1,
     },
-    # §2.AO staged batch (round 15): _vec_split is ONE scalar max over
-    # vec_id — the embeddings twin of _doc_split (split-point class)
-    "operators/extensions24.py": {
-        "_vec_split": 1,
-    },
-    # §2.AP staged batch (round 15): the k-core peel fetches ONE
-    # 3-integer census row per unrolled round (the
-    # pagerank-convergence-probe model-scalar class; rounds are a
-    # constant, never data)
-    "operators/extensions25.py": {
-        "kcore_rounds_over": 1,
-    },
     # §2.Y staged batch: _doc_split is ONE scalar max (the split-point
     # precedent); stream_index_drift collects the K-row base census
     # (model-scalar class, artifact-store trained) and the final
@@ -369,3 +357,34 @@ def test_partials_landing_layout_lives_only_in_core_and_io():
         "batch_id-keyed landing outside streaming/core.py and io.py — "
         f"fold the partials through streaming.core.drain_partials(): {offenders}"
     )
+
+
+#: Staged round-15 modules that stay unregistered until they are deleted
+#: (ROADMAP item 5). Only ever shrinks: no new module joins this set.
+_STAGED_UNLISTED = {"extensions21", "extensions22", "extensions26"}
+
+
+def test_every_operator_module_is_listed():
+    """An operator module missing from ``operators._MODULES`` is never
+    imported, so its ops never register: code that nothing serves."""
+    from storm_netmonitor_spark import operators
+
+    stems = {p.stem for p in (PKG / "operators").glob("*.py")} - {"__init__"}
+    listed = set(operators._MODULES)
+    assert not listed & _STAGED_UNLISTED
+    assert stems == listed | _STAGED_UNLISTED, (
+        f"unlisted: {sorted(stems - listed - _STAGED_UNLISTED)}, "
+        f"missing: {sorted((listed | _STAGED_UNLISTED) - stems)}"
+    )
+
+
+@pytest.mark.parametrize("pkg", ["operators", "streaming"])
+def test_load_raises_on_a_missing_listed_module(pkg, monkeypatch):
+    """A listed module that does not import fails ``load()`` loudly
+    instead of silently dropping its ops from the registry."""
+    import importlib
+
+    mod = importlib.import_module(f"storm_netmonitor_spark.{pkg}")
+    monkeypatch.setattr(mod, "_MODULES", ("no_such_module",))
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        mod.load()

@@ -469,42 +469,6 @@ def audit(sf_dir: str) -> list[tuple[str, str, float, bool]]:
                  "boundary (double-fold sims feed the cut only)",
                  srv_margin, srv_margin >= FLOOR))
 
-    # --- §2.AN geometry censuses (staged round-15): plain double-fold
-    # sims feed RANK picks (top-2 / top-k membership) and centi-wide
-    # FLOOR bands only, so the decisions must clear float accumulation
-    # noise at (a) the rank-2 boundary (margin census top-2 selection),
-    # (b) the rank-k boundary (hubness top-k membership), and (c) the
-    # band edge: the distance of (s1-s2)·SCALE from its nearest integer
-    # (a FLOOR flip needs the true value within float noise of an edge).
-    from storm_netmonitor_spark.operators.extensions23 import (
-        _HUB_K,
-        _MARGIN_SCALE,
-        _Q_MOD,
-    )
-
-    qmask = (vid % _Q_MOD) == 0
-    gdots = emb_all[~qmask] @ emb_all[qmask].T  # (N, Q)
-    gs = -np.sort(-gdots, axis=0)
-
-    def _min_nonzero(a: np.ndarray) -> float:
-        nz = a[a > 0]
-        return float(nz.min()) if nz.size else math.inf
-
-    g2 = _min_nonzero(gs[1] - gs[2])
-    rows.append(("vec_nn_margin_census",
-                 "min nonzero float gap at the rank-2 boundary "
-                 "(top-2 pick stability)", g2, g2 >= FLOOR))
-    gk = _min_nonzero(gs[_HUB_K - 1] - gs[_HUB_K])
-    rows.append(("vec_hubness_census",
-                 f"min nonzero float gap at the rank-{_HUB_K} boundary "
-                 "(top-k membership stability)", gk, gk >= FLOOR))
-    mband = (gs[0] - gs[1]) * _MARGIN_SCALE
-    band_dist = float(np.abs(mband - np.round(mband)).min())
-    rows.append(("vec_nn_margin_census",
-                 "min distance of (s1-s2)*scale from a FLOOR band edge "
-                 "(must exceed 1e-6, ~1e7x double fold noise)",
-                 band_dist, band_dist >= 1e-6))
-
     # --- §2.AQ Benford census (staged round-15): the leading digit is
     # FLOOR(x / 10^FLOOR(log10 x)) in doubles on both engines —
     # decisions flip only when (a) log10(x) sits within float noise of

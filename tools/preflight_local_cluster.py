@@ -21,9 +21,6 @@ Usage:
         # stop a stateful aggregation mid-stream, restart from the SAME
         # checkpoint (state reloads into executor-side RocksDB stores),
         # assert the final totals equal the batch aggregation
-    python tools/preflight_local_cluster.py --staged [SF_DIR]
-        # the UNREGISTERED SURVEY 2.X round-12 candidates against their
-        # oracles under real executors — the pre-registration gate
     python tools/preflight_local_cluster.py --chaos-serve [SF_DIR]
         # round-11 extension: SIGKILL one executor mid-stream_ann_serve
         # drain; the served top-k must be identical to the healthy run
@@ -76,9 +73,6 @@ if RECOVERY:
 CHAOS = "--chaos" in _args
 if CHAOS:
     _args.remove("--chaos")
-STAGED = "--staged" in _args
-if STAGED:
-    _args.remove("--staged")
 CHAOS_SERVE = "--chaos-serve" in _args
 if CHAOS_SERVE:
     _args.remove("--chaos-serve")
@@ -720,64 +714,7 @@ if CHAOS_APPLY:
     sys.exit(run_chaos_apply())
 
 qd, od = m.queries(), m.oracle_sql()
-if STAGED:
-    # The UNREGISTERED round-15 candidates (§2.AL split hygiene,
-    # §2.AM mixture & curriculum, §2.AN embedding geometry, §2.AO
-    # ingest gates): the registration gate requires each to pass under
-    # real executor JVMs BEFORE the registering commit — this mode is
-    # that gate, runnable today. (The §2.AH–§2.AK batches graduated at
-    # round-14 open and are now covered by --full / the window modes.)
-    from storm_netmonitor_spark.operators import extensions21 as e21
-    from storm_netmonitor_spark.operators import extensions22 as e22
-    from storm_netmonitor_spark.operators import extensions23 as e23
-    from storm_netmonitor_spark.operators import extensions24 as e24
-    from storm_netmonitor_spark.operators import extensions25 as e25
-    from storm_netmonitor_spark.operators import extensions26 as e26
-
-    qd = {
-        "sample_split_leakage": e21.sample_split_leakage,
-        "sample_kfold_balance": e21.sample_kfold_balance,
-        "pipeline_temporal_split_gate": e21.pipeline_temporal_split_gate,
-        "sample_temperature_resample": e22.sample_temperature_resample,
-        "pipeline_curriculum_stages": e22.pipeline_curriculum_stages,
-        "pipeline_epoch_mix_drift": e22.pipeline_epoch_mix_drift,
-        "vec_energy_concentration": e23.vec_energy_concentration,
-        "vec_nn_margin_census": e23.vec_nn_margin_census,
-        "vec_hubness_census": e23.vec_hubness_census,
-        "stream_mixture_gate": e24.stream_mixture_gate,
-        "stream_curriculum_gate": e24.stream_curriculum_gate,
-        "stream_energy_gate": e24.stream_energy_gate,
-        "graph_degree_census": e25.graph_degree_census,
-        "graph_kcore_decompose": e25.graph_kcore_decompose,
-        "quality_column_profile": e25.quality_column_profile,
-        "agg_t_closeness": e26.agg_t_closeness,
-        "sample_reservoir_hash": e26.sample_reservoir_hash,
-        "agg_benford_deviation": e26.agg_benford_deviation,
-    }
-    od = {
-        "sample_split_leakage": e21.sample_split_leakage_oracle(),
-        "sample_kfold_balance": e21.sample_kfold_balance_oracle(),
-        "pipeline_temporal_split_gate":
-            e21.pipeline_temporal_split_gate_oracle(),
-        "sample_temperature_resample":
-            e22.sample_temperature_resample_oracle(),
-        "pipeline_curriculum_stages":
-            e22.pipeline_curriculum_stages_oracle(),
-        "pipeline_epoch_mix_drift": e22.pipeline_epoch_mix_drift_oracle(),
-        "vec_energy_concentration": e23.vec_energy_concentration_oracle(),
-        "vec_nn_margin_census": e23.vec_nn_margin_census_oracle(),
-        "vec_hubness_census": e23.vec_hubness_census_oracle(),
-        "stream_mixture_gate": e24.stream_mixture_gate_oracle(),
-        "stream_curriculum_gate": e24.stream_curriculum_gate_oracle(),
-        "stream_energy_gate": e24.stream_energy_gate_oracle(),
-        "graph_degree_census": e25.graph_degree_census_oracle(),
-        "graph_kcore_decompose": e25.graph_kcore_decompose_oracle(),
-        "quality_column_profile": e25.quality_column_profile_oracle(),
-        "agg_t_closeness": e26.agg_t_closeness_oracle(),
-        "sample_reservoir_hash": e26.sample_reservoir_hash_oracle(),
-        "agg_benford_deviation": e26.agg_benford_deviation_oracle(),
-    }
-if FULL or STAGED:
+if FULL:
     RUN = list(qd)
 elif WINDOW is not None:
     RUN = list(qd)[WINDOW[0] : WINDOW[1]]

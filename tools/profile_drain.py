@@ -10,9 +10,7 @@ guessed at.
 Usage:
     python tools/profile_drain.py QUERY [QUERY ...]
 
-A QUERY is a registered op id, or ``module:function`` for a staged
-(unregistered) op under ``storm_netmonitor_spark.operators`` — e.g.
-``extensions24:stream_energy_gate``.
+A QUERY is a registered op id.
 
 Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1). Each op is
 run once to warm (JIT + artifact training) and once profiled; prints one
@@ -71,20 +69,8 @@ class _Collector(StreamingQueryListener):
 spark.streams.addListener(_Collector())
 
 
-def _resolve(name: str):
-    if ":" not in name:
-        return registry.QUERIES[name]
-    import importlib
-
-    mod, fn_name = name.split(":")
-    return getattr(
-        importlib.import_module(f"storm_netmonitor_spark.operators.{mod}"),
-        fn_name,
-    )
-
-
 for name in names:
-    fn = _resolve(name)
+    fn = registry.QUERIES[name]
     fn(spark, sf_dir).collect()  # warm: JIT, artifacts, memoized plans
     time.sleep(0.3)  # listener events are async — let the warm run flush
     EVENTS.clear()
