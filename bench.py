@@ -272,13 +272,10 @@ def _load_family_baselines() -> dict[str, float]:
         "BASELINE_R13_FAMILIES.json",
         "BASELINE_R14_FAMILIES.json",
     ):
-        path = os.path.join(_REPO, fname)
-        if not os.path.exists(path):
-            continue  # family not baselined yet — its rows get no ratio
-        # a sidecar that EXISTS but can't be parsed is a broken gate,
-        # not a missing one — fail loudly instead of silently dropping
+        # all four sidecars are committed: a missing or unparsable one
+        # is a broken checkout — fail loudly instead of silently dropping
         # that family's ratios from BENCH_DETAIL (ADVICE r13)
-        with open(path) as fh:
+        with open(os.path.join(_REPO, fname)) as fh:
             data = json.load(fh)
         for name, rec in data.get("rows", {}).items():
             ms = rec.get("median_ms")

@@ -529,7 +529,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
 
 def raw_table_schema(spark: SparkSession, sf_dir: str, name: str):
     """Session-memoized RAW parquet schema of one testdata table — the
-    read schema the streaming ops hand to ``readStream.schema(...)``
+    read schema the streaming ops hand to ``streaming.core.staged_stream``
     (their staged micro-batch files are pyarrow µs rewrites of the raw
     table, so the raw schema IS the stream's schema; only ``events``
     carries the nanos shim, and no stream reads it raw). Each drained

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.stable import dratio, dratio_sql
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -271,10 +271,6 @@ _BF_WATERMARK = "2024-01-23"
 #: Stale window: these ingested dates were HALF-written (only even
 #: event_ids landed) — the planner must flag them stale by count.
 _BF_STALE_FROM, _BF_STALE_TO = "2024-01-18", "2024-01-21"
-#: Cached staged-target dirs per (sf_dir) — the target table is the
-#: fixture, not the measurement; staging it once per session mirrors
-#: the scans.py layout-staging convention.
-_BF_TARGET_CACHE: dict[str, str] = {}
 
 
 def plan_incremental_backfill_oracle() -> str:
@@ -306,12 +302,12 @@ def _bf_target_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the modeled TARGET table once per session: source dates
     before the watermark, with the stale window half-written (even
     event_ids only) — a date-partitioned parquet dir, like any real
-    incremental target."""
+    incremental target. The target table is the fixture, not the
+    measurement."""
     import os as _os
     import tempfile as _tempfile
 
-    key = _os.path.abspath(sf_dir)
-    if key not in _BF_TARGET_CACHE:
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events").withColumn(
             "event_date", F.date_format("ts", "yyyy-MM-dd")
         )
@@ -331,8 +327,9 @@ def _bf_target_dir(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("event_date")
             .parquet(out)
         )
-        _BF_TARGET_CACHE[key] = out
-    return _BF_TARGET_CACHE[key]
+        return out
+
+    return session_memo(spark, ("bf_target",), stage, sf_dir=sf_dir)
 
 
 @query("plan_incremental_backfill", oracle=plan_incremental_backfill_oracle())

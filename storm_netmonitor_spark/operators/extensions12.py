@@ -414,6 +414,29 @@ _STREAM_GATE_BATCHES = 2
 LAST_GATE_BATCH_WALLS: list[float] = []
 
 
+def _delta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged delta-doc stream: doc_id ≥ split, doc_id-ordered,
+    ``_STREAM_GATE_BATCHES`` files, one per micro-batch — one staging
+    serves every §2.AC/§2.AF gate drain of a session."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ..streaming.core import stage_stream, staged_stream
+    from .extensions8 import _doc_split
+
+    split = _doc_split(spark, sf_dir)
+
+    def parts() -> list:
+        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+        dt = t.filter(pc.greater_equal(t.column("doc_id"), split))
+        dt = dt.sort_by("doc_id")
+        per = max(1, -(-dt.num_rows // _STREAM_GATE_BATCHES))
+        return [dt.slice(i, per) for i in range(0, dt.num_rows, per)]
+
+    src = stage_stream(spark, ("gate_stream", split), sf_dir, parts)
+    return staged_stream(spark, src, raw_table_schema(spark, sf_dir, "documents"))
+
+
 def stream_gate_scores_oracle() -> str:
     """The streaming scorer folds the SAME delta against the SAME frozen
     LM as the batch op, so the contract — and therefore the oracle — is
@@ -435,36 +458,12 @@ def stream_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-class join + a keyed aggregate — the monitor's
     steady-state cost tracks the ingest stream, never the standing
     corpus; the LM artifact loads once per scoring session."""
-    import tempfile
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     from ..streaming.core import drain_partials
     from .extensions8 import _doc_split
 
     split = _doc_split(spark, sf_dir)
     lm = _frozen_lm(spark, sf_dir, split)
     lm_total = _frozen_lm_total(spark, sf_dir, split)
-
-    def build_stream(dir_: str) -> str:
-        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-        dt = t.filter(
-            pc.greater_equal(t.column("doc_id"), split)
-        ).sort_by("doc_id")
-        per = max(1, -(-dt.num_rows // _STREAM_GATE_BATCHES))
-        for i in range(0, dt.num_rows, per):
-            f = os.path.join(dir_, f"d{i // per}.parquet")
-            pq.write_table(dt.slice(i, per), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return dir_
-
-    src = session_memo(
-        spark,
-        ("gate_stream", os.path.abspath(sf_dir), split),
-        lambda: build_stream(tempfile.mkdtemp(prefix="nm_gate_d_")),
-        sf_dir=sf_dir,
-    )
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # no take(1) emptiness guard (r14): the staged delta stream
@@ -474,11 +473,7 @@ def stream_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         return frozen_ppl_score(batch_df.select("doc_id", "text"), lm, lm_total)
 
     return drain_partials(
-        spark.readStream.schema(
-            raw_table_schema(spark, sf_dir, "documents")
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src),
+        _delta_docs(spark, sf_dir),
         score_batch,
         lambda landed: landed.select(
             "doc_id", "n_tokens", "oov_tokens", "xent", "keep"

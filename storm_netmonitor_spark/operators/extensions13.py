@@ -48,7 +48,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dratio_sql
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 from .extensions11 import (
     _BF_STALE_FROM,
@@ -200,19 +200,17 @@ def sink_backfill_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sink_compaction_apply — execute the packing plan, one file per bin
 # ---------------------------------------------------------------------------
 
-#: Cached staged hourly-file layouts per sf_dir — the fragmented INPUT
-#: table is the fixture (one parquet file per date × hour, the
-#: streaming-sink shape the plan models), staged once per session.
-_HOURLY_LAYOUT_CACHE: dict[str, str] = {}
-
 #: (bins written, max files per bin dir) of the most recent apply —
 #: the one-file-per-bin identity, asserted by the staged tests.
 LAST_COMPACTION_IO: list[int] = []
 
 
 def _hourly_layout_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = os.path.abspath(sf_dir)
-    if key not in _HOURLY_LAYOUT_CACHE:
+    """The fragmented INPUT table is the fixture (one parquet file per
+    date × hour, the streaming-sink shape the plan models), staged once
+    per session and input."""
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events").select(
             F.date_format("ts", "yyyy-MM-dd").alias("event_date"),
             F.hour("ts").alias("hr"),
@@ -230,8 +228,9 @@ def _hourly_layout_dir(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("event_date", "hr")
             .parquet(out)
         )
-        _HOURLY_LAYOUT_CACHE[key] = out
-    return _HOURLY_LAYOUT_CACHE[key]
+        return out
+
+    return session_memo(spark, ("hourly_layout",), stage, sf_dir=sf_dir)
 
 
 def sink_compaction_apply_oracle() -> str:

@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.stable import dratio, dratio_sql
-from ..io import load_table, raw_table_schema, session_memo
+from ..io import load_table, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -494,49 +494,17 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     that catches quality regressions that population censuses cannot
     (e.g. a drifted quantizer still balanced by cell count but routing
     queries into the wrong cells)."""
-    import tempfile
-
     from ..streaming.core import drain_partials
     from .extensions6 import (
-        STREAM_ANN_QUERY_IDS,
         STREAM_ANN_TOPK,
         _ivf_cells,
+        ann_query_stream,
         serve_topk_plan,
     )
     from .vectors import ivf_index
 
     corpus, cents = ivf_index(spark, sf_dir)
     cells = _ivf_cells(spark, sf_dir)
-
-    # the SAME staged query stream the serve op drains (one stream
-    # fixture per session — shared session_memo key)
-    import pyarrow.compute as pc  # noqa: F401
-    import pyarrow.parquet as pq
-
-    def build_stream(d: str) -> str:
-        t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
-        import pyarrow as pa
-
-        qt = t.filter(
-            pc.is_in(
-                t.column("vec_id"),
-                value_set=pa.array(list(STREAM_ANN_QUERY_IDS)),
-            )
-        ).sort_by("vec_id")
-        from .extensions6 import _ANN_BATCH
-
-        for i in range(0, qt.num_rows, _ANN_BATCH):
-            f = os.path.join(d, f"q{i // _ANN_BATCH}.parquet")
-            pq.write_table(qt.slice(i, _ANN_BATCH), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = session_memo(
-        spark,
-        ("ann_serve_stream", os.path.abspath(sf_dir)),
-        lambda: build_stream(tempfile.mkdtemp(prefix="nm_ann_q_")),
-        sf_dir=sf_dir,
-    )
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         qframe = batch_df.select(
@@ -600,12 +568,9 @@ def stream_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
+    # the SAME staged query stream the serve op drains
     return drain_partials(
-        spark.readStream.schema(
-            raw_table_schema(spark, sf_dir, "embeddings")
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src),
+        ann_query_stream(spark, sf_dir),
         score_batch,
         fold,
         "qid long, n_hits long",

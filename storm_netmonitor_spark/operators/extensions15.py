@@ -41,57 +41,13 @@ from ..io import (
     disk_artifact_frame,
     disk_artifact_json,
     load_table,
-    raw_table_schema,
     session_memo,
 )
 from ..registry import query
 
-#: Micro-batches in the staged delta stream — the extensions12
-#: ``gate_stream`` fixture is REUSED (same session-memo key), so one
-#: staging serves every §2.AC/§2.AF gate drain in a session.
-from .extensions12 import _STREAM_GATE_BATCHES
-
-
-def _delta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The staged delta-doc stream (doc_id ≥ split, doc_id-ordered,
-    {_STREAM_GATE_BATCHES} files) — the extensions12 fixture, shared
-    through the same memo key."""
-    import tempfile
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from .extensions8 import _doc_split
-
-    split = _doc_split(spark, sf_dir)
-
-    def build_stream(dir_: str) -> str:
-        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-        dt = t.filter(
-            pc.greater_equal(t.column("doc_id"), split)
-        ).sort_by("doc_id")
-        per = max(1, -(-dt.num_rows // _STREAM_GATE_BATCHES))
-        for i in range(0, dt.num_rows, per):
-            f = os.path.join(dir_, f"d{i // per}.parquet")
-            pq.write_table(dt.slice(i, per), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return dir_
-
-    return session_memo(
-        spark,
-        ("gate_stream", os.path.abspath(sf_dir), split),
-        lambda: build_stream(tempfile.mkdtemp(prefix="nm_gate_d_")),
-        sf_dir=sf_dir,
-    )
-
-
-def _delta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged delta-doc stream, one file per micro-batch."""
-    return (
-        spark.readStream.schema(raw_table_schema(spark, sf_dir, "documents"))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(_delta_stream_dir(spark, sf_dir))
-    )
+#: The staged delta-doc stream of ``stream_gate_scores`` — one staging
+#: serves every §2.AC/§2.AF gate drain in a session.
+from .extensions12 import _delta_docs
 
 
 # ---------------------------------------------------------------------------
@@ -314,7 +270,7 @@ def stream_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .corpus import pii_report
 
     # no take(1) emptiness guard (r14): the staged delta stream delivers
-    # one NON-EMPTY batch per file (maxFilesPerTrigger=1, availableNow),
+    # one NON-EMPTY batch per file (one file per trigger, availableNow),
     # so the guard was a full extra Spark job per micro-batch; a
     # hypothetical empty batch would land an empty-but-typed parquet
     return drain_partials(

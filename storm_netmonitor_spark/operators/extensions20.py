@@ -39,14 +39,13 @@ a single output bit.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dratio, dratio_sql
 from ..io import disk_artifact_frame, disk_artifact_json, session_memo
 from ..registry import query
-from .extensions15 import _delta_docs
+from .extensions12 import _delta_docs
 from .extensions17 import _BPE_ROUNDS, _VOCAB_K, greedy_bpe_merges
 from .extensions19 import apply_merges_token_counts, bpe_apply_rounds_sql
 
@@ -414,31 +413,6 @@ def stream_fano_fold_oracle() -> str:
     return events_burstiness_fano_oracle()
 
 
-def _events_stream_dir_split(spark: SparkSession, sf_dir: str) -> str:
-    """The staged multi-batch event stream: the events table
-    ts-ordered, split into {_FANO_BATCHES} files (so minute windows
-    straddle batch boundaries), session-memoized."""
-    import pyarrow.parquet as pq
-
-    def build(dir_: str) -> str:
-        t = pq.read_table(
-            os.path.join(sf_dir, "events.parquet")
-        ).sort_by("ts")
-        per = max(1, -(-t.num_rows // _FANO_BATCHES))
-        for i in range(0, t.num_rows, per):
-            f = os.path.join(dir_, f"e{i // per}.parquet")
-            pq.write_table(t.slice(i, per), f)
-            os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
-        return dir_
-
-    return session_memo(
-        spark,
-        ("fano_stream", os.path.abspath(sf_dir)),
-        lambda: build(tempfile.mkdtemp(prefix="nm_fano_e_")),
-        sf_dir=sf_dir,
-    )
-
-
 @query("stream_fano_fold", oracle=stream_fano_fold_oracle())
 def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burstiness on the live event stream (SURVEY §2.AK): each
@@ -452,9 +426,18 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at scale: per batch one (type, minute)-keyed rollup
     (map-side combining, O(|batch|)); the standing state is the landed
     census, O(types × minutes), never raw events."""
-    from ..streaming.core import drain_partials
+    import pyarrow.parquet as pq
 
-    src = _events_stream_dir_split(spark, sf_dir)
+    from ..streaming.core import drain_partials, stage_stream, staged_stream
+
+    # the events table ts-ordered, split into {_FANO_BATCHES} files (so
+    # minute windows straddle batch boundaries)
+    def parts() -> list:
+        t = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by("ts")
+        per = max(1, -(-t.num_rows // _FANO_BATCHES))
+        return [t.slice(i, per) for i in range(0, t.num_rows, per)]
+
+    src = stage_stream(spark, ("fano_stream",), sf_dir, parts)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # no take(1) emptiness guard (r14): the staged event stream
@@ -494,19 +477,13 @@ def stream_fano_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("fano"),
         )
 
-    # maxFilesPerTrigger is a SOURCE option — one staged file per
-    # micro-batch, so the ≥{_FANO_BATCHES}-batch fold is real; the
-    # staged dir is µs-typed (rewritten by pyarrow), so the source
-    # schema is the stream's own read schema for these two columns
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(src).select("ts", "event_type").schema
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    # one staged file per micro-batch, so the ≥{_FANO_BATCHES}-batch
+    # fold is real; the staged dir is µs-typed (rewritten by pyarrow), so
+    # the source schema is the stream's own read schema for these two
+    # columns
+    schema = spark.read.parquet(src).select("ts", "event_type").schema
     return drain_partials(
-        stream,
+        staged_stream(spark, src, schema),
         fold_batch,
         fold,
         "event_type string, m timestamp, c long",

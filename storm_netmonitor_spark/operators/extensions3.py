@@ -623,7 +623,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sink_zorder_layout — two-dimensional data skipping
 # ---------------------------------------------------------------------------
 
-_ZORDER_CACHE: dict[str, str] = {}
 _Z_BITS = 16  # bits per dimension interleaved into the z-value
 
 
@@ -634,8 +633,7 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    key = os.path.abspath(sf_dir)
-    if key not in _ZORDER_CACHE:
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events")
         # bit-interleave via shifts: sum over i of bit_i(a)<<(2i+1) | bit_i(b)<<(2i)
         terms = []
@@ -658,8 +656,9 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(out)
         )
-        _ZORDER_CACHE[key] = out
-    return _ZORDER_CACHE[key]
+        return out
+
+    return session_memo(spark, ("zorder_dir",), stage, sf_dir=sf_dir)
 
 
 @query(
@@ -1045,8 +1044,6 @@ def scan_cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sink_compact_small_files — the small-file problem
 # ---------------------------------------------------------------------------
 
-_COMPACT_CACHE: dict[str, tuple[str, int, int]] = {}
-
 
 def _compacted_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     """Fragment events into many small files once per sf_dir, then compact
@@ -1055,8 +1052,7 @@ def _compacted_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     import os
     import tempfile
 
-    key = os.path.abspath(sf_dir)
-    if key not in _COMPACT_CACHE:
+    def stage() -> tuple[str, int, int]:
         e = load_table(spark, sf_dir, "events")
         frag = os.path.join(tempfile.mkdtemp(prefix="nm_frag_"), "events_frag")
         e.repartition(64).write.mode("overwrite").parquet(frag)  # the problem
@@ -1069,8 +1065,9 @@ def _compacted_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
         )
         n_small = len(glob.glob(os.path.join(frag, "*.parquet")))
         n_comp = len(glob.glob(os.path.join(comp, "*.parquet")))
-        _COMPACT_CACHE[key] = (comp, n_small, n_comp)
-    return _COMPACT_CACHE[key]
+        return comp, n_small, n_comp
+
+    return session_memo(spark, ("compacted_dir",), stage, sf_dir=sf_dir)
 
 
 @query(
@@ -1315,10 +1312,7 @@ LIMIT 20
     return sql
 
 
-_PR_EDGE_CACHE: dict[str, dict] = {}
-
-
-def _pagerank_edges_dir(spark: SparkSession, sf_dir: str) -> str:
+def _pagerank_edges_dir(spark: SparkSession, sf_dir: str) -> dict:
     """Materialize the symmetric edge list once per sf_dir (production
     keeps the link graph as a maintained table; the rank refresh — the
     iterative part — is what reruns periodically).
@@ -1338,43 +1332,42 @@ def _pagerank_edges_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from ..io import disk_artifact_dir
 
-    key = os.path.abspath(sf_dir)
-    if key not in _PR_EDGE_CACHE:
+    def stage(staging: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem")
+        e0 = (
+            li.select(
+                (F.col("l_partkey") * 2).alias("src"),
+                (F.col("l_suppkey") * 2 + 1).alias("dst"),
+            )
+            .distinct()
+        )
+        edges = e0.unionByName(
+            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        out = os.path.join(staging, "edges")
+        edges.write.mode("overwrite").parquet(out)
+        # degrees and node count are PROPERTIES of the edge artifact —
+        # derive them once at staging time, not per rank refresh
+        deg_out = os.path.join(staging, "deg")
+        deg = spark.read.parquet(out).groupBy("src").agg(
+            F.count("*").alias("d")
+        )
+        deg.write.mode("overwrite").parquet(deg_out)
+        n_nodes = spark.read.parquet(deg_out).count()
+        with open(os.path.join(staging, "meta.json"), "w") as fh:
+            json.dump({"n_nodes": n_nodes}, fh)
 
-        def stage(staging: str) -> None:
-            li = load_table(spark, sf_dir, "lineitem")
-            e0 = (
-                li.select(
-                    (F.col("l_partkey") * 2).alias("src"),
-                    (F.col("l_suppkey") * 2 + 1).alias("dst"),
-                )
-                .distinct()
-            )
-            edges = e0.unionByName(
-                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            out = os.path.join(staging, "edges")
-            edges.write.mode("overwrite").parquet(out)
-            # degrees and node count are PROPERTIES of the edge artifact —
-            # derive them once at staging time, not per rank refresh
-            deg_out = os.path.join(staging, "deg")
-            deg = spark.read.parquet(out).groupBy("src").agg(
-                F.count("*").alias("d")
-            )
-            deg.write.mode("overwrite").parquet(deg_out)
-            n_nodes = spark.read.parquet(deg_out).count()
-            with open(os.path.join(staging, "meta.json"), "w") as fh:
-                json.dump({"n_nodes": n_nodes}, fh)
-
+    def edges() -> dict:
         root = disk_artifact_dir("pagerank_graph", "v1", sf_dir, stage)
         with open(os.path.join(root, "meta.json")) as fh:
             n_nodes = json.load(fh)["n_nodes"]
-        _PR_EDGE_CACHE[key] = {
+        return {
             "edges": os.path.join(root, "edges"),
             "deg": os.path.join(root, "deg"),
             "n_nodes": n_nodes,
         }
-    return _PR_EDGE_CACHE[key]
+
+    return session_memo(spark, ("pagerank_edges",), edges, sf_dir=sf_dir)
 
 
 #: Teleport mass as an EXPLICIT literal: computing it as ``1.0 - 0.85``

@@ -354,6 +354,27 @@ def serve_topk_plan(
     )
 
 
+def ann_query_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged query stream: the ``STREAM_ANN_QUERY_IDS`` vectors,
+    vec_id-ordered, ``_ANN_BATCH`` per micro-batch file — shared by
+    ``stream_ann_serve`` and ``extensions14.stream_serve_recall``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ..streaming.core import stage_stream, staged_stream
+
+    def parts() -> list:
+        t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+        ids = pa.array(list(STREAM_ANN_QUERY_IDS))
+        qt = t.filter(pc.is_in(t.column("vec_id"), value_set=ids))
+        qt = qt.sort_by("vec_id")
+        return [qt.slice(i, _ANN_BATCH) for i in range(0, qt.num_rows, _ANN_BATCH)]
+
+    src = stage_stream(spark, ("ann_serve_stream",), sf_dir, parts)
+    return staged_stream(spark, src, raw_table_schema(spark, sf_dir, "embeddings"))
+
+
 @query("stream_ann_serve", oracle=stream_ann_serve_oracle())
 def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN serving (SURVEY §2.W): a micro-batched stream of
@@ -376,38 +397,8 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring of ALL candidates keeps the cut margin-free; at 100 TB the
     float-prefilter shortlist of the registered op slots in front
     unchanged."""
-    import tempfile
-
-    import pyarrow.parquet as pq
-
     corpus, cents = ivf_index(spark, sf_dir)
     cells = _ivf_cells(spark, sf_dir)
-
-    # ---- stage the query stream: _ANN_BATCH queries per file ------------
-    def build_stream(d: str) -> str:
-        t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
-        import pyarrow.compute as pc
-
-        qt = t.filter(
-            pc.is_in(
-                t.column("vec_id"),
-                value_set=__import__("pyarrow").array(
-                    list(STREAM_ANN_QUERY_IDS)
-                ),
-            )
-        ).sort_by("vec_id")
-        for i in range(0, qt.num_rows, _ANN_BATCH):
-            f = os.path.join(d, f"q{i // _ANN_BATCH}.parquet")
-            pq.write_table(qt.slice(i, _ANN_BATCH), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return d
-
-    src = session_memo(
-        spark,
-        ("ann_serve_stream", os.path.abspath(sf_dir)),
-        lambda: build_stream(tempfile.mkdtemp(prefix="nm_ann_q_")),
-        sf_dir=sf_dir,
-    )
 
     def serve_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # (plain re-reads of the tiny micro-batch file, NOT a
@@ -426,11 +417,7 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the landed columns ARE the result columns
     return drain_partials(
-        spark.readStream.schema(
-            raw_table_schema(spark, sf_dir, "embeddings")
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src),
+        ann_query_stream(spark, sf_dir),
         serve_batch,
         lambda landed: landed,
         "qid long, vec_id long, cos_sim double",

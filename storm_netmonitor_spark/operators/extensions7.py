@@ -626,12 +626,11 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing index reads from the same ``minhash_band_index`` artifact
     the batch op maintains (one index, three consumers: batch merge,
     streaming merge, and any future serve path)."""
-    import tempfile
-
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..streaming.core import drain_partials
+    from ..streaming.core import drain_partials, stage_stream, staged_stream
     from .extensions6 import minhash_band_rows, verify_band_candidates
     from .text import _with_shingles
 
@@ -672,25 +671,14 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ---- stage the delta doc stream, doc_id-ordered micro-batch files ----
-    def build_stream(dir_: str) -> str:
+    def parts() -> list:
         t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-        import pyarrow.compute as pc
-
         dt = t.filter(pc.greater_equal(t.column("doc_id"), pa.scalar(split)))
         dt = dt.sort_by("doc_id")
         per = max(1, -(-dt.num_rows // _STREAM_MERGE_BATCHES))
-        for i in range(0, dt.num_rows, per):
-            f = os.path.join(dir_, f"d{i // per}.parquet")
-            pq.write_table(dt.slice(i, per), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return dir_
+        return [dt.slice(i, per) for i in range(0, dt.num_rows, per)]
 
-    src = session_memo(
-        spark,
-        ("merge_stream", os.path.abspath(sf_dir), split),
-        lambda: build_stream(tempfile.mkdtemp(prefix="nm_merge_d_")),
-        sf_dir=sf_dir,
-    )
+    src = stage_stream(spark, ("merge_stream", split), sf_dir, parts)
 
     # the fold state: the already-materialized band frames of the folded
     # batches, keyed by batch_id. localCheckpoint pins each batch's bands
@@ -729,9 +717,7 @@ def stream_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             # table, so the already-loaded frame's schema IS the stream's
             # read schema (the previous spark.read.parquet(...) paid a
             # second driver-side footer read per rebuilt sample)
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src),
+            staged_stream(spark, src, d.schema),
             merge_batch,
             lambda landed: landed.select("doc_a", "doc_b", "jaccard"),
             "doc_a long, doc_b long, jaccard double",

@@ -295,12 +295,10 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     index version; per batch the work is O(|batch|·K·dim) row-local
     routing plus a K-row counter fold, so the monitor's steady-state
     cost tracks the insert stream, never the standing corpus."""
-    import tempfile
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..streaming.core import drain_partials
+    from ..streaming.core import drain_partials, stage_stream, staged_stream
     from .extensions7 import census_drift_local
 
     split = _embed_split(spark, sf_dir)
@@ -332,24 +330,15 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ---- stage the delta vector stream, vec_id-ordered micro-batches ----
-    def build_stream(dir_: str) -> str:
+    def parts() -> list:
         t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
         dt = t.filter(
             pc.greater_equal(t.column("vec_id"), split)
         ).sort_by("vec_id")
         per = max(1, -(-dt.num_rows // _STREAM_DRIFT_BATCHES))
-        for i in range(0, dt.num_rows, per):
-            f = os.path.join(dir_, f"d{i // per}.parquet")
-            pq.write_table(dt.slice(i, per), f)
-            os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-        return dir_
+        return [dt.slice(i, per) for i in range(0, dt.num_rows, per)]
 
-    src = session_memo(
-        spark,
-        ("drift_stream", os.path.abspath(sf_dir), split),
-        lambda: build_stream(tempfile.mkdtemp(prefix="nm_drift_d_")),
-        sf_dir=sf_dir,
-    )
+    src = stage_stream(spark, ("drift_stream", split), sf_dir, parts)
 
     def census_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # routing kernel choice (r14, measured): the Arrow kernel keeps
@@ -366,11 +355,7 @@ def stream_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return drain_partials(
-        spark.readStream.schema(
-            raw_table_schema(spark, sf_dir, "embeddings")
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src),
+        staged_stream(spark, src, raw_table_schema(spark, sf_dir, "embeddings")),
         census_batch,
         # the drift arithmetic runs in PYTHON on the landed ≤K-row
         # censuses (r14: the distributed read-back + range-join-window

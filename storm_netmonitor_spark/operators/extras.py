@@ -23,16 +23,13 @@ from ..functions.stable import (
     ts_str,
     ts_str_sql,
 )
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
 # JSON-lines source (completes the source-format matrix: parquet, CSV,
 # JSON — SURVEY §2.A)
 # ---------------------------------------------------------------------------
-
-_JSON_CACHE: dict[str, str] = {}
-
 
 @query(
     "source_json_lines",
@@ -52,16 +49,17 @@ def source_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-repr round-trip; the timestamp column is excluded from the
     staged projection (JSON timestamp formats are engine-specific — the
     CSV source operator covers timestamp round-trip)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _JSON_CACHE:
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
         d = tempfile.mkdtemp(prefix="nm_jsonl_")
         e.write.mode("overwrite").json(d)
-        _JSON_CACHE[key] = d
+        return d
+
     raw = spark.read.schema("event_id long, event_type string, value double").json(
-        _JSON_CACHE[key]
+        session_memo(spark, ("jsonl_src",), stage, sf_dir=sf_dir)
     )
     return raw.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -590,7 +588,8 @@ def _blob_dir(sf_dir: str) -> str:
     """Stage a deterministic directory of binary payload files (the first
     {n} documents by doc_id, utf-8 bytes, doc_<id>.bin) once per sf_dir —
     shared by the Spark op AND the oracle factory, which run in the same
-    process (the streaming _stage_once convention)."""
+    process. The oracle factory has no session, so this dir is cached
+    per process here instead of through ``io.session_memo``."""
     import pyarrow.parquet as pq
 
     key = os.path.abspath(sf_dir)

@@ -16,7 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import davg_sql, dratio, dsum_sql
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -25,7 +25,6 @@ from ..registry import query
 # ---------------------------------------------------------------------------
 
 _DEC = "decimal(28,6)"
-_INC_CACHE: dict[str, str] = {}
 
 #: History/delta split point — events span 2024-01; the last week is "new".
 _INC_CUTOFF = "2024-01-25"
@@ -67,17 +66,19 @@ def agg_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the property (algebraic aggregates + order-independent decimal sums,
     SURVEY §7.4.1) that lets a production rollup never re-read history.
     The delta scan's day predicate is pushed to the parquet reader."""
-    key = os.path.abspath(sf_dir)
     e = load_table(spark, sf_dir, "events")
     day = F.to_date("ts")
-    if key not in _INC_CACHE:
-        d = tempfile.mkdtemp(prefix="nm_rollup_state_")
-        path = os.path.join(d, "partials")
+
+    def stage() -> str:
+        path = os.path.join(tempfile.mkdtemp(prefix="nm_rollup_state_"), "partials")
         _daily_partials(e.where(day < F.lit(_INC_CUTOFF))).write.mode(
             "overwrite"
         ).parquet(path)
-        _INC_CACHE[key] = path
-    history = spark.read.parquet(_INC_CACHE[key])
+        return path
+
+    history = spark.read.parquet(
+        session_memo(spark, ("rollup_history",), stage, sf_dir=sf_dir)
+    )
     delta = _daily_partials(e.where(day >= F.lit(_INC_CUTOFF)))
     merged = (
         history.unionByName(delta)
@@ -108,8 +109,6 @@ def agg_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental JOIN-view maintenance (the bilinear delta rule: a join view
 # absorbs a delta batch without recomputing history × history)
 # ---------------------------------------------------------------------------
-
-_IJV_CACHE: dict[str, str] = {}
 
 #: both fact tables span 1995–2001; rows dated 2001+ are "the new batch".
 _IJV_CUTOFF = "2001-01-01"
@@ -161,8 +160,6 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh's two base-side scans read memory, not parquet — the
     pagerank edge-frame discipline (measured r11 at sf0.1: refresh
     median 1.38 → 0.82 s)."""
-    from ..io import session_memo
-
     key = os.path.abspath(sf_dir)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
@@ -183,15 +180,17 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     do = o.where(F.col("o_orderdate") >= cut)
     dl = li.where(F.col("l_shipdate") >= cut)
-    on = o["o_orderkey"]  # noqa: F841  (documenting the join key)
-    if key not in _IJV_CACHE:
-        d = tempfile.mkdtemp(prefix="nm_joinview_state_")
-        path = os.path.join(d, "partials")
+
+    def stage() -> str:
+        path = os.path.join(tempfile.mkdtemp(prefix="nm_joinview_state_"), "partials")
         _rev_partials(
             bo.join(bl, bo["o_orderkey"] == bl["l_orderkey"])
         ).write.mode("overwrite").parquet(path)
-        _IJV_CACHE[key] = path
-    state = spark.read.parquet(_IJV_CACHE[key])
+        return path
+
+    state = spark.read.parquet(
+        session_memo(spark, ("joinview_state", _IJV_CUTOFF), stage, sf_dir=sf_dir)
+    )
 
     # ONE aggregate over the unioned joined ROWS of the three delta
     # terms (r14 optimization, guide §2.4): the per-term _rev_partials

@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.stable import dround, dround_sql, dsum, dsum_sql, ts_str, ts_str_sql
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 
 
@@ -375,9 +375,6 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKET_CACHE: dict[str, bool] = {}
-
-
 @query(
     "join_bucketed_colocated",
     oracle=f"""
@@ -394,13 +391,12 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side (asserted in tests/test_plans.py). The one-time bucketed
     write amortizes across every subsequent join/agg on that key.
     """
-    key = os.path.abspath(sf_dir)
-    # table names carry an sf tag so two scale factors in one session
-    # cannot clobber each other's bucketed layout
     import hashlib
 
-    tag = hashlib.md5(key.encode()).hexdigest()[:8]
-    if key not in _BUCKET_CACHE:
+    def stage() -> str:
+        # table names carry an sf tag so two scale factors in one session
+        # cannot clobber each other's bucketed layout
+        tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
         # warehouse.dir is static — pin the database location instead so
         # bucketed tables land in a temp dir, never in the repo.
         loc = tempfile.mkdtemp(prefix="nm_warehouse_")
@@ -413,7 +409,9 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .sortBy(k)
                 .saveAsTable(f"nm_buckets.{t}_b8_{tag}")
             )
-        _BUCKET_CACHE[key] = True
+        return tag
+
+    tag = session_memo(spark, ("bucketed_tables",), stage, sf_dir=sf_dir)
     o = spark.table(f"nm_buckets.orders_b8_{tag}").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )

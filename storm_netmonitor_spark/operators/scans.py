@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_sql, ts_str, ts_str_sql
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 
 
@@ -113,16 +113,13 @@ def sink_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PART_SINK_CACHE: dict[str, str] = {}
-
-
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per input) the events table as DATE-PARTITIONED
     parquet — the layout a petabyte events table actually uses — and
     return its path. Shared by the static-pruning sink op below and the
     dynamic-partition-pruning probe (scale_probes.join_dpp_prune)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _PART_SINK_CACHE:
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events")
         out = os.path.join(tempfile.mkdtemp(prefix="nm_partsink_"), "events_by_date")
         (
@@ -131,8 +128,9 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("event_date")
             .parquet(out)
         )
-        _PART_SINK_CACHE[key] = out
-    return _PART_SINK_CACHE[key]
+        return out
+
+    return session_memo(spark, ("partitioned_events",), stage, sf_dir=sf_dir)
 
 
 def partitioned_events_frame(spark: SparkSession, sf_dir: str):
@@ -219,15 +217,12 @@ def sql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SORTED_SINK_CACHE: dict[str, str] = {}
-
-
 def sorted_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as the SURVEY §7.3 production layout: date-partitioned
     parquet, rows sorted by user_id within each partition so parquet
     row-group min/max statistics cluster the dominant filter key."""
-    key = os.path.abspath(sf_dir)
-    if key not in _SORTED_SINK_CACHE:
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events")
         out = os.path.join(tempfile.mkdtemp(prefix="nm_sorted_"), "events_sorted")
         (
@@ -238,8 +233,9 @@ def sorted_layout_dir(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("event_date")
             .parquet(out)
         )
-        _SORTED_SINK_CACHE[key] = out
-    return _SORTED_SINK_CACHE[key]
+        return out
+
+    return session_memo(spark, ("sorted_layout",), stage, sf_dir=sf_dir)
 
 
 @query(
@@ -301,9 +297,6 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MESSY_CSV_CACHE: dict[str, str] = {}
-
-
 @query(
     "source_csv_permissive",
     oracle="""
@@ -321,8 +314,8 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_corrupt_record`` column — bad rows are quarantined, good rows
     parse, and the counts reconcile exactly with the oracle's rendering
     of the same deterministic corruption rule."""
-    key = os.path.abspath(sf_dir)
-    if key not in _MESSY_CSV_CACHE:
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events").select("event_id", "user_id")
         d = tempfile.mkdtemp(prefix="nm_messy_csv_")
         # corrupt = drop the user_id column and append junk fields
@@ -335,12 +328,13 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("line")
         )
         lines.coalesce(1).write.mode("overwrite").text(d)
-        _MESSY_CSV_CACHE[key] = d
+        return d
+
     raw = (
         spark.read.schema("event_id long, user_id long, _corrupt_record string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(_MESSY_CSV_CACHE[key])
+        .csv(session_memo(spark, ("messy_csv",), stage, sf_dir=sf_dir))
     )
     raw = raw.cache()  # required: _corrupt_record is only visible when the
     # raw parse is materialized (Spark documents this for corrupt-record queries)
@@ -351,9 +345,6 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_good_users"
         ),
     )
-
-
-_EVOLVED_CACHE: dict[str, str] = {}
 
 
 @query(
@@ -376,8 +367,8 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     column — read with ``mergeSchema``; rows from the old file surface
     NULL for the new column. The oracle renders the same split from the
     source table."""
-    key = os.path.abspath(sf_dir)
-    if key not in _EVOLVED_CACHE:
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events")
         d = tempfile.mkdtemp(prefix="nm_evolved_")
         e.filter(F.col("event_id") % 2 == 0).select("event_id", "event_type").write.parquet(
@@ -386,10 +377,11 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_id") % 2 == 1).select(
             "event_id", "event_type", F.col("value").alias("value2")
         ).write.parquet(os.path.join(d, "new"))
-        _EVOLVED_CACHE[key] = d
+        return d
+
+    d = session_memo(spark, ("evolved_schema",), stage, sf_dir=sf_dir)
     back = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(_EVOLVED_CACHE[key], "old"),
-        os.path.join(_EVOLVED_CACHE[key], "new"),
+        os.path.join(d, "old"), os.path.join(d, "new")
     )
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -19,16 +19,13 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dround, dround_sql, dsum, dsum_sql, sketch_ok
-from ..io import load_table
+from ..io import load_table, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
 # ORC source/sink roundtrip (completes the columnar-format matrix next to
 # parquet — SURVEY §2.A; NM: archival exports from other Hadoop tooling)
 # ---------------------------------------------------------------------------
-
-_ORC_CACHE: dict[str, str] = {}
-
 
 @query(
     "source_orc_roundtrip",
@@ -50,16 +47,17 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The timestamp column is excluded from the staged projection (ORC
     stores session-local timestamps; the CSV source operator covers
     timestamp round-trip)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _ORC_CACHE:
+
+    def stage() -> str:
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value", "user_id"
         )
         d = tempfile.mkdtemp(prefix="nm_orc_")
         path = os.path.join(d, "events_orc")
         e.write.mode("overwrite").orc(path)
-        _ORC_CACHE[key] = path
-    back = spark.read.orc(_ORC_CACHE[key])
+        return path
+
+    back = spark.read.orc(session_memo(spark, ("orc_src",), stage, sf_dir=sf_dir))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         dsum("value").alias("total_value"),

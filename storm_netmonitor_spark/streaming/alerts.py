@@ -31,8 +31,10 @@ from .core import (
     drain_to_memory,
     drain_to_memory_until,
     events_stream,
+    stage_stream,
+    staged_stream,
 )
-from .stateful import _read_events_arrow, _stage_once, _stream_staged
+from .stateful import _read_events_arrow
 
 _GAP_US = 6 * 3_600 * 10**6  # same threshold as ts_sla_gap_detect
 
@@ -47,26 +49,21 @@ _GAP_OUT = StructType(
 _GAP_STATE = StructType([StructField("last_ts_us", LongType())])
 
 
-def _staged_quarters(sf_dir: str) -> str:
+def _staged_quarters(spark: SparkSession, sf_dir: str) -> str:
     """The events table as 4 mtime-ordered parquet files of ceil(n/4)
-    rows — one micro-batch each under ``maxFilesPerTrigger=1`` — staged
-    once per sf_dir and shared by every 4-batch op in this module."""
-    import pyarrow.parquet as pq
+    rows — one micro-batch each — shared by every 4-batch op in this
+    module."""
 
-    def build(d: str) -> str:
+    def parts() -> list:
         t = _read_events_arrow(sf_dir)
         step = (t.num_rows + 3) // 4
-        for i in range(4):
-            f = os.path.join(d, f"p{i}.parquet")
-            pq.write_table(t.slice(i * step, step), f)
-            os.utime(f, (1_700_000_000 + i * 1000,) * 2)
-        return d
+        return [t.slice(i * step, step) for i in range(4)]
 
-    return _stage_once("quarters", sf_dir, build)
+    return stage_stream(spark, ("quarters",), sf_dir, parts)
 
 
 def _quarter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _stream_staged(spark, _staged_quarters(sf_dir), one_file_per_batch=True)
+    return staged_stream(spark, _staged_quarters(spark, sf_dir))
 
 
 def _fmt_us(us: int) -> str:
@@ -171,7 +168,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY §7.4.1) and lands them executor-side keyed by batch_id (a
     replayed batch overwrites its own partials); the published report is
     the partial-merge (counts add, decimal sums add exactly).
-    Four staged micro-batches (maxFilesPerTrigger=1) prove the merge is
+    Four staged micro-batches (one file per trigger) prove the merge is
     batch-split-invariant: the oracle is the plain one-shot aggregate.
     This is the streaming twin of ``agg_incremental_rollup`` — same
     algebra, arriving data instead of delta-day scans."""
@@ -218,7 +215,7 @@ def sink_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch MERGEs into a keyed parquet state — new state = latest
     row per (source × metric) over old state ∪ batch, written to a fresh
     versioned directory (atomic swap, the Delta MERGE pattern without the
-    format). Four staged micro-batches (maxFilesPerTrigger=1) prove the
+    format). Four staged micro-batches (one file per trigger) prove the
     fold is batch-split-invariant: the final state equals the one-shot
     latest-per-key over all events — the same oracle as
     ``dedup_latest_per_key``. State size is O(live keys), not O(stream)."""

@@ -7,7 +7,9 @@ oracle (SURVEY §2.I). In production the same code runs with a processing-
 time trigger and a real directory of arriving parquet — nothing else
 changes. Every streaming query in the package starts here, in ``drain``
 (or ``drain_to_memory_until`` for custom Python sources); every op that
-folds per-micro-batch partials into one report runs ``drain_partials``.
+folds per-micro-batch partials into one report runs ``drain_partials``;
+every staged input stream is written by ``stage_stream`` and read by
+``staged_stream``.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from ..io import (
     land_bounded_frame,
     landed_rows,
     read_landed_local,
+    session_memo,
     table_path,
     tiny_local_frame,
 )
@@ -99,7 +102,6 @@ def _dir_ts_unit(src: str) -> str:
             return _file_ts_unit(os.path.join(src, name))
     return "us"
 
-_stage_cache: dict[str, str] = {}
 
 #: Stateful streaming operators hash their state into
 #: ``spark.sql.shuffle.partitions`` state-store partitions, fixed at the
@@ -313,15 +315,60 @@ def ckpt_dir() -> str:
     return tempfile.mkdtemp(prefix="nm_ckpt_", dir=base)
 
 
-def events_stream_dir(sf_dir: str) -> str:
+def events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """The file stream source requires a DIRECTORY; stage a symlink to the
-    events parquet in a cached temp dir (no data copy)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _stage_cache:
+    events parquet in a per-session temp dir (no data copy; the link
+    follows a rewritten file, so the dir needs no input fingerprint)."""
+
+    def link() -> str:
         d = tempfile.mkdtemp(prefix="nm_stream_src_")
         os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
-        _stage_cache[key] = d
-    return _stage_cache[key]
+        return d
+
+    return session_memo(spark, ("events_stream_dir", os.path.abspath(sf_dir)), link)
+
+
+#: mtime of a staged stream's first part; part i is ``i`` kiloseconds
+#: later, so the file source's mtime order is the part order.
+_STAGED_EPOCH = 1_700_000_000
+
+
+def stage_stream(spark: SparkSession, key: tuple, sf_dir: str, parts) -> str:
+    """THE stream staging writer: write ``parts()``, a list of pyarrow
+    tables, as one parquet file each into a fresh ``nm_<key[0]>_`` dir,
+    in ascending mtime order, and return the dir. It runs once per
+    (session, ``key``, input fingerprint) through ``io.session_memo``, so
+    an input rewritten mid-session restages instead of serving the old
+    rows. ``key`` carries everything the parts depend on besides the
+    files under ``sf_dir``; ops that share a key share the staged dir.
+    The part files' names sort in part order."""
+
+    def write() -> str:
+        import pyarrow.parquet as pq
+
+        d = tempfile.mkdtemp(prefix=f"nm_{key[0]}_")
+        for i, t in enumerate(parts()):
+            f = os.path.join(d, f"part-{i:05d}.parquet")
+            pq.write_table(t, f)
+            os.utime(f, (_STAGED_EPOCH + i * 1000,) * 2)
+        return d
+
+    return session_memo(spark, ("staged",) + tuple(key), write, sf_dir=sf_dir)
+
+
+def staged_stream(
+    spark: SparkSession, src: str, schema: StructType = EVENTS_RAW_SCHEMA
+) -> DataFrame:
+    """THE staged-stream reader: a ``stage_stream`` dir as a file stream
+    read with ``schema``, one part per micro-batch. The default schema
+    fits events staged through ``stateful._read_events_arrow`` (ts as
+    timestamp[us], which Spark reads natively)."""
+    apply_runtime_confs(spark)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
 
 
 def events_stream(
@@ -345,7 +392,7 @@ def events_stream(
     difference is the whole scan). Parquet is schema-on-read, so a subset
     schema reads only those column chunks."""
     apply_runtime_confs(spark)
-    src = source_dir or events_stream_dir(sf_dir)
+    src = source_dir or events_stream_dir(spark, sf_dir)
     nanos = _dir_ts_unit(src) == "ns"
     base = EVENTS_NANOS_SCHEMA if nanos else EVENTS_RAW_SCHEMA
     schema = (

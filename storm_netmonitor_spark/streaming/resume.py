@@ -31,32 +31,29 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_sql
 from ..registry import query
-from .core import ckpt_dir, drain, events_stream
+from .core import ckpt_dir, drain, events_stream, stage_stream
 from .stateful import (
     _COUNTER_OUT,
     _COUNTER_STATE,
     _counter_fn,
     _read_events_arrow,
-    _stage_once,
 )
 
 
-def _staged_halves(sf_dir: str) -> tuple[str, int, int]:
+def _staged_halves(spark: SparkSession, sf_dir: str) -> list[tuple[str, int]]:
     """Stage events as two parquet halves (sorted by event_id — a
-    deterministic split regardless of source row order); cached per
-    input dir like every other staged streaming source."""
+    deterministic split regardless of source row order); returns each
+    half's ``(path, rows)``."""
+    import pyarrow.parquet as pq
 
-    def build(d: str) -> tuple[str, int, int]:
-        import pyarrow.parquet as pq
-
-        t = _read_events_arrow(sf_dir)
-        t = t.sort_by("event_id")
+    def parts() -> list:
+        t = _read_events_arrow(sf_dir).sort_by("event_id")
         half = t.num_rows // 2
-        pq.write_table(t.slice(0, half), os.path.join(d, "half0.parquet"))
-        pq.write_table(t.slice(half), os.path.join(d, "half1.parquet"))
-        return d, half, t.num_rows - half
+        return [t.slice(0, half), t.slice(half)]
 
-    return _stage_once("resume_halves", sf_dir, build)
+    d = stage_stream(spark, ("resume_halves",), sf_dir, parts)
+    paths = [os.path.join(d, f) for f in sorted(os.listdir(d))]
+    return [(p, pq.ParquetFile(p).metadata.num_rows) for p in paths]
 
 
 def _two_phase_drain(
@@ -74,12 +71,9 @@ def _two_phase_drain(
     phase's ingested row count deviates from its staged half — the
     offset-log audit that stops a silent full recompute from
     masquerading as a resume."""
-    halves_dir, n_first, n_second = _staged_halves(sf_dir)
+    (half0, n_first), (half1, n_second) = _staged_halves(spark, sf_dir)
     run_dir = tempfile.mkdtemp(prefix="nm_resume_src_")
-    os.symlink(
-        os.path.join(halves_dir, "half0.parquet"),
-        os.path.join(run_dir, "half0.parquet"),
-    )
+    os.symlink(half0, os.path.join(run_dir, "half0.parquet"))
     ckpt = ckpt_dir()  # ONE checkpoint, shared by both query lifecycles
 
     agg = build_agg(events_stream(spark, sf_dir, source_dir=run_dir,
@@ -103,10 +97,7 @@ def _two_phase_drain(
             f"phase 1 ingested {got_first} rows, staged half has {n_first}"
         )
     # second half "arrives"; the restarted query must pick up ONLY it
-    os.symlink(
-        os.path.join(halves_dir, "half1.parquet"),
-        os.path.join(run_dir, "half1.parquet"),
-    )
+    os.symlink(half1, os.path.join(run_dir, "half1.parquet"))
     got_second = run("p2")
     if got_second != n_second:
         raise RuntimeError(

@@ -4,15 +4,16 @@ streaming dedup, arbitrary-state counters, EWMA rate smoothing.
 These are the netmonitor core semantics a batch oracle cannot see directly
 (resent-sample dedup, late sample handling, per-host cumulative counters,
 rate smoothing). To keep them HASH-checkable anyway, each query stages a
-DETERMINISTIC derived input (pyarrow-written parquet in a cached temp dir,
-derived purely from the sf_dir events table — no RNG, no clocks) and is
+DETERMINISTIC derived input (pyarrow-written parquet, derived purely from
+the sf_dir events table — no RNG, no clocks — and staged through
+``core.stage_stream`` once per session and input fingerprint) and is
 constructed so the correct streaming result equals a plain batch SQL over
 the original events table:
 
 - ``stream_dedup``: input = events ∪ events (every row twice); correct
   dedup output = events exactly once → oracle is a plain projection.
-- ``stream_watermark_late``: input = 3 files processed as 3 micro-batches
-  (maxFilesPerTrigger=1): [all events], [stale copies + future sentinel],
+- ``stream_watermark_late``: input = 4 files processed as 4 micro-batches
+  (one file per trigger): [all events], [future sentinel], [stale copies],
   [stale copy]. The stale copies arrive beyond the watermark and MUST be
   dropped; the sentinel advances the watermark so every real window closes
   in append mode. Correct output = plain hourly aggregation of events.
@@ -39,7 +40,7 @@ from __future__ import annotations
 import os
 import tempfile
 from decimal import ROUND_HALF_UP, Decimal
-from typing import Any, Iterable
+from typing import Iterable
 
 import pandas as pd
 
@@ -55,19 +56,16 @@ from pyspark.sql.types import (
 from ..functions.stable import dsum_sql, ts_str, ts_str_sql
 from ..io import table_path
 from ..registry import query
-from ..session import apply_runtime_confs
-from .core import EVENTS_RAW_SCHEMA, drain, drain_to_memory
+from .core import drain, drain_to_memory, stage_stream, staged_stream
 
 HOUR_US = 3_600 * 10**6
-
-_staged: dict[tuple[str, str], Any] = {}
 
 
 def _read_events_arrow(sf_dir: str):
     """Events table with ts normalized to timestamp[us] — staged files are
     ALWAYS µs regardless of the source file's physical unit (the driver has
     shipped both ns and µs testdata; ``core.events_ts_unit``), so every
-    staging consumer and ``_stream_staged``'s schema stay unit-agnostic."""
+    staging consumer and ``core.staged_stream``'s schema stay unit-agnostic."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -76,30 +74,11 @@ def _read_events_arrow(sf_dir: str):
     return t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("us")))
 
 
-def _stage_once(kind: str, sf_dir: str, build) -> Any:
-    key = (kind, os.path.abspath(sf_dir))
-    if key not in _staged:
-        d = tempfile.mkdtemp(prefix=f"nm_{kind}_")
-        _staged[key] = build(d)
-    return _staged[key]
-
-
-def _stream_staged(
-    spark: SparkSession, source_dir: str, one_file_per_batch: bool = False
-) -> DataFrame:
-    """Stream a staged events-shaped directory; ts normalized to timestamp."""
-    apply_runtime_confs(spark)
-    reader = spark.readStream.schema(EVENTS_RAW_SCHEMA)
-    if one_file_per_batch:
-        reader = reader.option("maxFilesPerTrigger", "1")
-    # staged files carry ts as timestamp[us] (see _read_events_arrow) —
-    # EVENTS_RAW_SCHEMA reads that natively, no unit conversion needed
-    return reader.parquet(source_dir)
-
-
-def _build_late_staging(
-    sf_dir: str, d: str, sentinel_types: tuple[str, ...] = ("sentinel",)
-) -> dict[str, Any]:
+def _late_staging(
+    spark: SparkSession,
+    sf_dir: str,
+    sentinel_types: tuple[str, ...] = ("sentinel",),
+) -> str:
     """Four mtime-ordered micro-batch files: [all events], [future
     sentinels], [stale copies of the earliest hour], [one stale row] —
     shared by ``stream_watermark_late``, ``sink_stream_parquet`` and the
@@ -110,37 +89,56 @@ def _build_late_staging(
     watermark stalls (measured) — such consumers need sentinels typed to
     SURVIVE their filters (far-future ts and user_id −1 keep them from
     ever joining or emitting)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+
+    def parts() -> list:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = _read_events_arrow(sf_dir)
+        ts_us = pc.cast(t.column("ts"), pa.int64())
+        lo = pc.min(ts_us).as_py()
+        hi = pc.max(ts_us).as_py()
+        stale = t.filter(pc.less(ts_us, pa.scalar(lo + HOUR_US)))
+        sentinel_us = (hi // HOUR_US) * HOUR_US + 3 * HOUR_US
+        k = len(sentinel_types)
+        sentinel = pa.table(
+            {
+                "event_id": pa.array([-1 - i for i in range(k)], pa.int64()),
+                "ts": pa.array([sentinel_us] * k, pa.int64()).cast(
+                    pa.timestamp("us")
+                ),
+                # distinct negative user_ids: multiple sentinels must never
+                # join each other (same ts + shared key would match)
+                "user_id": pa.array([-1 - i for i in range(k)], pa.int64()),
+                "event_type": pa.array(list(sentinel_types), pa.string()),
+                "value": pa.array([0.0] * k, pa.float64()),
+                "props": pa.array(["{}"] * k, pa.string()),
+            }
+        ).cast(t.schema)
+        return [t, sentinel, stale, stale.slice(0, 1)]
+
+    return stage_stream(spark, ("late", sentinel_types), sf_dir, parts)
+
+
+def _sentinel_us(src: str) -> int:
+    """Event time (µs) of the sentinel part of a ``_late_staging`` dir."""
     import pyarrow.parquet as pq
 
-    t = _read_events_arrow(sf_dir)
-    ts_us = pc.cast(t.column("ts"), pa.int64())
-    lo = pc.min(ts_us).as_py()
-    hi = pc.max(ts_us).as_py()
-    stale = t.filter(pc.less(ts_us, pa.scalar(lo + HOUR_US)))
-    sentinel_us = (hi // HOUR_US) * HOUR_US + 3 * HOUR_US
-    k = len(sentinel_types)
-    sentinel = pa.table(
-        {
-            "event_id": pa.array([-1 - i for i in range(k)], pa.int64()),
-            "ts": pa.array([sentinel_us] * k, pa.int64()).cast(pa.timestamp("us")),
-            # distinct negative user_ids: multiple sentinels must never
-            # join each other (same ts + shared key would match)
-            "user_id": pa.array([-1 - i for i in range(k)], pa.int64()),
-            "event_type": pa.array(list(sentinel_types), pa.string()),
-            "value": pa.array([0.0] * k, pa.float64()),
-            "props": pa.array(["{}"] * k, pa.string()),
-        }
-    ).cast(t.schema)
-    f1, f2, f3, f4 = (os.path.join(d, f"b{i}.parquet") for i in (1, 2, 3, 4))
-    pq.write_table(t, f1)
-    pq.write_table(sentinel, f2)
-    pq.write_table(stale, f3)
-    pq.write_table(stale.slice(0, 1), f4)
-    for i, f in enumerate((f1, f2, f3, f4)):
-        os.utime(f, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
-    return {"dir": d, "sentinel_us": sentinel_us}
+    part = sorted(os.listdir(src))[1]
+    ts = pq.read_table(os.path.join(src, part), columns=["ts"]).column("ts")
+    return ts[0].value
+
+
+def _staged_dedup(spark: SparkSession, sf_dir: str) -> str:
+    """Every event delivered twice, as one staged file."""
+
+    def parts() -> list:
+        import pyarrow as pa
+
+        t = _read_events_arrow(sf_dir)
+        return [pa.concat_tables([t, t])]
+
+    return stage_stream(spark, ("dedup",), sf_dir, parts)
 
 
 # ---------------------------------------------------------------------------
@@ -160,17 +158,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collector sees duplicates). Input is every event delivered TWICE;
     ``dropDuplicatesWithinWatermark`` on the unique event_id must emit each
     exactly once, making the batch projection of events the exact oracle."""
-
-    def build(d: str) -> str:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        t = _read_events_arrow(sf_dir)
-        pq.write_table(pa.concat_tables([t, t]), os.path.join(d, "doubled.parquet"))
-        return d
-
-    src = _stage_once("dedup", sf_dir, build)
-    s = _stream_staged(spark, src)
+    s = staged_stream(spark, _staged_dedup(spark, sf_dir))
     deduped = (
         s.withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -217,9 +205,8 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     real events — a plain batch oracle. Any late-row leak or lost window
     breaks the hash.
     """
-
-    st = _stage_once("late", sf_dir, lambda d: _build_late_staging(sf_dir, d))
-    s = _stream_staged(spark, st["dir"], one_file_per_batch=True)
+    src = _late_staging(spark, sf_dir)
+    s = staged_stream(spark, src)
     agg = (
         s.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -229,7 +216,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Belt & braces: the sentinel window is structurally un-emittable, but
     # exclude it explicitly so the contract is visible in the plan.
     return out.filter(
-        F.col("w.start") < F.expr(f"timestamp_micros({st['sentinel_us']})")
+        F.col("w.start") < F.expr(f"timestamp_micros({_sentinel_us(src)})")
     ).select(
         ts_str(F.col("w.start")).alias("window_start"), "event_type", "n_events"
     )
@@ -503,13 +490,7 @@ def sink_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is emitted and stale input is dropped; the batch oracle is the
     plain hourly aggregation. Exactly-once: the parquet sink commits files
     through the checkpoint's file log."""
-    # ensure staging exists (same cache as stream_watermark_late)
-    from ..registry import QUERIES  # noqa: F401  (documentation import)
-
-    st = _stage_once(
-        "late", sf_dir, lambda d: _build_late_staging(sf_dir, d)
-    )
-    s = _stream_staged(spark, st["dir"], one_file_per_batch=True)
+    s = staged_stream(spark, _late_staging(spark, sf_dir))
     agg = (
         s.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -553,11 +534,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel-staged source so the watermark passes every join window and
     ALL unmatched rows emit; the stale batches are dropped as late. The
     batch oracle is the plain LEFT JOIN with the same time bounds."""
-    st = _stage_once(
-        "late_pc",
-        sf_dir,
-        lambda d: _build_late_staging(sf_dir, d, sentinel_types=("purchase", "click")),
-    )
+    src = _late_staging(spark, sf_dir, sentinel_types=("purchase", "click"))
 
     def side(event_type: str, id_alias: str, user_alias: str, ts_alias: str):
         # watermark BEFORE the type filter: the watermark tracks the max
@@ -566,7 +543,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # type) and stalls — measured: the last unmatched purchase then
         # never emits. Production rule: assign the watermark on the raw
         # stream, filter after.
-        s = _stream_staged(spark, st["dir"], one_file_per_batch=True)
+        s = staged_stream(spark, src)
         return (
             s.withWatermark("ts", "10 minutes")
             .filter(F.col("event_type") == event_type)

@@ -255,20 +255,16 @@ GROUP BY event_type
 )
 def source_stream_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV file-stream ingestion (NM: collectors commonly tail CSV/log
-    exports): events staged as CSV once per sf_dir, streamed with an
+    exports): events staged as CSV once per session and input, streamed with an
     explicit schema (no inference on a stream), aggregated, and
     hash-matched against the parquet batch oracle — proving type fidelity
     through the text format (timestamps via ISO strings, doubles via
     shortest-repr round-trip)."""
-    import os
     import tempfile
 
-    from ..io import load_table
+    from ..io import load_table, session_memo
 
-    key = ("csv_src", os.path.abspath(sf_dir))
-    from .stateful import _staged
-
-    if key not in _staged:
+    def stage() -> str:
         d = tempfile.mkdtemp(prefix="nm_csv_src_")
         (
             load_table(spark, sf_dir, "events")
@@ -284,7 +280,7 @@ def source_stream_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("header", "true")
             .csv(d)
         )
-        _staged[key] = d
+        return d
 
     schema = (
         "event_id long, ts string, user_id long, event_type string, value string"
@@ -292,7 +288,7 @@ def source_stream_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
         spark.readStream.schema(schema)
         .option("header", "true")
-        .csv(_staged[key])
+        .csv(session_memo(spark, ("csv_src",), stage, sf_dir=sf_dir))
     )
     typed = raw.select(
         "event_type", F.col("value").cast("double").alias("value")

@@ -480,11 +480,11 @@ def test_stream_gap_alert_state_crosses_batches(spark):
         _GAP_STATE,
         _gap_fn,
     )
-    from storm_netmonitor_spark.streaming.core import drain_to_memory
-    from storm_netmonitor_spark.streaming.stateful import (
-        _read_events_arrow,
-        _stream_staged,
+    from storm_netmonitor_spark.streaming.core import (
+        drain_to_memory,
+        staged_stream,
     )
+    from storm_netmonitor_spark.streaming.stateful import _read_events_arrow
 
     t = _read_events_arrow(SF_CORRECT)
     d = tempfile.mkdtemp(prefix="nm_gap_parts_")
@@ -494,7 +494,7 @@ def test_stream_gap_alert_state_crosses_batches(spark):
         pq.write_table(t.slice(i * step, step), f)
         os.utime(f, (1_700_000_000 + i * 1000,) * 2)
 
-    s = _stream_staged(spark, d, one_file_per_batch=True)
+    s = staged_stream(spark, d)
     alerts = (
         s.select("user_id", "ts", "event_id")
         .groupBy("user_id")

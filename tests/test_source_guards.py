@@ -359,6 +359,88 @@ def test_partials_landing_layout_lives_only_in_core_and_io():
     )
 
 
+#: Tokens of a hand-written staged-stream reader — only
+#: ``streaming.core.staged_stream`` (and ``events_stream``) may spell them,
+#: so every staged input is read at one file per trigger with an explicit
+#: schema. The CSV file-stream source of ``source_stream_csv`` is the one
+#: named exception: its input is text, not staged parquet parts.
+_STAGED_READER_TOKENS = ("maxFilesPerTrigger", "readStream.schema(")
+_STAGED_READER_EXCEPTIONS = {("streaming/windows.py", "readStream.schema("): 1}
+
+
+def test_staged_stream_reader_lives_only_in_streaming_core():
+    offenders = {
+        (rel, tok): n
+        for p in sorted(PKG.rglob("*.py"))
+        if (rel := p.relative_to(PKG).as_posix()) != "streaming/core.py"
+        for tok in _STAGED_READER_TOKENS
+        if (n := p.read_text().count(tok))
+        > _STAGED_READER_EXCEPTIONS.get((rel, tok), 0)
+    }
+    assert not offenders, (
+        "staged stream read outside streaming/core.py — stage it with "
+        "streaming.core.stage_stream() and read it with "
+        f"streaming.core.staged_stream(): {offenders}"
+    )
+
+
+#: Module-level caches keyed on an input path. ``io.session_memo`` keys on
+#: the session and the input fingerprint, so a rewritten input restages;
+#: a module dict keyed on ``abspath`` serves the old files instead. The
+#: two that stay: ``_ts_unit_cache`` also keys on size and mtime, and the
+#: binary-files oracle factory that shares ``_BLOB_DIR_CACHE`` has no
+#: session.
+_AUDITED_ABSPATH_CACHES = {
+    ("streaming/core.py", "_ts_unit_cache"),
+    ("operators/extras.py", "_BLOB_DIR_CACHE"),
+}
+
+
+def _abspath_caches() -> set[tuple[str, str]]:
+    """Module-level empty-dict bindings that some function of the same
+    module both touches and keys through an ``abspath`` call."""
+    out = set()
+    for p in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        dicts = set()
+        for node in tree.body:
+            target = value = None
+            if isinstance(node, ast.Assign) and len(node.targets) == 1:
+                target, value = node.targets[0], node.value
+            elif isinstance(node, ast.AnnAssign):
+                target, value = node.target, node.value
+            if (
+                isinstance(target, ast.Name)
+                and isinstance(value, ast.Dict)
+                and not value.keys
+            ):
+                dicts.add(target.id)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            names = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+            if any(
+                isinstance(n, ast.Attribute) and n.attr == "abspath"
+                for n in ast.walk(fn)
+            ):
+                rel = p.relative_to(PKG).as_posix()
+                out |= {(rel, d) for d in dicts & names}
+    return out
+
+
+def test_abspath_keyed_caches_are_exactly_the_audited_set():
+    actual = _abspath_caches()
+    assert actual <= _AUDITED_ABSPATH_CACHES, (
+        "NEW module-level cache keyed on an input path — stage through "
+        "io.session_memo(..., sf_dir=sf_dir) instead: "
+        f"{sorted(actual - _AUDITED_ABSPATH_CACHES)}"
+    )
+    assert actual >= _AUDITED_ABSPATH_CACHES, (
+        "audited caches no longer exist — prune: "
+        f"{sorted(_AUDITED_ABSPATH_CACHES - actual)}"
+    )
+
+
 #: Staged round-15 modules that stay unregistered until they are deleted
 #: (ROADMAP item 5). Only ever shrinks: no new module joins this set.
 _STAGED_UNLISTED = {"extensions21", "extensions22", "extensions26"}
