@@ -82,12 +82,13 @@ def test_clear_session_memo_scopes_to_session():
 
 
 @pytest.mark.fast
-def test_staged_streams_follow_a_rewritten_input(tmp_path):
+def test_staged_streams_follow_a_rewritten_input(tmp_path, monkeypatch):
     """A staged stream is derived from the CURRENT input: rewriting
     ``events.parquet`` mid-session restages the quarter, half and dedup
     streams instead of serving the old rows (the file source can only
     replay what it was staged from)."""
     import shutil
+    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -97,9 +98,12 @@ def test_staged_streams_follow_a_rewritten_input(tmp_path):
 
     from .conftest import SF_SMOKE
 
-    d = str(tmp_path)
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
     events = os.path.join(d, "events.parquet")
     shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), events)
+    # staged dirs land under tmp_path, not the shared temp dir
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     s = _Session()
 
     def rows(src):
@@ -119,6 +123,7 @@ def test_staged_streams_follow_a_rewritten_input(tmp_path):
     assert totals() == (n, n, 2 * n)
     pq.write_table(pq.read_table(events).slice(0, n // 2), events)
     assert totals() == (n // 2, n // 2, 2 * (n // 2))
+    clear_session_memo(s)
 
 
 # ---------------------------------------------------------------------------
