@@ -113,13 +113,32 @@ def session_memo(spark: SparkSession, key: tuple, builder, sf_dir: str | None = 
     everything the built value depends on besides the session; pass
     ``sf_dir`` whenever the value is TRAINED FROM data under that
     directory so the key also carries a :func:`sf_fingerprint` of the
-    input files (stale-model guard per ADVICE r5)."""
+    input files (stale-model guard per ADVICE r5). A miss on a rewritten
+    input evicts the entry it supersedes (same session, key and input
+    root, older fingerprint), unpersisting any cached frames it holds."""
     full = (spark,) + tuple(key)
     if sf_dir is not None:
         full = full + sf_fingerprint(sf_dir)
     if full not in _SESSION_MEMO:
+        if sf_dir is not None:
+            _evict_superseded(full)
         _SESSION_MEMO[full] = builder()
     return _SESSION_MEMO[full]
+
+
+def _evict_superseded(full: tuple) -> None:
+    """Drop the memo entries that ``full`` replaces: the same session,
+    key and input root under a different input fingerprint."""
+    stale = [
+        k
+        for k in _SESSION_MEMO
+        if len(k) == len(full)
+        and k[0] is full[0]
+        and k[1:-1] == full[1:-1]
+        and k[-1] != full[-1]
+    ]
+    for k in stale:
+        _unpersist_value(_SESSION_MEMO.pop(k))
 
 
 def _unpersist_value(value) -> None:

@@ -23,7 +23,7 @@ from ..functions.stable import (
     ts_str,
     ts_str_sql,
 )
-from ..io import load_table, session_memo
+from ..io import load_table, session_memo, sf_fingerprint
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -580,7 +580,7 @@ def scan_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ingestion — the entry point for image/audio payload directories)
 # ---------------------------------------------------------------------------
 
-_BLOB_DIR_CACHE: dict[str, str] = {}
+_BLOB_DIR_CACHE: dict[tuple, str] = {}
 _BLOB_N_FILES = 20
 
 
@@ -589,10 +589,12 @@ def _blob_dir(sf_dir: str) -> str:
     {n} documents by doc_id, utf-8 bytes, doc_<id>.bin) once per sf_dir —
     shared by the Spark op AND the oracle factory, which run in the same
     process. The oracle factory has no session, so this dir is cached
-    per process here instead of through ``io.session_memo``."""
+    per process here instead of through ``io.session_memo``, keyed like
+    it on the input fingerprint: a rewritten ``documents.parquet``
+    restages."""
     import pyarrow.parquet as pq
 
-    key = os.path.abspath(sf_dir)
+    key = sf_fingerprint(sf_dir)
     if key not in _BLOB_DIR_CACHE:
         t = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),

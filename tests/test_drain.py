@@ -1,19 +1,21 @@
 """``streaming.core.drain`` — the one streaming query lifecycle — and
 ``drain_partials``, the one per-micro-batch partials fold on top of it.
 
-Every drain sizes the shuffle (and so the state store) to
-``STREAM_STATE_PARTITIONS`` and runs under the session-wide drain confs,
-whichever op drains first in a session; the per-drain confs it scopes are
-restored to the session's previous values afterwards, also when the
-query fails. A partials fold counts a retried batch once, reads an
-all-empty stream as an empty frame typed by its ddl, and deletes its
-landings also when the fold fails.
+Every drain sizes the shuffle (and so the state store) to one partition
+per task slot, ``min(STREAM_STATE_PARTITIONS, defaultParallelism)``,
+unless the op passes ``state_partitions``, and runs under the
+session-wide drain confs, whichever op drains first in a session; the
+per-drain confs it scopes are restored to the session's previous values
+afterwards, also when the query fails. A partials fold counts a retried
+batch once, reads an all-empty stream as an empty frame typed by its
+ddl, and deletes its landings also when the fold fails.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 import pyarrow as pa
@@ -75,10 +77,32 @@ def test_first_drain_in_fresh_session_is_state_sized_and_drain_tuned(spark):
     with open(os.path.join(ckpt, "offsets", "0")) as f:
         # line 0 is the log version, line 1 the batch metadata
         meta = json.loads(f.read().splitlines()[1])
-    assert meta["conf"][_SHUFFLE] == str(STREAM_STATE_PARTITIONS)
+    slots = fresh.sparkContext.defaultParallelism
+    assert meta["conf"][_SHUFFLE] == str(min(STREAM_STATE_PARTITIONS, slots))
     # Spark's offset-log metadata records only its own fixed conf set, so
     # the drain confs are read from the micro-batch's session instead
     assert seen == {k: RUNTIME_CONFS[k] for k in _DRAIN_CONF_KEYS}
+
+
+def test_default_state_width_is_capped_by_task_slots(spark, monkeypatch):
+    """The default state-store width is one partition per task slot, with
+    ``STREAM_STATE_PARTITIONS`` as the upper bound: more partitions than
+    slots run the state stages in extra task waves."""
+    slots = spark.sparkContext.defaultParallelism
+    below = max(1, slots - 1)
+    for bound, want in ((slots + 4, slots), (below, below)):
+        monkeypatch.setattr(core, "STREAM_STATE_PARTITIONS", bound)
+        ckpt = ckpt_dir()
+        drain(
+            _keyed_stream(spark),
+            lambda batch_df, batch_id: batch_df.count(),
+            "complete",
+            checkpoint=ckpt,
+        )
+        with open(os.path.join(ckpt, "offsets", "0")) as f:
+            meta = json.loads(f.read().splitlines()[1])
+        shutil.rmtree(ckpt, ignore_errors=True)
+        assert meta["conf"][_SHUFFLE] == str(want), bound
 
 
 @pytest.mark.parametrize("raises", [False, True], ids=["ok", "raises"])

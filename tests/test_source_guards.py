@@ -387,12 +387,9 @@ def test_staged_stream_reader_lives_only_in_streaming_core():
 #: Module-level caches keyed on an input path. ``io.session_memo`` keys on
 #: the session and the input fingerprint, so a rewritten input restages;
 #: a module dict keyed on ``abspath`` serves the old files instead. The
-#: two that stay: ``_ts_unit_cache`` also keys on size and mtime, and the
-#: binary-files oracle factory that shares ``_BLOB_DIR_CACHE`` has no
-#: session.
+#: one that stays, ``_ts_unit_cache``, also keys on size and mtime.
 _AUDITED_ABSPATH_CACHES = {
     ("streaming/core.py", "_ts_unit_cache"),
-    ("operators/extras.py", "_BLOB_DIR_CACHE"),
 }
 
 
