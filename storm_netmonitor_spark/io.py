@@ -14,7 +14,11 @@ operator code above it.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -44,9 +48,66 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 #: Entries are retained for process lifetime by design: harnesses and
 #: production pipelines use one session per process, and cached
 #: DataFrames reference their session anyway, so weak keying could never
-#: collect them. A long-lived multi-tenant driver that outlives its
-#: inputs should call :func:`clear_session_memo` between pipelines.
+#: collect them. An entry that is superseded or cleared is released
+#: (:func:`release`): its frames unpersisted, its scratch dirs removed.
 _SESSION_MEMO: dict = {}
+
+
+#: Every temp dir the package made and still holds, with the pid that
+#: made it. A per-call dir comes from ``scratch()`` and goes when its
+#: ``with`` block exits; one that outlives its call (a staged stream or a
+#: lazy read-back held by ``session_memo``) comes from ``scratch_dir()``.
+#: A forked child inherits this dict but leaves its parent's dirs alone.
+_SCRATCH: dict[str, int] = {}
+
+
+def scratch_dir(prefix: str, base: str | None = None) -> str:
+    """A fresh ``<base>/<prefix>*`` dir (``base`` defaults to the temp
+    dir), held until :func:`release` is given a value naming it (a
+    ``session_memo`` eviction) or until process exit."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=base)
+    _SCRATCH[path] = os.getpid()
+    return path
+
+
+@contextmanager
+def scratch(prefix: str, base: str | None = None):
+    """A per-call scratch dir, removed when the ``with`` block exits,
+    also when it raises. A result that reads the dir lazily must be
+    detached (:func:`detach_result`) inside the block."""
+    path = scratch_dir(prefix, base)
+    try:
+        yield path
+    finally:
+        release(path)
+
+
+def release(value) -> None:
+    """Free what a memo value holds: unpersist its cached DataFrames and
+    remove the held scratch dirs it names (a held dir, or a path inside
+    one), recursing into tuples and lists. Anything else (an artifact-
+    store path, a schema, a scalar) passes through untouched."""
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # session already stopped — nothing to free
+    elif isinstance(value, str):
+        for held in [p for p in _SCRATCH if (value + os.sep).startswith(p + os.sep)]:
+            del _SCRATCH[held]
+            shutil.rmtree(held, ignore_errors=True)
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            release(v)
+
+
+@atexit.register
+def release_scratch() -> int:
+    """Remove every scratch dir this process still holds and return how
+    many there were — the exit hook."""
+    mine = [p for p, pid in _SCRATCH.items() if pid == os.getpid()]
+    release(mine)
+    return len(mine)
 
 
 def _parquet_footer_hash(path: str, size: int) -> str:
@@ -115,7 +176,7 @@ def session_memo(spark: SparkSession, key: tuple, builder, sf_dir: str | None = 
     directory so the key also carries a :func:`sf_fingerprint` of the
     input files (stale-model guard per ADVICE r5). A miss on a rewritten
     input evicts the entry it supersedes (same session, key and input
-    root, older fingerprint), unpersisting any cached frames it holds."""
+    root, older fingerprint) and releases it (:func:`release`)."""
     full = (spark,) + tuple(key)
     if sf_dir is not None:
         full = full + sf_fingerprint(sf_dir)
@@ -138,27 +199,12 @@ def _evict_superseded(full: tuple) -> None:
         and k[-1] != full[-1]
     ]
     for k in stale:
-        _unpersist_value(_SESSION_MEMO.pop(k))
-
-
-def _unpersist_value(value) -> None:
-    """Best-effort unpersist of evicted artifacts: memo entries hold
-    cached DataFrames (dedup edges, pagerank frames) whose executor
-    memory would otherwise outlive the eviction; non-frame artifacts
-    (centroid lists, paths) pass through untouched."""
-    if isinstance(value, DataFrame):
-        try:
-            value.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to free
-    elif isinstance(value, (tuple, list)):
-        for v in value:
-            _unpersist_value(v)
+        release(_SESSION_MEMO.pop(k))
 
 
 def clear_session_memo(spark: SparkSession | None = None) -> int:
     """Evict memoized artifacts — all of them, or only those belonging
-    to ``spark`` — unpersisting any cached DataFrames they hold.
+    to ``spark`` — and release each (:func:`release`).
     Returns the number of entries dropped. Production lifetime note:
     one-pipeline-per-process never needs this; a multi-tenant driver
     that creates/destroys sessions or regenerates inputs mid-process
@@ -167,7 +213,7 @@ def clear_session_memo(spark: SparkSession | None = None) -> int:
         k for k in _SESSION_MEMO if spark is None or (k and k[0] is spark)
     ]
     for k in stale:
-        _unpersist_value(_SESSION_MEMO.pop(k))
+        release(_SESSION_MEMO.pop(k))
     return len(stale)
 
 
@@ -205,8 +251,6 @@ def artifact_root() -> str:
     attacker-planted link to a victim-owned directory would pass a pure
     ownership check while redirecting writes (and ``prune_artifacts``
     deletions) into the victim's files."""
-    import tempfile
-
     root = os.environ.get(ARTIFACT_DIR_ENV) or os.path.join(
         tempfile.gettempdir(), f"nm_artifacts_{os.getuid()}"
     )
@@ -309,8 +353,6 @@ def _publish_staging(staging: str, path: str) -> None:
     by a concurrent winner — an unrelated failure (permissions, ENOSPC
     on metadata) re-raises instead of silently discarding the completed
     build and erroring later on a missing path (ADVICE r10)."""
-    import shutil
-
     try:
         os.rename(staging, path)
     except OSError:
@@ -389,7 +431,6 @@ def prune_artifacts(max_age_days: float = 14.0) -> int:
     builder heartbeats its staging path every 5 minutes
     (``_staging_heartbeat``); only a builder that stopped beating for an
     hour (i.e. crashed) is reaped."""
-    import shutil
     import time
 
     root = artifact_root()
@@ -542,10 +583,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def raw_table_schema(spark: SparkSession, sf_dir: str, name: str):
     """Session-memoized RAW parquet schema of one testdata table — the
     read schema the streaming ops hand to ``streaming.core.staged_stream``
@@ -589,7 +626,7 @@ def tiny_local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     partitions it to ``defaultParallelism`` slices and runs a full
     32-task job per materialization — ~380 ms for a 2-row ledger on
     this host vs ~40 ms for the VALUES rendering (measured r12). Use
-    for LEDGERS and drained-result detaches (bounded row counts, plain
+    for LEDGERS built from Python rows (bounded row counts, plain
     str/bool/int/float/None cells); every cell is cast to its declared
     type, so the schema is exactly ``ddl`` regardless of inference.
 
@@ -635,40 +672,18 @@ def tiny_local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     return spark.sql(f"SELECT * FROM VALUES {tuples} AS t({names})")
 
 
-#: Above this row count :func:`detach_result` stops rendering VALUES SQL
-#: text and hands the rows to ``createDataFrame``: the VALUES rendering's
-#: parse/analysis cost grows linearly with the text, and a plan literal
-#: should encode a LEDGER, never a batch (ADVICE r12 — the per-delta-doc
-#: gate results scale with the corpus). Below it, VALUES skips the
-#: 32-task local-relation job; above it, the job is the cheaper side.
-_DETACH_VALUES_MAX_ROWS = 2000
-
-
 def detach_result(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Materialize a SMALL result frame and re-emit it as a local
-    relation — the detach step every drained/rewritten op runs before
-    removing its temp sink. Bounded-ledger frames (≤
-    ``_DETACH_VALUES_MAX_ROWS``) render as a VALUES relation
-    (:func:`tiny_local_frame`), skipping the 32-task ``createDataFrame``
-    job; anything larger goes through ``createDataFrame`` so the SQL
-    text (and Catalyst parse cost) never scales with the data. Schema
-    is preserved exactly (each cell cast to the source column's type).
-
-    A frame whose optimized plan already IS a local relation (a VALUES
-    result, a driver-side fold) holds its rows in the plan and reads no
-    sink, so it is returned as is — re-rendering it would only repeat
-    the collect and the VALUES parse (~0.1 s for a 160-row drift
-    table)."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() == "LocalRelation":
-        return df
-    rows = [tuple(r) for r in df.collect()]
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+    """Materialize a result frame and re-emit it as a local relation, so
+    that the sink, landing or scratch dir it reads can be removed. One
+    JVM-side copy: the rows are collected into the driver JVM and handed
+    straight back to ``createDataFrame``, so no row crosses py4j into
+    Python, no SQL text is rendered, and the schema is kept exactly,
+    nullability included. The frame must be bounded: its rows live in
+    driver heap for as long as the result does."""
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()
     )
-    if len(rows) > _DETACH_VALUES_MAX_ROWS:
-        return spark.createDataFrame(rows, df.schema)
-    return tiny_local_frame(spark, rows, ddl)
+    return DataFrame(jdf, spark)
 
 
 def land_bounded_frame(df: DataFrame, dir_path: str) -> bool:

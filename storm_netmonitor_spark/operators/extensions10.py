@@ -39,12 +39,10 @@ arithmetic.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..io import load_table, scatter, session_memo
+from ..io import load_table, scatter, scratch, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -163,16 +161,14 @@ def sink_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("event_date") < F.lit(_DEL_WINDOW_END))
     )
     kept = window.filter(F.col("user_id") % _DEL_TOMB_MOD != 0)
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="nm_tdel_"), "events_rewritten"
-    )
-    (
-        kept.repartition("event_date")
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(out)
-    )
-    after_rw = _footer_counts(out)
+    with scratch("nm_tdel_") as out:
+        (
+            kept.repartition("event_date")
+            .write.mode("overwrite")
+            .partitionBy("event_date")
+            .parquet(out)
+        )
+        after_rw = _footer_counts(out)
     LAST_DELETE_IO.clear()
     LAST_DELETE_IO.extend((len(after_rw), len(before)))
     # the per-partition ledger in driver-side python — string date
@@ -188,13 +184,11 @@ def sink_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             action, na = "untouched", nb
         rows.append((date, action, nb, na))
-    result = tiny_local_frame(
+    return tiny_local_frame(
         spark,
         rows,
         "event_date string, action string, n_before bigint, n_after bigint",
     )
-    shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-    return result
 
 # ---------------------------------------------------------------------------
 # dedup_components_retract — label maintenance under deletions

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.stable import dratio, dratio_sql
-from ..io import load_table, session_memo
+from ..io import load_table, scratch_dir, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -304,8 +304,6 @@ def _bf_target_dir(spark: SparkSession, sf_dir: str) -> str:
     event_ids only) — a date-partitioned parquet dir, like any real
     incremental target. The target table is the fixture, not the
     measurement."""
-    import os as _os
-    import tempfile as _tempfile
 
     def stage() -> str:
         e = load_table(spark, sf_dir, "events").withColumn(
@@ -318,9 +316,7 @@ def _bf_target_dir(spark: SparkSession, sf_dir: str) -> str:
             )
             | (F.col("event_id") % 2 == 0)
         )
-        out = _os.path.join(
-            _tempfile.mkdtemp(prefix="nm_bf_tgt_"), "events_target"
-        )
+        out = scratch_dir("nm_bf_tgt_") + "/events_target"
         (
             tgt.repartition("event_date")
             .write.mode("overwrite")

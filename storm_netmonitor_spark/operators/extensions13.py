@@ -42,13 +42,11 @@ boundary anywhere.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dratio_sql
-from ..io import load_table, session_memo
+from ..io import load_table, scratch, scratch_dir, session_memo
 from ..registry import query
 from .extensions11 import (
     _BF_STALE_FROM,
@@ -151,16 +149,6 @@ def sink_backfill_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scans import partitioned_events_frame
 
     src = partitioned_events_frame(spark, sf_dir)
-    out = os.path.join(tempfile.mkdtemp(prefix="nm_bf_apply_"), "applied")
-    (
-        src.filter(F.col("event_date").cast("string").isin(work))
-        .withColumn("event_date", F.col("event_date").cast("string"))
-        .repartition("event_date")
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(out)
-    )
-
     # n_tgt_after read back from the files the apply actually wrote —
     # their parquet FOOTERS hold the authoritative written row counts
     # (O(work dates) driver-side metadata reads; r14 — previously a
@@ -169,16 +157,25 @@ def sink_backfill_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     applied: dict[str, int] = {}
-    for date_dir in sorted(os.listdir(out)):
-        if not date_dir.startswith("event_date="):
-            continue
-        d = os.path.join(out, date_dir)
-        applied[date_dir.split("=", 1)[1]] = sum(
-            pq.read_metadata(os.path.join(d, f)).num_rows
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+    with scratch("nm_bf_apply_") as out:
+        (
+            src.filter(F.col("event_date").cast("string").isin(work))
+            .withColumn("event_date", F.col("event_date").cast("string"))
+            .repartition("event_date")
+            .write.mode("overwrite")
+            .partitionBy("event_date")
+            .parquet(out)
         )
-    result = tiny_local_frame(
+        for date_dir in sorted(os.listdir(out)):
+            if not date_dir.startswith("event_date="):
+                continue
+            d = os.path.join(out, date_dir)
+            applied[date_dir.split("=", 1)[1]] = sum(
+                pq.read_metadata(os.path.join(d, f)).num_rows
+                for f in os.listdir(d)
+                if f.endswith(".parquet")
+            )
+    return tiny_local_frame(
         spark,
         [
             (
@@ -192,8 +189,6 @@ def sink_backfill_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         ledger_ddl,
     )
-    shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -219,9 +214,7 @@ def _hourly_layout_dir(spark: SparkSession, sf_dir: str) -> str:
             "event_type",
             "value",
         )
-        out = os.path.join(
-            tempfile.mkdtemp(prefix="nm_cpt_in_"), "events_hourly"
-        )
+        out = os.path.join(scratch_dir("nm_cpt_in_"), "events_hourly")
         (
             e.repartition("event_date", "hr")
             .write.mode("overwrite")
@@ -339,40 +332,39 @@ def sink_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins = tiny_local_frame(
         spark, bin_rows, "event_date string, hr int, bin_id bigint"
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="nm_cpt_out_"), "compacted")
-    (
-        src.join(F.broadcast(bins), ["event_date", "hr"])
-        .repartition("event_date", "bin_id")
-        .write.mode("overwrite")
-        .partitionBy("event_date", "bin_id")
-        .parquet(out)
-    )
-
     # file-count identity from the REAL output layout and row counts
     # from the written files' footers (both bounded by the plan size —
     # O(bins) directory entries and footer reads, never data)
     max_files = 0
     n_rows_by_bin: dict[tuple[str, int], int] = {}
-    for date_dir in sorted(os.listdir(out)):
-        if not date_dir.startswith("event_date="):
-            continue
-        date = date_dir.split("=", 1)[1]
-        for bin_dir in sorted(os.listdir(os.path.join(out, date_dir))):
-            if not bin_dir.startswith("bin_id="):
+    with scratch("nm_cpt_out_") as out:
+        (
+            src.join(F.broadcast(bins), ["event_date", "hr"])
+            .repartition("event_date", "bin_id")
+            .write.mode("overwrite")
+            .partitionBy("event_date", "bin_id")
+            .parquet(out)
+        )
+        for date_dir in sorted(os.listdir(out)):
+            if not date_dir.startswith("event_date="):
                 continue
-            d = os.path.join(out, date_dir, bin_dir)
-            files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-            max_files = max(max_files, len(files))
-            n_rows_by_bin[(date, int(bin_dir.split("=", 1)[1]))] = sum(
-                pq.read_metadata(os.path.join(d, f)).num_rows for f in files
-            )
+            date = date_dir.split("=", 1)[1]
+            for bin_dir in sorted(os.listdir(os.path.join(out, date_dir))):
+                if not bin_dir.startswith("bin_id="):
+                    continue
+                d = os.path.join(out, date_dir, bin_dir)
+                files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+                max_files = max(max_files, len(files))
+                n_rows_by_bin[(date, int(bin_dir.split("=", 1)[1]))] = sum(
+                    pq.read_metadata(os.path.join(d, f)).num_rows for f in files
+                )
     LAST_COMPACTION_IO.clear()
     LAST_COMPACTION_IO.extend([len(n_rows_by_bin), max_files])
 
     n_inputs: dict[tuple[str, int], int] = {}
     for date, _hr, b in bin_rows:
         n_inputs[(date, b)] = n_inputs.get((date, b), 0) + 1
-    result = tiny_local_frame(
+    return tiny_local_frame(
         spark,
         [
             (date, b, n_inputs[(date, b)], n, 1)
@@ -381,8 +373,6 @@ def sink_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_date string, bin_id bigint, n_input_files bigint, "
         "n_rows bigint, n_files_after bigint",
     )
-    shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -448,21 +438,20 @@ def sink_orphan_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantined = o_obs.join(
         F.broadcast(dep), o_obs["o_custkey"] == dep["k"], "left_semi"
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="nm_quar_"), "quarantine")
-    quarantined.write.mode("overwrite").parquet(out)
+    with scratch("nm_quar_") as out:
+        quarantined.write.mode("overwrite").parquet(out)
 
-    n_total = int(obs.get["n_total"])
-    # quarantined count read back from the written files' parquet
-    # FOOTERS (r14 — the footer-ledger discipline of the two applies:
-    # the distributed count job re-scanned the landing it just wrote)
-    import pyarrow.parquet as pq
+        n_total = int(obs.get["n_total"])
+        # quarantined count read back from the written files' parquet
+        # FOOTERS (r14 — the footer-ledger discipline of the two applies:
+        # the distributed count job re-scanned the landing it just wrote)
+        import pyarrow.parquet as pq
 
-    n_quar = sum(
-        pq.read_metadata(os.path.join(out, f)).num_rows
-        for f in os.listdir(out)
-        if f.endswith(".parquet")
-    )
-    shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+        n_quar = sum(
+            pq.read_metadata(os.path.join(out, f)).num_rows
+            for f in os.listdir(out)
+            if f.endswith(".parquet")
+        )
     # the 2-row ledger is DRIVER-side arithmetic on the two distributed
     # counts — the exact dratio integer formula in python (identical
     # half-away rounding, so the hash matches the SQL twin bit-for-bit;

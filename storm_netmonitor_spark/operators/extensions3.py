@@ -28,7 +28,7 @@ from ..functions.stable import (
     ts_str,
     ts_str_sql,
 )
-from ..io import load_table, session_memo
+from ..io import load_table, scratch, scratch_dir, session_memo
 from ..registry import query
 from .text import _STOP_SQL, _STOPWORDS, _TOKENS_SQL, _tokens
 from .vectors import _dot_arrays, _DOT_SUM_SQL
@@ -631,7 +631,6 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     (user_id, hour-index): both dimensions cluster simultaneously, so
     row-group min/max stats skip on EITHER predicate column."""
     import os
-    import tempfile
 
     def stage() -> str:
         e = load_table(spark, sf_dir, "events")
@@ -643,7 +642,7 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
                 f" + (((hour_idx >> {i}) & 1) << {2 * i})"
             )
         zexpr = " + ".join(terms)
-        out = os.path.join(tempfile.mkdtemp(prefix="nm_zorder_"), "events_z")
+        out = os.path.join(scratch_dir("nm_zorder_"), "events_z")
         (
             e.withColumn(
                 "hour_idx",
@@ -1050,20 +1049,19 @@ def _compacted_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     to 4 right-sized files; returns (compacted_dir, n_small, n_compact)."""
     import glob
     import os
-    import tempfile
 
     def stage() -> tuple[str, int, int]:
         e = load_table(spark, sf_dir, "events")
-        frag = os.path.join(tempfile.mkdtemp(prefix="nm_frag_"), "events_frag")
-        e.repartition(64).write.mode("overwrite").parquet(frag)  # the problem
-        comp = os.path.join(tempfile.mkdtemp(prefix="nm_comp_"), "events_comp")
-        (
-            spark.read.parquet(frag)
-            .repartition(4)  # the fix: read-and-rewrite at target file size
-            .write.mode("overwrite")
-            .parquet(comp)
-        )
-        n_small = len(glob.glob(os.path.join(frag, "*.parquet")))
+        comp = os.path.join(scratch_dir("nm_comp_"), "events_comp")
+        with scratch("nm_frag_") as frag:
+            e.repartition(64).write.mode("overwrite").parquet(frag)  # the problem
+            (
+                spark.read.parquet(frag)
+                .repartition(4)  # the fix: read-and-rewrite at target file size
+                .write.mode("overwrite")
+                .parquet(comp)
+            )
+            n_small = len(glob.glob(os.path.join(frag, "*.parquet")))
         n_comp = len(glob.glob(os.path.join(comp, "*.parquet")))
         return comp, n_small, n_comp
 

@@ -9,7 +9,6 @@ capped per-round check window.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -23,7 +22,7 @@ from ..functions.stable import (
     ts_str,
     ts_str_sql,
 )
-from ..io import load_table, session_memo, sf_fingerprint
+from ..io import load_table, release, scratch_dir, session_memo, sf_fingerprint
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -54,7 +53,7 @@ def source_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
-        d = tempfile.mkdtemp(prefix="nm_jsonl_")
+        d = scratch_dir("nm_jsonl_")
         e.write.mode("overwrite").json(d)
         return d
 
@@ -591,7 +590,8 @@ def _blob_dir(sf_dir: str) -> str:
     process. The oracle factory has no session, so this dir is cached
     per process here instead of through ``io.session_memo``, keyed like
     it on the input fingerprint: a rewritten ``documents.parquet``
-    restages."""
+    restages, and the entry it supersedes (same root, older
+    fingerprint) is dropped and its dir removed."""
     import pyarrow.parquet as pq
 
     key = sf_fingerprint(sf_dir)
@@ -603,7 +603,9 @@ def _blob_dir(sf_dir: str) -> str:
         rows = sorted(
             zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
         )[:_BLOB_N_FILES]
-        d = tempfile.mkdtemp(prefix="nm_blobs_")
+        for old in [k for k in _BLOB_DIR_CACHE if k[0] == key[0]]:
+            release(_BLOB_DIR_CACHE.pop(old))
+        d = scratch_dir("nm_blobs_")
         for did, txt in rows:
             with open(os.path.join(d, f"doc_{did:06d}.bin"), "wb") as fh:
                 fh.write(txt.encode("utf-8"))

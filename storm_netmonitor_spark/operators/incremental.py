@@ -11,12 +11,11 @@ metrics model (SURVEY §0.3).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import davg_sql, dratio, dsum_sql
-from ..io import load_table, session_memo
+from ..io import load_table, scratch_dir, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -70,7 +69,7 @@ def agg_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.to_date("ts")
 
     def stage() -> str:
-        path = os.path.join(tempfile.mkdtemp(prefix="nm_rollup_state_"), "partials")
+        path = os.path.join(scratch_dir("nm_rollup_state_"), "partials")
         _daily_partials(e.where(day < F.lit(_INC_CUTOFF))).write.mode(
             "overwrite"
         ).parquet(path)
@@ -182,7 +181,7 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = li.where(F.col("l_shipdate") >= cut)
 
     def stage() -> str:
-        path = os.path.join(tempfile.mkdtemp(prefix="nm_joinview_state_"), "partials")
+        path = os.path.join(scratch_dir("nm_joinview_state_"), "partials")
         _rev_partials(
             bo.join(bl, bo["o_orderkey"] == bl["l_orderkey"])
         ).write.mode("overwrite").parquet(path)

@@ -17,12 +17,11 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.stable import dround, dround_sql, dsum, dsum_sql, ts_str, ts_str_sql
-from ..io import load_table, session_memo
+from ..io import load_table, scratch_dir, session_memo
 from ..registry import query
 
 
@@ -399,7 +398,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
         # warehouse.dir is static — pin the database location instead so
         # bucketed tables land in a temp dir, never in the repo.
-        loc = tempfile.mkdtemp(prefix="nm_warehouse_")
+        loc = scratch_dir("nm_warehouse_")
         spark.sql(f"CREATE DATABASE IF NOT EXISTS nm_buckets LOCATION '{loc}'")
         for t, k in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
             (

@@ -13,12 +13,11 @@ ballgame.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_sql, ts_str, ts_str_sql
-from ..io import load_table, session_memo
+from ..io import detach_result, load_table, scratch, scratch_dir, session_memo
 from ..registry import query
 
 
@@ -86,9 +85,9 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), dsum("o_totalprice").alias("revenue")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="nm_sink_"), "roundtrip.parquet")
-    agg.write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    with scratch("nm_sink_") as out:
+        agg.write.mode("overwrite").parquet(out)
+        return detach_result(spark, spark.read.parquet(out))
 
 
 @query(
@@ -102,15 +101,14 @@ def sink_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ints/strings are lossless through both text formats, so even the hash
     oracle holds (SURVEY marks this rows-only; we can do better)."""
     n = load_table(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="nm_sink_")
-    csv_path = os.path.join(base, "nation_csv")
-    json_path = os.path.join(base, "nation_json")
-    n.write.mode("overwrite").option("header", True).csv(csv_path)
-    back = spark.read.schema(n.schema).option("header", True).csv(csv_path)
-    back.write.mode("overwrite").json(json_path)
-    return spark.read.schema(n.schema).json(json_path).select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
+    with scratch("nm_sink_") as base:
+        csv_path = os.path.join(base, "nation_csv")
+        json_path = os.path.join(base, "nation_json")
+        n.write.mode("overwrite").option("header", True).csv(csv_path)
+        back = spark.read.schema(n.schema).option("header", True).csv(csv_path)
+        back.write.mode("overwrite").json(json_path)
+        back = spark.read.schema(n.schema).json(json_path)
+        return detach_result(spark, back.select("n_nationkey", "n_name", "n_regionkey"))
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
@@ -121,7 +119,7 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
 
     def stage() -> str:
         e = load_table(spark, sf_dir, "events")
-        out = os.path.join(tempfile.mkdtemp(prefix="nm_partsink_"), "events_by_date")
+        out = os.path.join(scratch_dir("nm_partsink_"), "events_by_date")
         (
             e.withColumn("event_date", F.to_date("ts"))
             .write.mode("overwrite")
@@ -224,7 +222,7 @@ def sorted_layout_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def stage() -> str:
         e = load_table(spark, sf_dir, "events")
-        out = os.path.join(tempfile.mkdtemp(prefix="nm_sorted_"), "events_sorted")
+        out = os.path.join(scratch_dir("nm_sorted_"), "events_sorted")
         (
             e.withColumn("event_date", F.to_date("ts"))
             .repartition("event_date")
@@ -317,7 +315,7 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def stage() -> str:
         e = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-        d = tempfile.mkdtemp(prefix="nm_messy_csv_")
+        d = scratch_dir("nm_messy_csv_")
         # corrupt = drop the user_id column and append junk fields
         lines = e.select(
             F.when(
@@ -370,7 +368,7 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def stage() -> str:
         e = load_table(spark, sf_dir, "events")
-        d = tempfile.mkdtemp(prefix="nm_evolved_")
+        d = scratch_dir("nm_evolved_")
         e.filter(F.col("event_id") % 2 == 0).select("event_id", "event_type").write.parquet(
             os.path.join(d, "old")
         )

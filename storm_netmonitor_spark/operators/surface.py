@@ -14,12 +14,11 @@ and the public Storm metrics model instead (SURVEY §0.3).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dround, dround_sql, dsum, dsum_sql, sketch_ok
-from ..io import load_table, session_memo
+from ..io import load_table, scratch_dir, session_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -52,7 +51,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value", "user_id"
         )
-        d = tempfile.mkdtemp(prefix="nm_orc_")
+        d = scratch_dir("nm_orc_")
         path = os.path.join(d, "events_orc")
         e.write.mode("overwrite").orc(path)
         return path

@@ -168,12 +168,12 @@ def _package_zip() -> str:
     ``--py-files`` artifact a spark-submit deployment would ship."""
     global _PKG_ZIP
     if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
-        import tempfile
         import zipfile
 
+        from .io import scratch_dir
+
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        fd, path = tempfile.mkstemp(prefix="nm_pkg_", suffix=".zip")
-        os.close(fd)
+        path = os.path.join(scratch_dir("nm_pkg_"), "storm_netmonitor_spark.zip")
         with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, dirs, files in os.walk(pkg_dir):
                 dirs[:] = [d for d in dirs if d != "__pycache__"]

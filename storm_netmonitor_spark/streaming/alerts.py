@@ -14,7 +14,6 @@ cluster network monitor exists to do.
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import Iterable
 
 import pandas as pd
@@ -23,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.stable import dround_sql, dsum_sql, ts_str_sql
+from ..io import detach_result, scratch
 from ..operators.extensions4 import _BURN_BUCKET_S, _BURN_FAST_T, _BURN_SLOW_T
 from ..registry import query
 from .core import (
@@ -224,38 +224,38 @@ def sink_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _quarter_stream(spark, sf_dir)
 
-    root = tempfile.mkdtemp(prefix="nm_cdc_state_")
     versions: list[str] = []
+    with scratch("nm_cdc_state_") as root:
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cols = ["user_id", "event_type", "event_id", "ts", "value"]
-        upserts = batch_df.select(*cols)
-        merged = (
-            upserts
-            if not versions
-            else spark.read.parquet(versions[-1]).unionByName(upserts)
-        )
-        w = Window.partitionBy("user_id", "event_type").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        state = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        new_version = os.path.join(root, f"v{batch_id}")
-        state.write.mode("overwrite").parquet(new_version)  # atomic swap
-        versions.append(new_version)
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            cols = ["user_id", "event_type", "event_id", "ts", "value"]
+            upserts = batch_df.select(*cols)
+            merged = (
+                upserts
+                if not versions
+                else spark.read.parquet(versions[-1]).unionByName(upserts)
+            )
+            w = Window.partitionBy("user_id", "event_type").orderBy(
+                F.col("ts").desc(), F.col("event_id").desc()
+            )
+            state = (
+                merged.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .drop("rn")
+            )
+            new_version = os.path.join(root, f"v{batch_id}")
+            state.write.mode("overwrite").parquet(new_version)  # atomic swap
+            versions.append(new_version)
 
-    drain(s, apply_batch)
-
-    return spark.read.parquet(versions[-1]).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        ts_str("ts").alias("last_ts"),
-        "value",
-    )
+        drain(s, apply_batch)
+        state = spark.read.parquet(versions[-1]).select(
+            "user_id",
+            "event_type",
+            "event_id",
+            ts_str("ts").alias("last_ts"),
+            "value",
+        )
+        return detach_result(spark, state)  # O(live keys) rows
 
 
 @query(

@@ -15,11 +15,9 @@ every staged input stream is written by ``stage_stream`` and read by
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import time
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -37,6 +35,8 @@ from ..io import (
     land_bounded_frame,
     landed_rows,
     read_landed_local,
+    scratch,
+    scratch_dir,
     session_memo,
     table_path,
     tiny_local_frame,
@@ -139,7 +139,8 @@ def _started(
 ):
     """Build the writer, start the query and yield it under the per-drain
     confs, which are restored to the session's previous values when the
-    ``with`` block exits, also when the query raises.
+    ``with`` block exits, also when the query raises; so is a fresh
+    ``ckpt_dir()`` made when no ``checkpoint`` is given.
 
     The shuffle width is captured into the query's checkpoint at start,
     so restoring the batch setting afterwards does not affect the drain.
@@ -148,32 +149,33 @@ def _started(
     emission in append mode) buys nothing there; append-mode drains keep
     it: their last rows emit in that batch. The session-wide drain confs
     (``session.RUNTIME_CONFS``) ride ``apply_runtime_confs`` instead."""
-    writer = df.writeStream.outputMode(mode).option(
-        "checkpointLocation", checkpoint or ckpt_dir()
-    )
-    writer = (
-        writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
-    )
-    if query_name is not None:
-        writer = writer.queryName(query_name)
-    if path is not None:
-        writer = writer.option("path", path)
-    spark = df.sparkSession
-    apply_runtime_confs(spark)
-    width = state_partitions or min(
-        STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism
-    )
-    scoped = {_SHUFFLE_PARTITIONS: str(width)}
-    if mode == "complete":
-        scoped[_NO_DATA_BATCHES] = "false"
-    prev = {k: spark.conf.get(k) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
-        yield writer.trigger(**trigger).start()
-    finally:
-        for k, v in prev.items():
+    with nullcontext(checkpoint) if checkpoint else ckpt_dir() as checkpoint:
+        writer = df.writeStream.outputMode(mode).option(
+            "checkpointLocation", checkpoint
+        )
+        writer = (
+            writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
+        )
+        if query_name is not None:
+            writer = writer.queryName(query_name)
+        if path is not None:
+            writer = writer.option("path", path)
+        spark = df.sparkSession
+        apply_runtime_confs(spark)
+        width = state_partitions or min(
+            STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism
+        )
+        scoped = {_SHUFFLE_PARTITIONS: str(width)}
+        if mode == "complete":
+            scoped[_NO_DATA_BATCHES] = "false"
+        prev = {k: spark.conf.get(k) for k in scoped}
+        for k, v in scoped.items():
             spark.conf.set(k, v)
+        try:
+            yield writer.trigger(**trigger).start()
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
 
 def drain(
@@ -192,8 +194,9 @@ def drain(
     ``sink`` is a format name (``memory``/``parquet``/``noop``; the memory
     sink takes ``query_name``, file sinks take ``path``) or a
     ``foreachBatch`` function. ``checkpoint`` defaults to a fresh
-    throwaway ``ckpt_dir()``; a caller that restarts a query passes the
-    same location to every lifecycle. ``state_partitions`` overrides the
+    ``ckpt_dir()``, removed when the drain ends, also when it raises; a
+    caller that restarts a query passes the same location to every
+    lifecycle, and that one stays. ``state_partitions`` overrides the
     default state-store width, ``min(STREAM_STATE_PARTITIONS,
     defaultParallelism)``, for this drain. The default puts one state
     partition on each task slot (4-slot host, 8 -> 4: the benchmark's
@@ -244,16 +247,13 @@ def drain_partials(
     python on the driver. ``walls``, if given, is cleared and receives
     one wall (seconds) per batch that landed."""
     spark = df.sparkSession
-    out_dir = tempfile.mkdtemp(prefix="nm_partials_")
     if walls is not None:
         walls.clear()
-    try:
+    with scratch("nm_partials_") as out_dir:
         drain(df, _landing_sink(out_dir, per_batch, bounded, walls))
         return detach_result(
             spark, fold(_read_landed(spark, out_dir, ddl, bounded))
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def _landing_sink(out_dir: str, per_batch, bounded: bool, walls):
@@ -309,18 +309,20 @@ def cached_stream_df(spark: SparkSession, key: tuple, builder) -> DataFrame:
     plan's source SCHEMA is data-derived (ns-vs-µs ts unit from the
     parquet footer), so a mid-session testdata regeneration must rebuild
     the plan, not re-drain a stale schema."""
-    from ..io import session_memo
-
     sf_dir = key[-1] if key and isinstance(key[-1], str) else None
     return session_memo(spark, ("stream_df",) + key, builder, sf_dir=sf_dir)
 
 
-def ckpt_dir() -> str:
-    """Fresh throwaway checkpoint dir — tmpfs when the platform has it
-    (checkpoint I/O is fsync-bound metadata; a deterministic drain never
-    needs it to survive reboot). Production passes a durable location."""
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    return tempfile.mkdtemp(prefix="nm_ckpt_", dir=base)
+_CKPT_BASE = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+
+
+def ckpt_dir():
+    """A fresh throwaway checkpoint dir, as a ``with`` block that removes
+    it — tmpfs when the platform has it (checkpoint I/O is fsync-bound
+    metadata; a deterministic drain never needs it to survive reboot). A
+    caller that restarts a query holds one open across its lifecycles.
+    Production passes a durable location."""
+    return scratch("nm_ckpt_", _CKPT_BASE)
 
 
 def events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -329,7 +331,7 @@ def events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     follows a rewritten file, so the dir needs no input fingerprint)."""
 
     def link() -> str:
-        d = tempfile.mkdtemp(prefix="nm_stream_src_")
+        d = scratch_dir("nm_stream_src_")
         os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
         return d
 
@@ -354,7 +356,7 @@ def stage_stream(spark: SparkSession, key: tuple, sf_dir: str, parts) -> str:
     def write() -> str:
         import pyarrow.parquet as pq
 
-        d = tempfile.mkdtemp(prefix=f"nm_{key[0]}_")
+        d = scratch_dir(f"nm_{key[0]}_")
         for i, t in enumerate(parts()):
             f = os.path.join(d, f"part-{i:05d}.parquet")
             pq.write_table(t, f)
@@ -420,12 +422,20 @@ def drain_to_memory(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into an
-    in-memory sink; return the final result as a batch DataFrame.
-
-    Checkpoints go to a fresh temp dir — never into the repo."""
+    in-memory sink and return the final result detached: the call leaves
+    no sink and no checkpoint behind (``detach_sink``)."""
     name = "nm_mem_" + uuid.uuid4().hex[:10]
     drain(df, "memory", mode, query_name=name, state_partitions=state_partitions)
-    return df.sparkSession.table(name)
+    return detach_sink(df.sparkSession, name)
+
+
+def detach_sink(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink ``name`` as a detached result
+    (``io.detach_result``); the sink is dropped, also on raise."""
+    try:
+        return detach_result(spark, spark.table(name))
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def drain_to_memory_until(
@@ -439,9 +449,9 @@ def drain_to_memory_until(
     ``availableNow``'s drain planning — a single micro-batch is captured —
     so bounded custom streams are drained by watching the committed offset
     instead. ``lastProgress`` only ever reports COMPLETED batches, so once
-    ``done`` sees the final offset the sink already holds its output."""
+    ``done`` sees the final offset the sink already holds its output,
+    which is returned detached (``detach_sink``)."""
     import ast
-    import time
 
     name = "nm_mem_" + uuid.uuid4().hex[:10]
     with _started(
@@ -468,4 +478,4 @@ def drain_to_memory_until(
         finally:
             q.stop()
             q.awaitTermination()
-    return df.sparkSession.table(name)
+    return detach_sink(df.sparkSession, name)

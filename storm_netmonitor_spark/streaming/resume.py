@@ -24,14 +24,14 @@ Two registered ops, two state surfaces:
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_sql
+from ..io import detach_result, scratch
 from ..registry import query
-from .core import ckpt_dir, drain, events_stream, stage_stream
+from .core import ckpt_dir, detach_sink, drain, events_stream, stage_stream
 from .stateful import (
     _COUNTER_OUT,
     _COUNTER_STATE,
@@ -72,39 +72,39 @@ def _two_phase_drain(
     offset-log audit that stops a silent full recompute from
     masquerading as a resume."""
     (half0, n_first), (half1, n_second) = _staged_halves(spark, sf_dir)
-    run_dir = tempfile.mkdtemp(prefix="nm_resume_src_")
-    os.symlink(half0, os.path.join(run_dir, "half0.parquet"))
-    ckpt = ckpt_dir()  # ONE checkpoint, shared by both query lifecycles
-
-    agg = build_agg(events_stream(spark, sf_dir, source_dir=run_dir,
-                                  columns=columns))
-
-    def run(phase: str) -> int:
-        sink, query_name = sink_for(phase)
-        q = drain(
-            agg,
-            sink,
-            mode,
-            query_name=query_name,
-            checkpoint=ckpt,
-            state_partitions=state_partitions,
+    # ONE checkpoint, shared by both query lifecycles
+    with scratch("nm_resume_src_") as run_dir, ckpt_dir() as ckpt:
+        os.symlink(half0, os.path.join(run_dir, "half0.parquet"))
+        agg = build_agg(
+            events_stream(spark, sf_dir, source_dir=run_dir, columns=columns)
         )
-        return sum(int(p["numInputRows"]) for p in q.recentProgress)
 
-    got_first = run("p1")
-    if got_first != n_first:
-        raise RuntimeError(
-            f"phase 1 ingested {got_first} rows, staged half has {n_first}"
-        )
-    # second half "arrives"; the restarted query must pick up ONLY it
-    os.symlink(half1, os.path.join(run_dir, "half1.parquet"))
-    got_second = run("p2")
-    if got_second != n_second:
-        raise RuntimeError(
-            "resume integrity violated: phase 2 ingested "
-            f"{got_second} rows, expected exactly the second half "
-            f"({n_second}) — offset log was not honored"
-        )
+        def run(phase: str) -> int:
+            sink, query_name = sink_for(phase)
+            q = drain(
+                agg,
+                sink,
+                mode,
+                query_name=query_name,
+                checkpoint=ckpt,
+                state_partitions=state_partitions,
+            )
+            return sum(int(p["numInputRows"]) for p in q.recentProgress)
+
+        got_first = run("p1")
+        if got_first != n_first:
+            raise RuntimeError(
+                f"phase 1 ingested {got_first} rows, staged half has {n_first}"
+            )
+        # second half "arrives"; the restarted query must pick up ONLY it
+        os.symlink(half1, os.path.join(run_dir, "half1.parquet"))
+        got_second = run("p2")
+        if got_second != n_second:
+            raise RuntimeError(
+                "resume integrity violated: phase 2 ingested "
+                f"{got_second} rows, expected exactly the second half "
+                f"({n_second}) — offset log was not honored"
+            )
 
 
 @query(
@@ -143,7 +143,8 @@ def stream_resume_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, build, mode="complete",
         columns=("event_type", "value"), sink_for=sink_for,
     )
-    return spark.table(names["p2"])
+    spark.catalog.dropTempView(names["p1"])
+    return detach_sink(spark, names["p2"])
 
 
 @query(
@@ -181,22 +182,23 @@ def stream_resume_python_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    emissions = tempfile.mkdtemp(prefix="nm_resume_emit_")
+    with scratch("nm_resume_emit_") as emissions:
 
-    def sink_for(phase: str):
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(emissions, f"phase={phase}", f"batch={batch_id}")
-            )
+        def sink_for(phase: str):
+            def sink(batch_df: DataFrame, batch_id: int) -> None:
+                batch_df.write.mode("overwrite").parquet(
+                    os.path.join(emissions, f"phase={phase}", f"batch={batch_id}")
+                )
 
-        return sink, None
+            return sink, None
 
-    _two_phase_drain(
-        spark, sf_dir, build, mode="update",
-        columns=("user_id", "value"), sink_for=sink_for,
-    )
-    both = spark.read.parquet(os.path.join(emissions, "*", "*"))
-    return both.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("total_value", "n_events").alias("total_value"),
-    )
+        _two_phase_drain(
+            spark, sf_dir, build, mode="update",
+            columns=("user_id", "value"), sink_for=sink_for,
+        )
+        both = spark.read.parquet(os.path.join(emissions, "*", "*"))
+        final = both.groupBy("user_id").agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("total_value", "n_events").alias("total_value"),
+        )
+        return detach_result(spark, final)

@@ -38,7 +38,6 @@ to a StatefulProcessor subclass is mechanical when the dependency exists.
 from __future__ import annotations
 
 import os
-import tempfile
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterable
 
@@ -54,7 +53,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.stable import dsum_sql, ts_str, ts_str_sql
-from ..io import table_path
+from ..io import detach_result, scratch, table_path
 from ..registry import query
 from .core import drain, drain_to_memory, stage_stream, staged_stream
 
@@ -496,21 +495,21 @@ def sink_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out_dir = tempfile.mkdtemp(prefix="nm_stream_parquet_")
-    drain(
-        agg.select(
-            ts_str(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-        ),
-        "parquet",
-        path=out_dir,
-    )
-    back = spark.read.schema(
-        "window_start string, event_type string, n_events long"
-    ).parquet(out_dir)
-    # the sentinel window never closes → never written; nothing to filter
-    return back
+    with scratch("nm_stream_parquet_") as out_dir:
+        drain(
+            agg.select(
+                ts_str(F.col("w.start")).alias("window_start"),
+                "event_type",
+                "n_events",
+            ),
+            "parquet",
+            path=out_dir,
+        )
+        back = spark.read.schema(
+            "window_start string, event_type string, n_events long"
+        ).parquet(out_dir)
+        # the sentinel window never closes → never written; nothing to filter
+        return detach_result(spark, back)
 
 # ---------------------------------------------------------------------------
 # stream_stream_left_join

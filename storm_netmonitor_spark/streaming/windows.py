@@ -222,27 +222,28 @@ def sink_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink (NM: push aggregates to a REST collector): the
     callback receives each micro-batch result; the last complete-mode batch
     is the final answer, re-exposed as a DataFrame."""
-    import tempfile
+    from ..io import detach_result, scratch
 
     s = events_stream(spark, sf_dir, columns=("event_type",))
     agg = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
-    out_root = tempfile.mkdtemp(prefix="nm_fe_batches_")
     batch_dirs: list[str] = []
+    with scratch("nm_fe_batches_") as out_root:
 
-    def push_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # stands in for a push to a collector endpoint — the batch is
-        # written executor-side (distributed parquet write), never
-        # collected to the driver
-        d = f"{out_root}/batch_{batch_id}"
-        batch_df.write.mode("overwrite").parquet(d)
-        batch_dirs.append(d)
+        def push_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # stands in for a push to a collector endpoint — the batch is
+            # written executor-side (distributed parquet write), never
+            # collected to the driver
+            d = f"{out_root}/batch_{batch_id}"
+            batch_df.write.mode("overwrite").parquet(d)
+            batch_dirs.append(d)
 
-    drain(agg, push_batch, "complete")
-    # complete mode: the last batch carries the full final aggregate
-    return spark.read.parquet(batch_dirs[-1]).select(
-        "event_type", F.col("n_events").cast("long").alias("n_events")
-    )
+        drain(agg, push_batch, "complete")
+        # complete mode: the last batch carries the full final aggregate
+        final = spark.read.parquet(batch_dirs[-1]).select(
+            "event_type", F.col("n_events").cast("long").alias("n_events")
+        )
+        return detach_result(spark, final)
 
 
 @query(
@@ -260,12 +261,10 @@ def source_stream_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matched against the parquet batch oracle — proving type fidelity
     through the text format (timestamps via ISO strings, doubles via
     shortest-repr round-trip)."""
-    import tempfile
-
-    from ..io import load_table, session_memo
+    from ..io import load_table, scratch_dir, session_memo
 
     def stage() -> str:
-        d = tempfile.mkdtemp(prefix="nm_csv_src_")
+        d = scratch_dir("nm_csv_src_")
         (
             load_table(spark, sf_dir, "events")
             .select(

@@ -6,7 +6,9 @@ per task slot, ``min(STREAM_STATE_PARTITIONS, defaultParallelism)``,
 unless the op passes ``state_partitions``, and runs under the
 session-wide drain confs, whichever op drains first in a session; the
 per-drain confs it scopes are restored to the session's previous values
-afterwards, also when the query fails. A partials fold counts a retried
+afterwards, also when the query fails. A drain removes the checkpoint it
+made, also when the query fails, and keeps one its caller passed; a
+memory-sink drain also drops its sink. A partials fold counts a retried
 batch once, reads an all-empty stream as an empty frame typed by its
 ddl, and deletes its landings also when the fold fails.
 """
@@ -15,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import tempfile
 
 import pyarrow as pa
@@ -25,6 +26,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from storm_netmonitor_spark.io import scratch_dir
 from storm_netmonitor_spark.session import RUNTIME_CONFS, apply_runtime_confs
 from storm_netmonitor_spark.streaming import core
 from storm_netmonitor_spark.streaming.core import (
@@ -32,6 +34,7 @@ from storm_netmonitor_spark.streaming.core import (
     ckpt_dir,
     drain,
     drain_partials,
+    drain_to_memory,
 )
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
@@ -44,7 +47,7 @@ _DRAIN_CONF_KEYS = (
 
 
 def _keyed_stream(session):
-    d = tempfile.mkdtemp(prefix="nm_drain_src_")
+    d = scratch_dir("nm_drain_src_")
     pq.write_table(
         pa.table({"k": ["a", "b", "a", "c"], "v": [1, 2, 3, 4]}),
         os.path.join(d, "p0.parquet"),
@@ -72,11 +75,11 @@ def test_first_drain_in_fresh_session_is_state_sized_and_drain_tuned(spark):
             {k: batch_df.sparkSession.conf.get(k) for k in _DRAIN_CONF_KEYS}
         )
 
-    ckpt = ckpt_dir()
-    drain(_keyed_stream(fresh), fold, "complete", checkpoint=ckpt)
-    with open(os.path.join(ckpt, "offsets", "0")) as f:
-        # line 0 is the log version, line 1 the batch metadata
-        meta = json.loads(f.read().splitlines()[1])
+    with ckpt_dir() as ckpt:
+        drain(_keyed_stream(fresh), fold, "complete", checkpoint=ckpt)
+        with open(os.path.join(ckpt, "offsets", "0")) as f:
+            # line 0 is the log version, line 1 the batch metadata
+            meta = json.loads(f.read().splitlines()[1])
     slots = fresh.sparkContext.defaultParallelism
     assert meta["conf"][_SHUFFLE] == str(min(STREAM_STATE_PARTITIONS, slots))
     # Spark's offset-log metadata records only its own fixed conf set, so
@@ -92,16 +95,15 @@ def test_default_state_width_is_capped_by_task_slots(spark, monkeypatch):
     below = max(1, slots - 1)
     for bound, want in ((slots + 4, slots), (below, below)):
         monkeypatch.setattr(core, "STREAM_STATE_PARTITIONS", bound)
-        ckpt = ckpt_dir()
-        drain(
-            _keyed_stream(spark),
-            lambda batch_df, batch_id: batch_df.count(),
-            "complete",
-            checkpoint=ckpt,
-        )
-        with open(os.path.join(ckpt, "offsets", "0")) as f:
-            meta = json.loads(f.read().splitlines()[1])
-        shutil.rmtree(ckpt, ignore_errors=True)
+        with ckpt_dir() as ckpt:
+            drain(
+                _keyed_stream(spark),
+                lambda batch_df, batch_id: batch_df.count(),
+                "complete",
+                checkpoint=ckpt,
+            )
+            with open(os.path.join(ckpt, "offsets", "0")) as f:
+                meta = json.loads(f.read().splitlines()[1])
         assert meta["conf"][_SHUFFLE] == str(want), bound
 
 
@@ -131,8 +133,57 @@ def test_drain_restores_scoped_confs(spark, raises):
     assert fresh.conf.get(_NO_DATA) == "false"
 
 
+def _ckpt_dirs() -> set[str]:
+    """Throwaway checkpoint dirs on tmpfs and in the temp dir."""
+    roots = [r for r in ("/dev/shm", tempfile.gettempdir()) if os.path.isdir(r)]
+    return {
+        os.path.join(r, n) for r in roots for n in os.listdir(r)
+        if n.startswith("nm_ckpt_")
+    }
+
+
+def _sink_tables(session) -> set[str]:
+    return {
+        t.name for t in session.catalog.listTables()
+        if t.name.startswith("nm_mem_")
+    }
+
+
+def test_drain_to_memory_leaves_only_its_result(spark):
+    """The result is detached: the memory sink is dropped from the
+    catalog and the drain's checkpoint removed, and the rows survive."""
+    ckpts, sinks = _ckpt_dirs(), _sink_tables(spark)
+    out = drain_to_memory(_keyed_stream(spark), mode="complete")
+    assert sorted(map(tuple, out.collect())) == [("a", 4), ("b", 2), ("c", 4)]
+    assert _sink_tables(spark) - sinks == set()
+    assert _ckpt_dirs() - ckpts == set()
+
+
+def test_caller_checkpoint_survives_its_drain(spark, tmp_path):
+    """A checkpoint the caller passed outlives the drain (a restarted
+    query resumes from it); one the drain made does not."""
+    ckpts = _ckpt_dirs()
+    ckpt = str(tmp_path / "ckpt")
+    count = lambda batch_df, batch_id: batch_df.count()  # noqa: E731
+    drain(_keyed_stream(spark), count, "complete", checkpoint=ckpt)
+    assert os.path.isfile(os.path.join(ckpt, "offsets", "0"))
+    drain(_keyed_stream(spark), count, "complete")
+    assert _ckpt_dirs() - ckpts == set()
+
+
+def test_failing_drain_removes_its_checkpoint(spark):
+    ckpts = _ckpt_dirs()
+
+    def fold(batch_df, batch_id):
+        raise RuntimeError("sink failed")
+
+    with pytest.raises(StreamingQueryException, match="sink failed"):
+        drain(_keyed_stream(spark), fold, "complete")
+    assert _ckpt_dirs() - ckpts == set()
+
+
 def _source_dir(table: pa.Table) -> str:
-    d = tempfile.mkdtemp(prefix="nm_fold_src_")
+    d = scratch_dir("nm_fold_src_")
     pq.write_table(table, os.path.join(d, "p0.parquet"))
     return d
 
@@ -146,7 +197,7 @@ def test_drain_partials_counts_a_retried_batch_once(spark, bounded):
     """foreachBatch is at-least-once: a replayed batch_id must replace its
     own landing. (An append-mode landing, as stream_incremental_rollup
     used to write, counts the replayed batch twice.)"""
-    out = tempfile.mkdtemp(prefix="nm_retry_landing_")
+    out = scratch_dir("nm_retry_landing_")
     sink = core._landing_sink(out, _count_by_k, bounded, None)
     batch = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
     sink(batch, 0)
@@ -167,7 +218,7 @@ def test_drain_partials_deletes_its_landings_when_the_fold_raises(
         made.append(mkdtemp(*args, **kwargs))
         return made[-1]
 
-    monkeypatch.setattr(core.tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
 
     def landing_dir() -> str:
         [out] = [
@@ -210,7 +261,7 @@ def test_drain_partials_over_an_all_empty_stream(spark, bounded):
     must run clean."""
     for ddl, key in _GATE_LANDINGS:
         schema = spark.createDataFrame([], ddl).schema
-        no_batch = tempfile.mkdtemp(prefix="nm_fold_src_")
+        no_batch = scratch_dir("nm_fold_src_")
         zero_rows = _source_dir(
             pa.table(
                 {

@@ -163,10 +163,10 @@ def test_compaction_apply_plan_shapes(spark):
     struct<>`` (zero data columns deserialized from the compacted
     layout)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from storm_netmonitor_spark.io import scratch_dir
     from storm_netmonitor_spark.operators import extensions13 as e13
 
     src = spark.read.parquet(e13._hourly_layout_dir(spark, SF)).select(
@@ -189,7 +189,7 @@ def test_compaction_apply_plan_shapes(spark):
     assert "hashpartitioning(event_date" in wtxt
     assert "RoundRobinPartitioning" not in wtxt
 
-    out = os.path.join(tempfile.mkdtemp(prefix="nm_cpt_plan_"), "c")
+    out = os.path.join(scratch_dir("nm_cpt_plan_"), "c")
     try:
         routed.write.mode("overwrite").partitionBy(
             "event_date", "bin_id"

@@ -183,14 +183,13 @@ def test_read_landed_tolerates_an_all_empty_stream(spark):
     so an all-empty stream leaves NO batch_id=* directory — the
     read-back must produce the empty ledger frame (right schema,
     foldable), executor-side and bounded alike, not PATH_NOT_FOUND."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from storm_netmonitor_spark.io import scratch_dir
     from storm_netmonitor_spark.streaming.core import _read_landed
 
     for bounded in (False, True):
-        d = tempfile.mkdtemp(prefix="nm_empty_landing_")
+        d = scratch_dir("nm_empty_landing_")
         df = _read_landed(
             spark, d, "source string, n_tokens long, n_covered_tokens long", bounded
         )

@@ -1,8 +1,8 @@
-"""Unit coverage for the io-layer local-relation helpers — the three
-ADVICE r12 traps: non-finite doubles rendered as bare ``nan``/``inf``
-tokens (which Spark SQL parses as column references), comma-bearing
-types sheared by the naive DDL split, and ``detach_result`` VALUES text
-growing linearly with a corpus-scaling frame."""
+"""Unit coverage for the io-layer local-relation helpers: the two
+ADVICE r12 traps of ``tiny_local_frame`` (non-finite doubles rendered
+as bare ``nan``/``inf`` tokens, which Spark SQL parses as column
+references, and comma-bearing types sheared by the naive DDL split),
+and ``detach_result``'s exact local copy."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import math
 
 import pytest
 
-from storm_netmonitor_spark.io import (
-    _DETACH_VALUES_MAX_ROWS,
-    detach_result,
-    tiny_local_frame,
-)
+from storm_netmonitor_spark.io import detach_result, tiny_local_frame
 
 
 @pytest.mark.fast
@@ -56,35 +52,36 @@ def test_tiny_local_frame_comma_bearing_types(spark):
     assert row["d"] == Decimal("12.34") and row["xs"] == [1, 2, 3]
 
 
-@pytest.mark.fast
-def test_detach_result_small_frame_is_values_relation(spark):
-    """A bounded ledger detaches as a VALUES local relation — no scan
-    node, schema preserved exactly."""
-    src = spark.range(5).selectExpr(
-        "id AS k", "CAST(id * 1.5 AS double) AS v"
-    )
-    out = detach_result(spark, src)
-    assert out.schema == src.schema
-    assert sorted(tuple(r) for r in out.collect()) == sorted(
-        tuple(r) for r in src.collect()
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan" not in plan or "LocalTableScan" in plan
+#: One column per type family a detach must keep exactly, nullability
+#: included: nested types, decimals, timestamps, nulls and NaN.
+_DETACH_COLUMNS = (
+    "id AS k",
+    "CAST(id * 1.5 AS double) AS v",
+    "CAST(id AS string) AS s",
+    "CAST(id AS decimal(28,6)) AS dec",
+    "array(id, CAST(NULL AS bigint)) AS xs",
+    "named_struct('a', id, 'b', CAST(id AS string)) AS st",
+    "timestamp_micros(id * 1000003) AS ts",
+    "CAST(NULL AS string) AS nothing",
+    "CAST('NaN' AS double) AS nan",
+)
 
 
 @pytest.mark.fast
-def test_detach_result_large_frame_avoids_values_text(spark):
-    """Above the ledger bound the detach must NOT render per-row SQL
-    text (plan-literal size would scale with the data) — it goes
-    through createDataFrame, values and schema intact."""
-    n = _DETACH_VALUES_MAX_ROWS + 500
-    src = spark.range(n).selectExpr("id AS k", "CAST(id AS string) AS s")
+@pytest.mark.parametrize("n", [0, 5, 2500])
+def test_detach_result_is_an_exact_local_copy(spark, n):
+    """A detach keeps the schema exactly and every row, and its plan is a
+    local relation: nothing it returns reads the source any more."""
+    src = spark.range(n).selectExpr(*_DETACH_COLUMNS)
     out = detach_result(spark, src)
     assert out.schema == src.schema
-    assert out.count() == n
-    # spot-check boundary rows survived the round-trip
-    got = {r["k"]: r["s"] for r in out.filter(f"k IN (0, {n - 1})").collect()}
-    assert got == {0: "0", n - 1: str(n - 1)}
+    assert [f.nullable for f in out.schema.fields] == [
+        f.nullable for f in src.schema.fields
+    ]
+    # repr() compares NaN cells equal
+    assert sorted(map(repr, out.collect())) == sorted(map(repr, src.collect()))
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 @pytest.mark.fast

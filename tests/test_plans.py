@@ -930,14 +930,14 @@ def test_pagerank_broadcast_guard(spark, monkeypatch):
         # second cached copy of the edges frame — otherwise it holds
         # executor memory for the rest of the shared-session suite
         # (ADVICE r8)
-        from storm_netmonitor_spark.io import _SESSION_MEMO, _unpersist_value
+        from storm_netmonitor_spark.io import _SESSION_MEMO, release
 
         for key in [
             k
             for k in _SESSION_MEMO
             if k and k[0] is spark and "pagerank_frames" in k and False in k
         ]:
-            _unpersist_value(_SESSION_MEMO.pop(key))
+            release(_SESSION_MEMO.pop(key))
     assert rows_small == rows_big
 
 

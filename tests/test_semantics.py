@@ -9,12 +9,12 @@ of the exact top-k, HLL must stay inside its error bound.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from storm_netmonitor_spark.io import scratch_dir
 from storm_netmonitor_spark.registry import QUERIES
 
 from .conftest import SF_CORRECT
@@ -37,7 +37,7 @@ def planted_docs_dir():
     """A documents table with one planted near-dup pair (0,1) and four
     mutually-unrelated docs — staged so operators load it via sf_dir."""
     texts = [BASE, NEAR_DUP, *UNRELATED]
-    d = tempfile.mkdtemp(prefix="nm_planted_")
+    d = scratch_dir("nm_planted_")
     t = pa.table(
         {
             "doc_id": pa.array(range(len(texts)), pa.int64()),
@@ -144,11 +144,11 @@ def test_heavy_hitters_finds_planted_skew(spark):
     summaries and be reported with its EXACT count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import tempfile, os
+    import os
 
     n, hot, hot_share = 20_000, 7, 6_000
     uids = ([hot] * hot_share) + [1000 + i % 400 for i in range(n - hot_share)]
-    d = tempfile.mkdtemp(prefix="nm_skew_")
+    d = scratch_dir("nm_skew_")
     t = pa.table(
         {
             "event_id": pa.array(range(n), pa.int64()),
@@ -173,7 +173,7 @@ def test_heavy_hitters_eviction_regime_keeps_hot_key(spark):
     the no-eviction fast path.)"""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import tempfile, os
+    import os
 
     from storm_netmonitor_spark.operators.aggregations import _MG_CAPACITY
 
@@ -182,7 +182,7 @@ def test_heavy_hitters_eviction_regime_keeps_hot_key(spark):
     uids = ([hot] * hot_share) + [
         100_000 + i % n_keys for i in range(n - hot_share)
     ]
-    d = tempfile.mkdtemp(prefix="nm_skew_evict_")
+    d = scratch_dir("nm_skew_evict_")
     t = pa.table(
         {
             "event_id": pa.array(range(n), pa.int64()),
@@ -204,13 +204,13 @@ def test_clean_html_strips_planted_markup(spark):
     the hand-computed post-strip length."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import tempfile, os
+    import os
 
     raw = "<p>hello <b>world</b></p> see https://example.com/x now"
     # strip tags -> ' hello  world  see https://example.com/x now' (runs
     # collapsed, trimmed) = 'hello world see https://example.com/x now'
     want_clean = "hello world see https://example.com/x now"
-    d = tempfile.mkdtemp(prefix="nm_html_")
+    d = scratch_dir("nm_html_")
     t = pa.table(
         {
             "doc_id": pa.array([0], pa.int64()),
@@ -487,7 +487,7 @@ def test_stream_gap_alert_state_crosses_batches(spark):
     from storm_netmonitor_spark.streaming.stateful import _read_events_arrow
 
     t = _read_events_arrow(SF_CORRECT)
-    d = tempfile.mkdtemp(prefix="nm_gap_parts_")
+    d = scratch_dir("nm_gap_parts_")
     step = (t.num_rows + 3) // 4
     for i in range(4):
         f = os.path.join(d, f"p{i}.parquet")

@@ -127,31 +127,44 @@ def test_staged_streams_follow_a_rewritten_input(tmp_path, monkeypatch):
 
 
 @pytest.mark.fast
-def test_restage_evicts_the_superseded_entry(spark, tmp_path):
+def test_restage_evicts_the_superseded_entry(spark, tmp_path, monkeypatch):
     """A miss on a rewritten input replaces the entry for the old files
-    instead of keeping both: one live entry per key, and the old entry's
-    cached frame is unpersisted."""
-    from storm_netmonitor_spark import io as nmio
+    instead of keeping both: one live entry per key, the old entry's
+    cached frame is unpersisted and its staged dir removed."""
+    import tempfile
 
-    d = str(tmp_path)
+    import pyarrow as pa
+
+    from storm_netmonitor_spark import io as nmio
+    from storm_netmonitor_spark.streaming.core import stage_stream
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    # staged dirs land under tmp_path, not the shared temp dir
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     _write(d, "events.parquet", b"v1")
     s = _Session()
+    parts = lambda: [pa.table({"x": [1]})]  # noqa: E731
     old = session_memo(s, ("edges",), lambda: spark.range(3).cache(), sf_dir=d)
     old.count()
+    old_dir = stage_stream(s, ("evict",), d, parts)
     _write(d, "events.parquet", b"v2-longer")
     new = session_memo(s, ("edges",), lambda: spark.range(4).cache(), sf_dir=d)
+    new_dir = stage_stream(s, ("evict",), d, parts)
     live = [k for k in nmio._SESSION_MEMO if k[0] is s and k[1] == "edges"]
     assert len(live) == 1 and nmio._SESSION_MEMO[live[0]] is new
     assert not old.is_cached
     assert not old.storageLevel.useMemory and not old.storageLevel.useDisk
+    assert not os.path.exists(old_dir) and os.listdir(new_dir)
     clear_session_memo(s)
+    assert not os.path.exists(new_dir)
 
 
 @pytest.mark.fast
 def test_blob_dir_follows_a_rewritten_documents_file(tmp_path, monkeypatch):
     """The binary-files source stages the first documents by doc_id; a
     rewritten ``documents.parquet`` restages from the new file instead of
-    serving the old blobs."""
+    serving the old blobs, and the old blobs' dir is removed."""
     import shutil
     import tempfile
 
@@ -177,11 +190,14 @@ def test_blob_dir_follows_a_rewritten_documents_file(tmp_path, monkeypatch):
     assert sorted(os.listdir(extras._blob_dir(d))) == names(
         t.column("doc_id").to_pylist()
     )
+    old_dir = extras._blob_dir(d)
     kept = t.filter(pc.greater_equal(t.column("doc_id"), 100))
     pq.write_table(kept, docs)
     assert sorted(os.listdir(extras._blob_dir(d))) == names(
         kept.column("doc_id").to_pylist()
     )
+    # the superseded entry and its dir are gone
+    assert len(extras._BLOB_DIR_CACHE) == 1 and not os.path.exists(old_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -47,8 +47,8 @@ _AUDITED_COLLECT_SITES = {
     "operators/extensions3.py": {"scan_cache_reuse": 1, "pagerank_over": 1},
     "operators/extensions5.py": {"hamming_topk": 1, "ppl_tercile_buckets_over": 2},
     # (r12: the post-drain result detaches across the streaming ops
-    # moved into io.detach_result — a VALUES local relation instead of
-    # the 32-task createDataFrame job)
+    # moved into io.detach_result — one JVM-side copy into a local
+    # relation, no rows through Python)
     "operators/extensions6.py": {
         "text_minhash_index_merge": 1,
     },
@@ -123,7 +123,7 @@ _AUDITED_COLLECT_SITES = {
     # sink_targeted_delete result-detach precedent); the quarantine
     # collects only its 2-row ledger
     # (r12 tuning: the ledger/result detaches moved into
-    # io.detach_result / io.tiny_local_frame — a VALUES local relation
+    # io.detach_result / io.tiny_local_frame — a local relation
     # instead of the 32-task createDataFrame job — so only the
     # O(partitions) work-list collect remains op-side)
     # (r14 optimization: sink_compaction_apply collects the bin map —
@@ -381,6 +381,27 @@ def test_staged_stream_reader_lives_only_in_streaming_core():
         "staged stream read outside streaming/core.py — stage it with "
         "streaming.core.stage_stream() and read it with "
         f"streaming.core.staged_stream(): {offenders}"
+    )
+
+
+#: Temp-file factories: every temp dir the package makes comes from the
+#: scratch owner in ``io.py`` (``scratch`` / ``scratch_dir``), which
+#: removes a per-call dir when its call returns and a held one when the
+#: memo entry naming it is released, or at exit.
+_TEMP_FACTORIES = ("mkdtemp", "mkstemp", "TemporaryDirectory", "NamedTemporaryFile")
+
+
+def test_temp_dirs_come_only_from_the_io_scratch_owner():
+    offenders = {
+        (rel, tok)
+        for p in sorted(PKG.rglob("*.py"))
+        if (rel := p.relative_to(PKG).as_posix()) != "io.py"
+        for tok in _TEMP_FACTORIES
+        if tok in p.read_text()
+    }
+    assert not offenders, (
+        "temp dir made outside io.py — take it from io.scratch() (per "
+        f"call) or io.scratch_dir() (held by a memo): {sorted(offenders)}"
     )
 
 

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
 
 import pyarrow as pa
@@ -18,7 +17,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from storm_netmonitor_spark.io import table_path
+from storm_netmonitor_spark.io import scratch_dir, table_path
 from storm_netmonitor_spark.streaming.core import EVENTS_RAW_SCHEMA
 
 from .conftest import SF_CORRECT
@@ -28,7 +27,7 @@ def _split_events(n_parts: int) -> tuple[str, int]:
     from storm_netmonitor_spark.streaming.stateful import _read_events_arrow
 
     t = _read_events_arrow(SF_CORRECT)  # ts normalized to µs for the schema
-    d = tempfile.mkdtemp(prefix="nm_live_")
+    d = scratch_dir("nm_live_")
     step = (t.num_rows + n_parts - 1) // n_parts
     for i in range(n_parts):
         pq.write_table(t.slice(i * step, step), os.path.join(d, f"p{i}.parquet"))
@@ -49,7 +48,7 @@ def test_live_trigger_picks_up_arriving_files(spark):
     ingested by the running processing-time trigger — the actual
     netmonitor deployment mode."""
     src_all, _ = _split_events(4)
-    live_dir = tempfile.mkdtemp(prefix="nm_live_in_")
+    live_dir = scratch_dir("nm_live_in_")
     parts = sorted(os.listdir(src_all))
     shutil.copy(os.path.join(src_all, parts[0]), live_dir)
 
@@ -60,7 +59,7 @@ def test_live_trigger_picks_up_arriving_files(spark):
         counts.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="nm_ckpt_"))
+        .option("checkpointLocation", scratch_dir("nm_ckpt_"))
         .trigger(processingTime="300 milliseconds")
         .start()
     )
@@ -87,7 +86,7 @@ def test_checkpoint_recovery_exactly_once(spark):
     checkpoint: the final result must equal the batch aggregation of all
     input — nothing lost, nothing double-counted."""
     src, total_rows = _split_events(4)
-    ckpt = tempfile.mkdtemp(prefix="nm_ckpt_rec_")
+    ckpt = scratch_dir("nm_ckpt_rec_")
 
     raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(src)
     agg = raw.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
@@ -192,7 +191,7 @@ def test_rocksdb_state_store_is_default_and_writes_rocksdb_artifacts(spark):
         == _STATE_PROVIDERS["rocksdb"]
     )
 
-    ckpt = tempfile.mkdtemp(prefix="nm_rocks_ckpt_")
+    ckpt = scratch_dir("nm_rocks_ckpt_")
     stream = (
         events_stream(spark, SF_CORRECT, columns=("ts", "event_type"))
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
