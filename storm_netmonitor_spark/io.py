@@ -454,6 +454,10 @@ def prune_artifacts(max_age_days: float = 14.0) -> int:
     return removed
 
 
+#: Schema sidecar of a ``bucketed_artifact_frame`` dir (Spark JSON).
+_BUCKETED_SCHEMA_FILE = "_schema.json"
+
+
 def bucketed_artifact_frame(
     spark: SparkSession,
     name: str,
@@ -489,7 +493,13 @@ def bucketed_artifact_frame(
 
     ``n_buckets`` must match the consumer's expectation across processes
     — it is part of the artifact key, so changing it retrains rather
-    than mis-reading."""
+    than mis-reading. The table schema is the builder frame's, kept in
+    the dir's ``_schema.json``: an empty frame writes no bucket file, so
+    no parquet footer holds it."""
+    import json
+
+    from pyspark.sql.types import StructType
+
     path = _artifact_path(
         name, version, sf_dir, extra + (bucket_col, int(n_buckets))
     )
@@ -499,9 +509,9 @@ def bucketed_artifact_frame(
         staging = _staging_path(path)
         stage_tbl = f"{tbl}_stg_{os.getpid()}"
         with _staging_heartbeat(staging):
+            frame = builder()
             (
-                builder()
-                .repartition(n_buckets, bucket_col)
+                frame.repartition(n_buckets, bucket_col)
                 .write.mode("overwrite")
                 .bucketBy(n_buckets, bucket_col)
                 .sortBy(bucket_col)
@@ -512,14 +522,17 @@ def bucketed_artifact_frame(
             # drop only the catalog entry — the table is EXTERNAL, the
             # staged files stay for the atomic publish below
             spark.sql(f"DROP TABLE IF EXISTS {stage_tbl}")
+            with open(os.path.join(staging, _BUCKETED_SCHEMA_FILE), "w") as fh:
+                fh.write(frame.schema.json())
         _publish_staging(staging, path)
     else:
         _touch_artifact(path)
     if not spark.catalog.tableExists(tbl):
         # register the published files as an external bucketed table for
         # THIS session (bucket ids are parsed from Spark's bucket file
-        # naming; the schema comes from the parquet footers)
-        schema = spark.read.parquet(path).schema
+        # naming; the reader skips ``_``-prefixed files)
+        with open(os.path.join(path, _BUCKETED_SCHEMA_FILE)) as fh:
+            schema = StructType.fromJson(json.load(fh))
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )

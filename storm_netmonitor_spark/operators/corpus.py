@@ -921,7 +921,7 @@ def standing_dedup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: bucketed_artifact_frame(
             spark,
             "dedup_edges",
-            "v2",
+            "v3",  # v3: the dir carries its schema sidecar
             sf_dir,
             lambda: _symmetric_edges(
                 text_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")

@@ -165,7 +165,7 @@ def multimodal_joined_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: bucketed_artifact_frame(
             spark,
             "joined_dedup_edges",
-            "v2",
+            "v3",  # v3: the dir carries its schema sidecar
             sf_dir,
             build_edges,
             "doc_a",

@@ -438,12 +438,14 @@ def detach_sink(spark: SparkSession, name: str) -> DataFrame:
         spark.catalog.dropTempView(name)
 
 
-def drain_to_memory_until(
-    df: DataFrame, done, mode: str = "complete", timeout_s: float = 120.0
-) -> DataFrame:
-    """Run a streaming DataFrame with a fast processing-time trigger until
-    ``done(last_end_offset: dict) -> bool`` says the source is exhausted,
-    then stop and return the sink table.
+#: Wall seconds ``drain_to_memory_until`` waits for the end offset.
+_UNTIL_TIMEOUT_S = 120.0
+
+
+def drain_to_memory_until(df: DataFrame, done) -> DataFrame:
+    """Run a streaming DataFrame in complete mode with a fast
+    processing-time trigger until ``done(last_end_offset: dict) -> bool``
+    says the source is exhausted, then stop and return the sink table.
 
     Custom Python sources (``pyspark.sql.datasource``) don't participate in
     ``availableNow``'s drain planning — a single micro-batch is captured —
@@ -455,11 +457,12 @@ def drain_to_memory_until(
 
     name = "nm_mem_" + uuid.uuid4().hex[:10]
     with _started(
-        df, "memory", mode, {"processingTime": "0 seconds"}, query_name=name
+        df, "memory", "complete", {"processingTime": "0 seconds"},
+        query_name=name,
     ) as q:
         try:
-            deadline = time.time() + timeout_s
-            while time.time() < deadline:
+            deadline = time.monotonic() + _UNTIL_TIMEOUT_S
+            while time.monotonic() < deadline:
                 if q.exception() is not None:
                     raise q.exception()  # fail fast, don't spin to timeout
                 p = q.lastProgress

@@ -459,11 +459,6 @@ def test_abspath_keyed_caches_are_exactly_the_audited_set():
     )
 
 
-#: Staged round-15 modules that stay unregistered until they are deleted
-#: (ROADMAP item 5). Only ever shrinks: no new module joins this set.
-_STAGED_UNLISTED = {"extensions21", "extensions22", "extensions26"}
-
-
 def test_every_operator_module_is_listed():
     """An operator module missing from ``operators._MODULES`` is never
     imported, so its ops never register: code that nothing serves."""
@@ -471,10 +466,27 @@ def test_every_operator_module_is_listed():
 
     stems = {p.stem for p in (PKG / "operators").glob("*.py")} - {"__init__"}
     listed = set(operators._MODULES)
-    assert not listed & _STAGED_UNLISTED
-    assert stems == listed | _STAGED_UNLISTED, (
-        f"unlisted: {sorted(stems - listed - _STAGED_UNLISTED)}, "
-        f"missing: {sorted((listed | _STAGED_UNLISTED) - stems)}"
+    assert stems == listed, (
+        f"unlisted: {sorted(stems - listed)}, missing: {sorted(listed - stems)}"
+    )
+
+
+#: The streaming library module: imported by the op modules, never
+#: listed itself because it registers no op.
+_STREAMING_LIBRARY = {"core"}
+
+
+def test_every_streaming_module_is_listed():
+    """A streaming module is either listed in ``streaming._MODULES`` (its
+    ops register) or is the library module every op module imports;
+    anything else is code that nothing serves."""
+    from storm_netmonitor_spark import streaming
+
+    stems = {p.stem for p in (PKG / "streaming").glob("*.py")} - {"__init__"}
+    expected = set(streaming._MODULES) | _STREAMING_LIBRARY
+    assert stems == expected, (
+        f"unlisted: {sorted(stems - expected)}, "
+        f"missing: {sorted(expected - stems)}"
     )
 
 

@@ -468,30 +468,6 @@ def audit(sf_dir: str) -> list[tuple[str, str, float, bool]]:
                  "min per-query float gap at the exact-side rank-k "
                  "boundary (double-fold sims feed the cut only)",
                  srv_margin, srv_margin >= FLOOR))
-
-    # --- §2.AQ Benford census (staged round-15): the leading digit is
-    # FLOOR(x / 10^FLOOR(log10 x)) in doubles on both engines —
-    # decisions flip only when (a) log10(x) sits within float noise of
-    # an integer (exponent flip at a power of 10) or (b) the mantissa
-    # sits within float noise of a digit edge d ∈ {2..10}.
-    tp = np.array(
-        pq.read_table(os.path.join(sf_dir, "orders.parquet"))
-        .column("o_totalprice")
-        .to_pylist(),
-        dtype=np.float64,
-    )
-    tp = tp[tp > 0]
-    lg = np.log10(tp)
-    exp_dist = float(np.abs(lg - np.round(lg)).min())
-    rows.append(("agg_benford_deviation",
-                 "min |log10(x) - nearest int| (exponent-flip margin)",
-                 exp_dist, exp_dist >= FLOOR))
-    mant = tp / np.power(10.0, np.floor(lg))
-    edges = np.arange(2.0, 11.0)
-    edge_dist = float(np.abs(mant[:, None] - edges[None, :]).min())
-    rows.append(("agg_benford_deviation",
-                 "min mantissa distance to a digit edge d in 2..10",
-                 edge_dist, edge_dist >= FLOOR))
     return rows
 
 
