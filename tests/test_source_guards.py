@@ -471,14 +471,15 @@ def test_every_operator_module_is_listed():
     )
 
 
-#: The streaming library module: imported by the op modules, never
-#: listed itself because it registers no op.
-_STREAMING_LIBRARY = {"core"}
+#: Streaming modules that register no op, so are never listed: ``core``,
+#: the library every op module imports, and ``kafka_twin``, the brokered
+#: transport that stays config-gated until an environment has a broker.
+_STREAMING_LIBRARY = {"core", "kafka_twin"}
 
 
 def test_every_streaming_module_is_listed():
     """A streaming module is either listed in ``streaming._MODULES`` (its
-    ops register) or is the library module every op module imports;
+    ops register) or is one of the named modules that register no op;
     anything else is code that nothing serves."""
     from storm_netmonitor_spark import streaming
 
