@@ -3,18 +3,69 @@
 Usage:
     python -m storm_netmonitor_spark list [substring]
     python -m storm_netmonitor_spark run <query_id> [--sf-dir DIR] [--limit N]
+    python -m storm_netmonitor_spark run <query_id> [--sf-dir DIR] --profile
     python -m storm_netmonitor_spark explain <query_id> [--sf-dir DIR]
     python -m storm_netmonitor_spark prune-artifacts [--max-age-days N]
 
 The reference tool is operated from a shell; this is the equivalent
 surface here — every SURVEY §2 operator is invocable by id against any
 testdata directory, printing results (or the physical plan) to stdout.
+
+``run --profile`` makes one warm call, then prints one JSON line per
+timed call (``PROFILE_CALLS``): the wall and its plan-build part, the
+Spark jobs the calling thread started while building the frame and while
+collecting it, and each drain's ``streaming.core.DrainRecord`` with the
+jobs of its ``runId`` group (its stream-execution thread); then the
+median wall.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
+import json
+import statistics
 import sys
+import time
+
+#: Timed calls of ``run --profile``, after one warm call.
+PROFILE_CALLS = 3
+
+
+def _profile(spark, query_id: str, sf_dir: str) -> None:
+    """``run --profile`` (module docstring)."""
+    from .registry import QUERIES
+    from .streaming.core import DRAINS
+
+    fn, sc = QUERIES[query_id], spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup
+    fn(spark, sf_dir).collect()  # warm: JIT, artifacts, memoized plans
+    walls = []
+    for i in range(PROFILE_CALLS):
+        seen = DRAINS[-1].seq if DRAINS else 0
+        build, collect = f"nm-profile-{i}-build", f"nm-profile-{i}-collect"
+        try:
+            sc.setJobGroup(build, query_id)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            sc.setJobGroup(collect, query_id)
+            df.collect()
+            walls.append(time.perf_counter() - t0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        drains = [
+            dict(dataclasses.asdict(r), jobs=len(jobs(r.run_id)))
+            for r in DRAINS
+            if r.seq > seen
+        ]
+        print(json.dumps({
+            "query": query_id, "call": i, "wall_s": round(walls[-1], 4),
+            "build_s": round(t1 - t0, 4),
+            "jobs": {"build": len(jobs(build)), "collect": len(jobs(collect))},
+            "drains": drains,
+        }), flush=True)
+    print(json.dumps({"query": query_id, "median_wall_s": round(statistics.median(walls), 4)}))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -30,6 +81,8 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
         if name == "run":
             p.add_argument("--limit", type=int, default=20)
+            p.add_argument("--profile", action="store_true",
+                           help="print timed calls and drain records as JSON")
 
     p_prune = sub.add_parser(
         "prune-artifacts",
@@ -65,6 +118,9 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name=f"nm-cli-{args.cmd}")
     try:
+        if args.cmd == "run" and args.profile:
+            _profile(spark, args.query_id, args.sf_dir)
+            return 0
         df = registry.QUERIES[args.query_id](spark, args.sf_dir)
         if args.cmd == "explain":
             df.explain("formatted")

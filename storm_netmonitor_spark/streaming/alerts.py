@@ -276,19 +276,19 @@ def stream_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline self-observability on the STREAMING side (the batch twin
     is ``observe_metrics``): drain the 4-file staged source one file per
     micro-batch and report each batch's ingested row count from the
-    engine's own ``StreamingQueryProgress`` — the exactly-once audit trail
-    an operator reads when reconciling a collector. The staging slices
-    events into ceil(n/4)-row files, so the per-batch counts are
+    drain's record (``core.DrainRecord``, the engine's own progress
+    reports) — the exactly-once audit trail an operator reads when
+    reconciling a collector. The staging slices events into
+    ceil(n/4)-row files, so the per-batch counts are
     ARITHMETICALLY predictable and the oracle needs no table beyond the
     row count — any dropped or double-read batch breaks the hash.
     Progress metadata is 4 rows on the driver (observability scale, like
     observe_metrics), never data."""
     s = _quarter_stream(spark, sf_dir)
-    q = drain(s, "noop")
     rows = [
-        (int(p["batchId"]), int(p["numInputRows"]))
-        for p in (q.recentProgress or [])
-        if int(p.get("numInputRows", 0)) > 0
+        (b["batchId"], b["numInputRows"])
+        for b in drain(s, "noop").batches
+        if b["numInputRows"] > 0
     ]
     return spark.createDataFrame(
         rows, "batch_id long, n_input_rows long"

@@ -9,15 +9,19 @@ changes. Every streaming query in the package starts here, in ``drain``
 (or ``drain_to_memory_until`` for custom Python sources); every op that
 folds per-micro-batch partials into one report runs ``drain_partials``;
 every staged input stream is written by ``stage_stream`` and read by
-``staged_stream``.
+``staged_stream``. Every query started here leaves a ``DrainRecord`` in
+``DRAINS``, read from its own progress reports once it has terminated.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import time
 import uuid
-from contextlib import contextmanager, nullcontext
+from collections import Counter, deque
+from contextlib import nullcontext
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -126,21 +130,89 @@ _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-@contextmanager
-def _started(
+#: Records ``DRAINS`` keeps.
+DRAINS_KEPT = 64
+
+
+@dataclass(frozen=True)
+class DrainRecord:
+    """What one terminated streaming query reported about itself, read
+    from its ``recentProgress``; plain data, no query or JVM handle.
+    ``batches`` holds each completed micro-batch's ``batchId``,
+    ``numInputRows`` and ``durationMs``; ``rows`` and ``duration_ms``
+    are their totals. ``wall_ms`` runs from ``start()`` to termination,
+    ``outside_trigger_ms`` is the part of it outside every trigger. The
+    state figures are the last batch's, summed over its state operators.
+    ``error`` names the micro-batch a failed drain died in."""
+
+    seq: int
+    run_id: str
+    sink: str
+    mode: str
+    wall_ms: float
+    batches: tuple[dict, ...]
+    rows: int
+    duration_ms: dict[str, int]
+    outside_trigger_ms: float
+    state_rows: int
+    state_memory_bytes: int
+    error: str | None
+
+
+#: The latest ``DRAINS_KEPT`` drain records, oldest first.
+DRAINS: deque[DrainRecord] = deque(maxlen=DRAINS_KEPT)
+_DRAIN_SEQ = itertools.count(1)
+
+
+def _record(q: StreamingQuery, sink: str, mode: str, t0: float, exc=None):
+    """Build the terminated ``q``'s record, keep it in ``DRAINS`` and
+    return it; ``exc`` is the exception the drain raised."""
+    wall_ms = (time.perf_counter() - t0) * 1000.0
+    progress = q.recentProgress
+    batches = tuple(
+        {k: p[k] for k in ("batchId", "numInputRows", "durationMs")}
+        for p in progress
+    )
+    totals = Counter()
+    for b in batches:
+        totals.update(b["durationMs"])
+    state = progress[-1]["stateOperators"] if progress else []
+    failed = batches[-1]["batchId"] + 1 if batches else 0
+    rec = DrainRecord(
+        seq=next(_DRAIN_SEQ),
+        run_id=str(q.runId),
+        sink=sink,
+        mode=mode,
+        wall_ms=round(wall_ms, 1),
+        batches=batches,
+        rows=sum(b["numInputRows"] for b in batches),
+        duration_ms=dict(totals),
+        outside_trigger_ms=round(wall_ms - totals["triggerExecution"], 1),
+        state_rows=sum(o["numRowsTotal"] for o in state),
+        state_memory_bytes=sum(o["memoryUsedBytes"] for o in state),
+        error=None if exc is None else f"micro-batch {failed}: {type(exc).__name__}",
+    )
+    DRAINS.append(rec)
+    return rec
+
+
+def _run(
     df: DataFrame,
     sink,
     mode: str,
     trigger: dict,
+    until,
     query_name: str | None = None,
     path: str | None = None,
     checkpoint: str | None = None,
     state_partitions: int | None = None,
-):
-    """Build the writer, start the query and yield it under the per-drain
-    confs, which are restored to the session's previous values when the
-    ``with`` block exits, also when the query raises; so is a fresh
-    ``ckpt_dir()`` made when no ``checkpoint`` is given.
+) -> DrainRecord:
+    """Build the writer, start the query, hand it to ``until``, which
+    returns once the query has terminated, and return the query's
+    ``DrainRecord``. The per-drain confs are restored to the session's
+    previous values afterwards, also when the query raises; so is a
+    fresh ``ckpt_dir()`` made when no ``checkpoint`` is given. A raise
+    is recorded too, and noted with the micro-batch it failed in.
 
     The shuffle width is captured into the query's checkpoint at start,
     so restoring the batch setting afterwards does not affect the drain.
@@ -171,8 +243,20 @@ def _started(
         prev = {k: spark.conf.get(k) for k in scoped}
         for k, v in scoped.items():
             spark.conf.set(k, v)
+        sink = "foreachBatch" if callable(sink) else sink
         try:
-            yield writer.trigger(**trigger).start()
+            t0 = time.perf_counter()
+            q = writer.trigger(**trigger).start()
+            try:
+                until(q)
+            except Exception as exc:
+                rec = _record(q, sink, mode, t0, exc)
+                exc.add_note(
+                    f"streaming drain failed in {rec.error} "
+                    f"(runId {rec.run_id}, {sink} sink)"
+                )
+                raise
+            return _record(q, sink, mode, t0)
         finally:
             for k, v in prev.items():
                 spark.conf.set(k, v)
@@ -186,10 +270,11 @@ def drain(
     path: str | None = None,
     checkpoint: str | None = None,
     state_partitions: int | None = None,
-) -> StreamingQuery:
+) -> DrainRecord:
     """THE streaming query lifecycle: run ``df`` to completion with
-    ``trigger(availableNow=True)`` and return the terminated query (its
-    ``recentProgress`` stays readable).
+    ``trigger(availableNow=True)`` and return its ``DrainRecord`` (also
+    kept in ``DRAINS``). A failed drain raises the query's exception,
+    noted with the micro-batch it failed in.
 
     ``sink`` is a format name (``memory``/``parquet``/``noop``; the memory
     sink takes ``query_name``, file sinks take ``path``) or a
@@ -202,18 +287,17 @@ def drain(
     partition on each task slot (4-slot host, 8 -> 4: the benchmark's
     ``streaming`` op_p90_s median 2.33 -> 1.89 s over 16 pairs, addBatch
     1,008 -> 807 ms and state commit 88 -> 41 ms per drain)."""
-    with _started(
+    return _run(
         df,
         sink,
         mode,
         {"availableNow": True},
+        StreamingQuery.awaitTermination,
         query_name=query_name,
         path=path,
         checkpoint=checkpoint,
         state_partitions=state_partitions,
-    ) as q:
-        q.awaitTermination()
-    return q
+    )
 
 
 def drain_partials(
@@ -455,11 +539,7 @@ def drain_to_memory_until(df: DataFrame, done) -> DataFrame:
     which is returned detached (``detach_sink``)."""
     import ast
 
-    name = "nm_mem_" + uuid.uuid4().hex[:10]
-    with _started(
-        df, "memory", "complete", {"processingTime": "0 seconds"},
-        query_name=name,
-    ) as q:
+    def until(q: StreamingQuery) -> None:
         try:
             deadline = time.monotonic() + _UNTIL_TIMEOUT_S
             while time.monotonic() < deadline:
@@ -481,4 +561,10 @@ def drain_to_memory_until(df: DataFrame, done) -> DataFrame:
         finally:
             q.stop()
             q.awaitTermination()
+
+    name = "nm_mem_" + uuid.uuid4().hex[:10]
+    _run(
+        df, "memory", "complete", {"processingTime": "0 seconds"}, until,
+        query_name=name,
+    )
     return detach_sink(df.sparkSession, name)

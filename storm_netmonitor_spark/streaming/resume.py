@@ -81,15 +81,14 @@ def _two_phase_drain(
 
         def run(phase: str) -> int:
             sink, query_name = sink_for(phase)
-            q = drain(
+            return drain(
                 agg,
                 sink,
                 mode,
                 query_name=query_name,
                 checkpoint=ckpt,
                 state_partitions=state_partitions,
-            )
-            return sum(int(p["numInputRows"]) for p in q.recentProgress)
+            ).rows
 
         got_first = run("p1")
         if got_first != n_first:

@@ -10,14 +10,18 @@ afterwards, also when the query fails. A drain removes the checkpoint it
 made, also when the query fails, and keeps one its caller passed; a
 memory-sink drain also drops its sink. A partials fold counts a retried
 batch once, reads an all-empty stream as an empty frame typed by its
-ddl, and deletes its landings also when the fold fails.
+ddl, and deletes its landings also when the fold fails. Every query the
+core starts leaves a plain-data record of its batches in ``DRAINS``, a
+failed one too, whose exception names the micro-batch it died in.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import tempfile
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -26,7 +30,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from storm_netmonitor_spark.io import scratch_dir
+from storm_netmonitor_spark.io import scratch_dir, table_path
 from storm_netmonitor_spark.session import RUNTIME_CONFS, apply_runtime_confs
 from storm_netmonitor_spark.streaming import core
 from storm_netmonitor_spark.streaming.core import (
@@ -35,7 +39,13 @@ from storm_netmonitor_spark.streaming.core import (
     drain,
     drain_partials,
     drain_to_memory,
+    drain_to_memory_until,
+    events_stream,
+    staged_stream,
 )
+from storm_netmonitor_spark.sources.pysource import register
+
+from .conftest import SF_SMOKE
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 _NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -295,3 +305,111 @@ def test_drain_partials_over_an_all_empty_stream(spark, bounded):
             assert out.collect() == []
             if bounded or src == no_batch:
                 assert walls == []  # nothing landed
+
+
+def _four_part_stream(session):
+    """A staged stream of 4 one-file micro-batches, 2 rows each."""
+    d = scratch_dir("nm_drain_parts_")
+    for i in range(4):
+        f = os.path.join(d, f"part-{i:05d}.parquet")
+        pq.write_table(pa.table({"k": [f"a{i}", f"b{i}"]}), f)
+        os.utime(f, (1_700_000_000 + i * 1000,) * 2)
+    return staged_stream(session, d, "k string")
+
+
+@pytest.mark.fast
+def test_failed_drain_names_its_batch(spark):
+    """A fold that raises in micro-batch 2 of 4 fails the drain with the
+    query's own exception, noted with the batch, and the failure is
+    recorded. (The exception used to name the query, its runId and the
+    offset log entry, but not the batch.)"""
+
+    def per_batch(batch_df, batch_id):
+        if batch_id == 2:
+            raise RuntimeError("fold failed")
+        return batch_df
+
+    with pytest.raises(StreamingQueryException, match="fold failed") as info:
+        drain_partials(_four_part_stream(spark), per_batch, lambda x: x, "k string")
+    assert any("micro-batch 2" in n for n in getattr(info.value, "__notes__", []))
+    rec = core.DRAINS[-1]
+    assert rec.error == "micro-batch 2: StreamingQueryException"
+    assert [b["batchId"] for b in rec.batches] == [0, 1]
+
+
+@pytest.mark.fast
+def test_memory_drain_records_one_batch_of_every_event(spark):
+    name = "nm_mem_record_test"
+    try:
+        rec = drain(
+            events_stream(spark, SF_SMOKE).groupBy("event_type").count(),
+            "memory",
+            "complete",
+            query_name=name,
+        )
+    finally:
+        spark.catalog.dropTempView(name)
+    events = pq.ParquetFile(table_path(SF_SMOKE, "events")).metadata.num_rows
+    assert (rec.sink, rec.mode, len(rec.batches), rec.rows) == (
+        "memory", "complete", 1, events,
+    )
+    assert rec.state_rows > 0 and rec.state_memory_bytes > 0
+    assert rec.error is None and core.DRAINS[-1] == rec
+
+
+@pytest.mark.fast
+def test_foreach_batch_drain_records_its_batches_and_jobs(spark):
+    """Each staged file is one batch; the batches' jobs, those the
+    foreachBatch function starts included, sit in the query's runId job
+    group. The record is plain data (it serializes as JSON)."""
+    rec = drain(_four_part_stream(spark), lambda batch_df, batch_id: batch_df.count())
+    assert [(b["batchId"], b["numInputRows"]) for b in rec.batches] == [
+        (i, 2) for i in range(4)
+    ]
+    assert rec.rows == 8 and rec.sink == "foreachBatch"
+    assert rec.duration_ms["addBatch"] == sum(
+        b["durationMs"]["addBatch"] for b in rec.batches
+    )
+    assert rec.outside_trigger_ms == pytest.approx(
+        rec.wall_ms - rec.duration_ms["triggerExecution"], abs=0.2
+    )
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(rec.run_id)
+    assert len(jobs) >= 4
+    json.dumps(dataclasses.asdict(rec))
+
+
+@pytest.mark.fast
+def test_drain_to_memory_until_leaves_a_record(spark):
+    register(spark)
+    stream = (
+        spark.readStream.format("nm_counters")
+        .option("hosts", 2)
+        .option("samples", 8)
+        .option("batch_samples", 4)
+        .load()
+    )
+    seen = core.DRAINS[-1].seq if core.DRAINS else 0
+    out = drain_to_memory_until(
+        stream.groupBy("host").count(), lambda off: off.get("i", -1) >= 8
+    )
+    assert sorted(map(tuple, out.collect())) == [("host0", 8), ("host1", 8)]
+    [rec] = [r for r in core.DRAINS if r.seq > seen]
+    assert (rec.sink, rec.mode, rec.rows, rec.error) == (
+        "memory", "complete", 16, None,
+    )
+
+
+class _Ended:
+    """The progress surface of a terminated query that ran no batch."""
+
+    runId = "ended"
+    recentProgress: list = []
+
+
+@pytest.mark.fast
+def test_drains_keeps_at_most_its_bound():
+    t0 = time.perf_counter()
+    for _ in range(core.DRAINS_KEPT + 1):
+        last = core._record(_Ended(), "noop", "append", t0)
+    assert len(core.DRAINS) == core.DRAINS_KEPT
+    assert core.DRAINS[-1] is last

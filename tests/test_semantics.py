@@ -17,7 +17,7 @@ import pytest
 from storm_netmonitor_spark.io import scratch_dir
 from storm_netmonitor_spark.registry import QUERIES
 
-from .conftest import SF_CORRECT
+from .conftest import SF_CORRECT, SF_SMOKE
 
 BASE = (
     "scan the table for rows where the key matches the filter and return "
@@ -515,7 +515,11 @@ def test_stream_gap_alert_state_crosses_batches(spark):
 
 def test_cli_list_and_run():
     """The __main__ CLI surface: list filters ids; run executes a query
-    in a subprocess (own SparkSession) and prints rows."""
+    in a subprocess (own SparkSession) and prints rows; run --profile
+    prints one JSON line per timed call with its drains' records, each
+    4-file staged drain with 4 batches and at least that many jobs in its
+    runId group, then the median wall."""
+    import json
     import subprocess
     import sys
 
@@ -530,6 +534,19 @@ def test_cli_list_and_run():
         capture_output=True, text=True, cwd=repo, timeout=120,
     )
     assert bad.returncode == 2 and "unknown query id" in bad.stderr
+    prof = subprocess.run(
+        [sys.executable, "-m", "storm_netmonitor_spark", "run",
+         "stream_incremental_rollup", "--sf-dir", SF_SMOKE, "--profile"],
+        capture_output=True, text=True, cwd=repo, timeout=600,
+    )
+    assert prof.returncode == 0, prof.stderr[-2000:]
+    *calls, median = [json.loads(ln) for ln in prof.stdout.splitlines()]
+    assert [c["call"] for c in calls] == [0, 1, 2]
+    for c in calls:
+        [d] = c["drains"]
+        assert (len(d["batches"]), d["error"]) == (4, None)
+        assert d["jobs"] >= 4 and c["wall_s"] > 0
+    assert median["median_wall_s"] > 0
 
 
 def test_lloyd_round_semantics(spark):

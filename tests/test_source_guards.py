@@ -341,6 +341,33 @@ def test_streaming_lifecycle_lives_only_in_streaming_core():
     )
 
 
+#: Where a token that reads a query's progress or Spark's job tracker may
+#: appear: ``streaming.core`` builds each drain's record from the query's
+#: own progress, every other module reads that record, and only the CLI's
+#: ``run --profile`` asks the status tracker for job counts.
+_TELEMETRY_HOMES = {
+    "recentProgress": "streaming/core.py",
+    "lastProgress": "streaming/core.py",
+    "StreamingQueryListener": "streaming/core.py",
+    "addListener": "streaming/core.py",
+    "statusTracker": "__main__.py",
+}
+
+
+def test_progress_reads_live_only_in_streaming_core():
+    offenders = sorted(
+        (rel, tok)
+        for p in PKG.rglob("*.py")
+        if (rel := p.relative_to(PKG).as_posix())
+        for tok, home in _TELEMETRY_HOMES.items()
+        if rel != home and tok in p.read_text()
+    )
+    assert not offenders, (
+        "progress or job telemetry read outside its home — read the "
+        f"record streaming.core.drain() returns instead: {offenders}"
+    )
+
+
 def test_partials_landing_layout_lives_only_in_core_and_io():
     """The ``batch_id=<id>`` landing layout of a per-batch partials fold
     is spelled by ``streaming.core.drain_partials`` (and the driver-side
@@ -384,18 +411,21 @@ def test_staged_stream_reader_lives_only_in_streaming_core():
     )
 
 
-#: Temp-file factories: every temp dir the package makes comes from the
-#: scratch owner in ``io.py`` (``scratch`` / ``scratch_dir``), which
-#: removes a per-call dir when its call returns and a held one when the
-#: memo entry naming it is released, or at exit.
+#: Temp-file factories: every temp dir the package and its tools make
+#: comes from the scratch owner in ``io.py`` (``scratch`` /
+#: ``scratch_dir``), which removes a per-call dir when its call returns
+#: and a held one when the memo entry naming it is released, or at exit.
 _TEMP_FACTORIES = ("mkdtemp", "mkstemp", "TemporaryDirectory", "NamedTemporaryFile")
 
 
 def test_temp_dirs_come_only_from_the_io_scratch_owner():
+    repo = PKG.parent
     offenders = {
         (rel, tok)
-        for p in sorted(PKG.rglob("*.py"))
-        if (rel := p.relative_to(PKG).as_posix()) != "io.py"
+        for root in (PKG, repo / "tools")
+        for p in sorted(root.rglob("*.py"))
+        if (rel := p.relative_to(repo).as_posix())
+        != "storm_netmonitor_spark/io.py"
         for tok in _TEMP_FACTORIES
         if tok in p.read_text()
     }

@@ -18,8 +18,6 @@ Exits non-zero listing any operator whose two runs differ.
 
 from __future__ import annotations
 
-import datetime as dt
-import math
 import os
 import sys
 import time
@@ -44,35 +42,12 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as m  # noqa: E402
-
-
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v
-    if isinstance(v, (dt.datetime, dt.date)):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, canon(x)) for k, x in v.items()))
-    if isinstance(v, bytes):
-        return v.hex()
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return f"dec:{v}"
-    return v
+from tests.parity import canon_rows  # noqa: E402
 
 
 def snapshot(fn) -> list:
     df = fn(spark, SF)
-    cols = sorted(df.columns)
-    rows = sorted(
-        tuple(str(canon(r[c])) for c in cols) for r in df.collect()
-    )
-    return [cols, rows]
+    return [sorted(df.columns), canon_rows(df.columns, df.collect())]
 
 
 def main() -> int:

@@ -27,13 +27,14 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from storm_netmonitor_spark.io import scratch  # noqa: E402
 
 #: Every registered operator that persists a trained model through the
 #: cross-process store (see docs/SCALING.md, artifact family tables).
@@ -114,10 +115,7 @@ def _run_child(store: str, sf_dir: str, label: str) -> dict:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    store = tempfile.mkdtemp(prefix="nm_preflight_artifacts_")
-    shutil.rmtree(store)
-    os.makedirs(store, mode=0o700)
-    try:
+    with scratch("nm_preflight_artifacts_") as store:
         a = _run_child(store, sf_dir, "process A (cold: train+publish)")
         inodes_after_a = _inode_map(store)
         print(f"store after A: {len(inodes_after_a)} entries")
@@ -150,8 +148,6 @@ def main() -> int:
             "re-publishes, zero re-trains, zero staging leftovers"
         )
         return 0
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 if __name__ == "__main__":

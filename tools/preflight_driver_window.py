@@ -13,8 +13,6 @@ round-5 backlog (50 97) 47/47 green in 42 s.
 """
 from __future__ import annotations
 
-import datetime as dt
-import math
 import os
 import sys
 import time
@@ -23,6 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 import duckdb  # noqa: E402
+
+from tests.parity import canon_rows  # noqa: E402
 
 START = int(sys.argv[1]) if len(sys.argv) > 2 else 0
 END = int(sys.argv[2]) if len(sys.argv) > 2 else 50
@@ -40,36 +40,6 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     )
 
 
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v
-    if isinstance(v, (dt.datetime, dt.date)):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, canon(x)) for k, x in v.items()))
-    if isinstance(v, bytes):
-        return v.hex()
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return f"dec:{v}"
-    except ImportError:
-        pass
-    return v
-
-
-def _row_key(r):
-    """None-aware total order (tests/parity.py's key): raw tuple sort
-    raises TypeError on None-vs-number — exactly how win_lag_delta-class
-    ops (NULL first lag) escaped earlier slices of the sweep."""
-    return tuple((x is None, str(type(x)), str(x)) for x in r)
-
-
 qd, od = m.queries(), m.oracle_sql()
 window = list(qd)[START:END]
 t_all = time.time()
@@ -79,7 +49,7 @@ for name in window:
     try:
         df = qd[name](spark, SF)
         cols = sorted(df.columns)
-        rows = sorted((tuple(canon(r[c]) for c in cols) for r in df.collect()), key=_row_key)
+        rows = canon_rows(df.columns, df.collect())
     except Exception as exc:  # noqa: BLE001 — report and continue
         bad.append((name, f"SPARK {type(exc).__name__}: {str(exc)[:150]}"))
         continue
@@ -93,8 +63,7 @@ for name in window:
     try:
         cur = con.execute(od[name])
         ocols = [d[0] for d in cur.description]
-        idx = [ocols.index(c) for c in sorted(ocols)]
-        ora = sorted((tuple(canon(r[i]) for i in idx) for r in cur.fetchall()), key=_row_key)
+        ora = canon_rows(ocols, cur.fetchall())
     except Exception as exc:  # noqa: BLE001
         bad.append((name, f"ORACLE {type(exc).__name__}: {str(exc)[:150]}"))
         continue

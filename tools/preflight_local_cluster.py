@@ -52,8 +52,6 @@ single machine can make.
 """
 from __future__ import annotations
 
-import datetime as dt
-import math
 import os
 import sys
 import time
@@ -62,6 +60,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 import duckdb  # noqa: E402
+
+from storm_netmonitor_spark.io import scratch  # noqa: E402
+from tests.parity import canon_rows  # noqa: E402
 
 _args = sys.argv[1:]
 FULL = "--full" in _args
@@ -139,33 +140,6 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     )
 
 
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v
-    if isinstance(v, (dt.datetime, dt.date)):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, canon(x)) for k, x in v.items()))
-    if isinstance(v, bytes):
-        return v.hex()
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return f"dec:{v}"
-    except ImportError:
-        pass
-    return v
-
-
-def _row_key(r):
-    return tuple((x is None, str(type(x)), str(x)) for x in r)
-
-
 def run_recovery() -> int:
     """Exactly-once recovery drill under real executors: phase-1 live
     trigger commits ≥1 batch against a RocksDB checkpoint and stops
@@ -174,7 +148,6 @@ def run_recovery() -> int:
     executor) and drains the rest. Totals must equal the batch
     aggregation: nothing lost, nothing double-counted."""
     import glob
-    import tempfile
     import time as _t
 
     import pyarrow.parquet as pq
@@ -189,77 +162,76 @@ def run_recovery() -> int:
     assert "RocksDB" in prov, f"expected the RocksDB provider, got {prov}"
 
     t = _read_events_arrow(SF)
-    src = tempfile.mkdtemp(prefix="nm_rec_src_")
-    step = (t.num_rows + 3) // 4
-    for i in range(4):
-        pq.write_table(t.slice(i * step, step), os.path.join(src, f"p{i}.parquet"))
-    ckpt = tempfile.mkdtemp(prefix="nm_rec_ckpt_")
+    with scratch("nm_rec_src_") as src, scratch("nm_rec_ckpt_") as ckpt:
+        step = (t.num_rows + 3) // 4
+        for i in range(4):
+            pq.write_table(t.slice(i * step, step), os.path.join(src, f"p{i}.parquet"))
 
-    schema = spark.read.parquet(src).schema
+        schema = spark.read.parquet(src).schema
 
-    def start(name, trigger_kwargs, max_files=None):
-        r = spark.readStream.schema(schema)
-        if max_files:
-            r = r.option("maxFilesPerTrigger", str(max_files))
-        df = (
-            r.parquet(src)
+        def start(name, trigger_kwargs, max_files=None):
+            r = spark.readStream.schema(schema)
+            if max_files:
+                r = r.option("maxFilesPerTrigger", str(max_files))
+            df = (
+                r.parquet(src)
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            return (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(**trigger_kwargs)
+                .start()
+            )
+
+        q1 = start("nm_lc_rec_p1", {"processingTime": "200 milliseconds"}, 1)
+        try:
+            deadline = _t.time() + 90
+            while _t.time() < deadline:
+                p = q1.lastProgress
+                if p is not None and p["batchId"] >= 1:
+                    break
+                _t.sleep(0.25)
+            else:
+                raise TimeoutError("phase-1 batch never committed")
+        finally:
+            q1.stop()
+            q1.awaitTermination()
+
+        # the checkpoint must hold RocksDB artifacts, not HDFS-provider deltas:
+        # full SST snapshots (.zip), or per-batch .changelog files under
+        # changelog checkpointing (round 11 — snapshots then upload lazily,
+        # so an early-stopped phase 1 may hold only changelogs)
+        zips = glob.glob(
+            os.path.join(ckpt, "state", "**", "*.zip"), recursive=True
+        ) + glob.glob(
+            os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True
+        )
+        assert zips, f"no RocksDB state artifacts under {ckpt}/state"
+
+        q2 = start("nm_lc_rec_p2", {"availableNow": True})
+        q2.awaitTermination()
+
+        got = {
+            r["event_type"]: r["n"] for r in spark.table("nm_lc_rec_p2").collect()
+        }
+        want = {
+            r["event_type"]: r["n"]
+            for r in spark.read.parquet(src)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(**trigger_kwargs)
-            .start()
-        )
-
-    q1 = start("nm_lc_rec_p1", {"processingTime": "200 milliseconds"}, 1)
-    try:
-        deadline = _t.time() + 90
-        while _t.time() < deadline:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 1:
-                break
-            _t.sleep(0.25)
-        else:
-            raise TimeoutError("phase-1 batch never committed")
-    finally:
-        q1.stop()
-        q1.awaitTermination()
-
-    # the checkpoint must hold RocksDB artifacts, not HDFS-provider deltas:
-    # full SST snapshots (.zip), or per-batch .changelog files under
-    # changelog checkpointing (round 11 — snapshots then upload lazily,
-    # so an early-stopped phase 1 may hold only changelogs)
-    zips = glob.glob(
-        os.path.join(ckpt, "state", "**", "*.zip"), recursive=True
-    ) + glob.glob(
-        os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True
-    )
-    assert zips, f"no RocksDB state artifacts under {ckpt}/state"
-
-    q2 = start("nm_lc_rec_p2", {"availableNow": True})
-    q2.awaitTermination()
-
-    got = {
-        r["event_type"]: r["n"] for r in spark.table("nm_lc_rec_p2").collect()
-    }
-    want = {
-        r["event_type"]: r["n"]
-        for r in spark.read.parquet(src)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    print(f"recovered totals: {sorted(got.items())}")
-    if got != want:
-        print(f"BAD: recovered totals drifted vs batch: {want}")
-        return 1
-    print("OK recovery: exactly-once totals match batch; "
-          f"{len(zips)} RocksDB state artifact(s) in checkpoint")
-    return 0
+            .collect()
+        }
+        print(f"recovered totals: {sorted(got.items())}")
+        if got != want:
+            print(f"BAD: recovered totals drifted vs batch: {want}")
+            return 1
+        print("OK recovery: exactly-once totals match batch; "
+              f"{len(zips)} RocksDB state artifact(s) in checkpoint")
+        return 0
 
 
 def _executor_pids() -> list[int]:
@@ -305,7 +277,6 @@ def run_chaos() -> int:
        final totals still equal the batch aggregation.
     """
     import signal
-    import tempfile
     import threading
     import time as _t
 
@@ -388,86 +359,85 @@ def run_chaos() -> int:
     prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
     assert "RocksDB" in prov, f"expected the RocksDB provider, got {prov}"
     t = _read_events_arrow(SF)
-    src = tempfile.mkdtemp(prefix="nm_chaos_src_")
-    step = (t.num_rows + 7) // 8
-    for i in range(8):
-        pq.write_table(
-            t.slice(i * step, step), os.path.join(src, f"p{i}.parquet")
-        )
-    ckpt = tempfile.mkdtemp(prefix="nm_chaos_ckpt_")
-    schema = spark.read.parquet(src).schema
-    q1 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("memory")
-        .queryName("nm_chaos_p1")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _t.time() + 90
-        while _t.time() < deadline:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 2:
-                break
-            _t.sleep(0.2)
-        else:
-            raise TimeoutError("chaos C: no committed batch before kill")
-        victim = _executor_pids()[0]
-        os.kill(victim, signal.SIGKILL)
-        print(f"chaos C: killed executor pid {victim} mid-drain")
-        killed_at = q1.lastProgress["batchId"]
-        deadline = _t.time() + 120
-        while _t.time() < deadline:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= killed_at + 2:
-                break  # the stream advanced ON the replacement executor
-            _t.sleep(0.2)
-        else:
-            raise TimeoutError("chaos C: stream never advanced after kill")
-    except Exception as exc:  # noqa: BLE001
-        failures.append(f"C: {type(exc).__name__}: {str(exc)[:200]}")
-        q1.stop()
-    else:
-        q1.stop()
-        q1.awaitTermination()
-        # drain the remainder from the SAME checkpoint, then compare
-        q2 = (
+    with scratch("nm_chaos_src_") as src, scratch("nm_chaos_ckpt_") as ckpt:
+        step = (t.num_rows + 7) // 8
+        for i in range(8):
+            pq.write_table(
+                t.slice(i * step, step), os.path.join(src, f"p{i}.parquet")
+            )
+        schema = spark.read.parquet(src).schema
+        q1 = (
             spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
             .parquet(src)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .writeStream.format("memory")
-            .queryName("nm_chaos_p2")
+            .queryName("nm_chaos_p1")
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+            .trigger(processingTime="200 milliseconds")
             .start()
         )
-        q2.awaitTermination()
-        got = {
-            r["event_type"]: r["n"]
-            for r in spark.table("nm_chaos_p2").collect()
-        }
-        want = {
-            r["event_type"]: r["n"]
-            for r in spark.read.parquet(src)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if got != want:
-            failures.append(f"C: totals drifted got={got} want={want}")
+        try:
+            deadline = _t.time() + 90
+            while _t.time() < deadline:
+                p = q1.lastProgress
+                if p is not None and p["batchId"] >= 2:
+                    break
+                _t.sleep(0.2)
+            else:
+                raise TimeoutError("chaos C: no committed batch before kill")
+            victim = _executor_pids()[0]
+            os.kill(victim, signal.SIGKILL)
+            print(f"chaos C: killed executor pid {victim} mid-drain")
+            killed_at = q1.lastProgress["batchId"]
+            deadline = _t.time() + 120
+            while _t.time() < deadline:
+                p = q1.lastProgress
+                if p is not None and p["batchId"] >= killed_at + 2:
+                    break  # the stream advanced ON the replacement executor
+                _t.sleep(0.2)
+            else:
+                raise TimeoutError("chaos C: stream never advanced after kill")
+        except Exception as exc:  # noqa: BLE001
+            failures.append(f"C: {type(exc).__name__}: {str(exc)[:200]}")
+            q1.stop()
         else:
-            print(
-                "OK chaos C: exactly-once totals match batch across an "
-                "executor kill mid-drain"
+            q1.stop()
+            q1.awaitTermination()
+            # drain the remainder from the SAME checkpoint, then compare
+            q2 = (
+                spark.readStream.schema(schema)
+                .parquet(src)
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .writeStream.format("memory")
+                .queryName("nm_chaos_p2")
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
+            q2.awaitTermination()
+            got = {
+                r["event_type"]: r["n"]
+                for r in spark.table("nm_chaos_p2").collect()
+            }
+            want = {
+                r["event_type"]: r["n"]
+                for r in spark.read.parquet(src)
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            if got != want:
+                failures.append(f"C: totals drifted got={got} want={want}")
+            else:
+                print(
+                    "OK chaos C: exactly-once totals match batch across an "
+                    "executor kill mid-drain"
+                )
 
     print("CHAOS:", failures if failures else "all three classes as designed")
     return 1 if failures else 0
@@ -727,10 +697,7 @@ for name in RUN:
     try:
         df = qd[name](spark, SF)
         cols = sorted(df.columns)
-        rows = sorted(
-            (tuple(canon(r[c]) for c in cols) for r in df.collect()),
-            key=_row_key,
-        )
+        rows = canon_rows(df.columns, df.collect())
     except Exception as exc:  # noqa: BLE001 — report and continue
         bad.append((name, f"SPARK {type(exc).__name__}: {str(exc)[:200]}"))
         continue
@@ -744,11 +711,7 @@ for name in RUN:
     try:
         cur = con.execute(od[name])
         ocols = [d[0] for d in cur.description]
-        idx = [ocols.index(c) for c in sorted(ocols)]
-        ora = sorted(
-            (tuple(canon(r[i]) for i in idx) for r in cur.fetchall()),
-            key=_row_key,
-        )
+        ora = canon_rows(ocols, cur.fetchall())
     except Exception as exc:  # noqa: BLE001
         bad.append((name, f"ORACLE {type(exc).__name__}: {str(exc)[:200]}"))
         continue

@@ -27,20 +27,22 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+from storm_netmonitor_spark.io import scratch  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 REP = int(sys.argv[2]) if len(sys.argv) > 2 else 30
 N_FILES = 6  # > 1 micro-batch: state must persist/reload across batches
 
 
-def stage_source() -> str:
-    """Replicated events staging — REP copies per row, event ids remapped
-    to ``event_id * REP + r`` so every copy is a DISTINCT state key."""
+def stage_source(d: str) -> None:
+    """Replicated events staging into ``d`` — REP copies per row, event
+    ids remapped to ``event_id * REP + r`` so every copy is a DISTINCT
+    state key."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -48,7 +50,6 @@ def stage_source() -> str:
     from storm_netmonitor_spark.streaming.stateful import _read_events_arrow
 
     t = _read_events_arrow(SF)
-    d = tempfile.mkdtemp(prefix="nm_statecard_")
     eid = pc.multiply(pc.cast(t.column("event_id"), pa.int64()), REP)
     step = (REP + N_FILES - 1) // N_FILES
     for f in range(N_FILES):
@@ -58,7 +59,6 @@ def stage_source() -> str:
             parts.append(t.set_column(i, "event_id", pc.add(eid, r)))
         if parts:
             pq.write_table(pa.concat_tables(parts), os.path.join(d, f"f{f}.parquet"))
-    return d
 
 
 def child(provider: str, src: str) -> None:
@@ -90,22 +90,22 @@ def child(provider: str, src: str) -> None:
         ),
     )
     schema = spark.read.parquet(src).schema
-    ckpt = tempfile.mkdtemp(prefix=f"nm_statecard_ckpt_{provider}_")
-    t0 = time.perf_counter()
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .groupBy("event_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    wall = time.perf_counter() - t0
+    with scratch(f"nm_statecard_ckpt_{provider}_") as ckpt:
+        t0 = time.perf_counter()
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .groupBy("event_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .writeStream.format("noop")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        wall = time.perf_counter() - t0
     progresses = [p for p in q.recentProgress if p.get("stateOperators")]
     last = progresses[-1]["stateOperators"][0] if progresses else {}
     rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
@@ -132,33 +132,34 @@ def main() -> int:
     if os.environ.get("NM_STATE_PROBE_CHILD"):
         child(os.environ["NM_STATE_PROBE_CHILD"], os.environ["NM_STATE_PROBE_SRC"])
         return 0
-    src = stage_source()
     results = {}
-    for provider in ("rocksdb", "hdfs"):
-        env = dict(
-            os.environ,
-            NM_STATE_PROBE_CHILD=provider,
-            NM_STATE_PROBE_SRC=src,
-        )
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), SF, str(REP)],
-            env=env,
-            capture_output=True,
-            text=True,
-            cwd=_REPO,
-        )
-        line = next(
-            (
-                ln
-                for ln in proc.stdout.splitlines()
-                if ln.startswith("PROBE_RESULT ")
-            ),
-            None,
-        )
-        if line is None:
-            print(f"{provider}: FAILED\n{proc.stdout[-1500:]}\n{proc.stderr[-1500:]}")
-            return 1
-        results[provider] = json.loads(line[len("PROBE_RESULT "):])
+    with scratch("nm_statecard_") as src:
+        stage_source(src)
+        for provider in ("rocksdb", "hdfs"):
+            env = dict(
+                os.environ,
+                NM_STATE_PROBE_CHILD=provider,
+                NM_STATE_PROBE_SRC=src,
+            )
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), SF, str(REP)],
+                env=env,
+                capture_output=True,
+                text=True,
+                cwd=_REPO,
+            )
+            line = next(
+                (
+                    ln
+                    for ln in proc.stdout.splitlines()
+                    if ln.startswith("PROBE_RESULT ")
+                ),
+                None,
+            )
+            if line is None:
+                print(f"{provider}: FAILED\n{proc.stdout[-1500:]}\n{proc.stderr[-1500:]}")
+                return 1
+            results[provider] = json.loads(line[len("PROBE_RESULT "):])
     mb = lambda b: f"{b / 1048576:7.1f} MB" if b is not None else "      n/a"
     print(f"\nstate-cardinality probe: {SF} × REP={REP} "
           f"({results['rocksdb'].get('n_state_keys')} state keys)")
