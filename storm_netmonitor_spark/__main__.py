@@ -15,8 +15,11 @@ testdata directory, printing results (or the physical plan) to stdout.
 timed call (``PROFILE_CALLS``): the wall and its plan-build part, the
 Spark jobs the calling thread started while building the frame and while
 collecting it, and each drain's ``streaming.core.DrainRecord`` with the
-jobs of its ``runId`` group (its stream-execution thread); then the
-median wall.
+jobs of its ``runId`` group (its stream-execution thread). Each call then
+collects its frame once more (``recollect``): ``bench.py`` times a batch
+op that way, one built frame re-collected after a warm collect; an op
+whose work runs inside the call (its ``RERUN_FULL`` set) re-collects a
+finished result. Last comes the median of both walls.
 """
 
 from __future__ import annotations
@@ -40,18 +43,22 @@ def _profile(spark, query_id: str, sf_dir: str) -> None:
     fn, sc = QUERIES[query_id], spark.sparkContext
     jobs = sc.statusTracker().getJobIdsForGroup
     fn(spark, sf_dir).collect()  # warm: JIT, artifacts, memoized plans
-    walls = []
+    walls, rewalls = [], []
     for i in range(PROFILE_CALLS):
         seen = DRAINS[-1].seq if DRAINS else 0
-        build, collect = f"nm-profile-{i}-build", f"nm-profile-{i}-collect"
+        groups = {k: f"nm-profile-{i}-{k}" for k in ("build", "collect", "recollect")}
         try:
-            sc.setJobGroup(build, query_id)
+            sc.setJobGroup(groups["build"], query_id)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
-            sc.setJobGroup(collect, query_id)
+            sc.setJobGroup(groups["collect"], query_id)
             df.collect()
             walls.append(time.perf_counter() - t0)
+            sc.setJobGroup(groups["recollect"], query_id)
+            t2 = time.perf_counter()
+            df.collect()
+            rewalls.append(time.perf_counter() - t2)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         drains = [
@@ -61,11 +68,14 @@ def _profile(spark, query_id: str, sf_dir: str) -> None:
         ]
         print(json.dumps({
             "query": query_id, "call": i, "wall_s": round(walls[-1], 4),
-            "build_s": round(t1 - t0, 4),
-            "jobs": {"build": len(jobs(build)), "collect": len(jobs(collect))},
+            "build_s": round(t1 - t0, 4), "recollect_s": round(rewalls[-1], 4),
+            "jobs": {k: len(jobs(g)) for k, g in groups.items()},
             "drains": drains,
         }), flush=True)
-    print(json.dumps({"query": query_id, "median_wall_s": round(statistics.median(walls), 4)}))
+    print(json.dumps({
+        "query": query_id, "median_wall_s": round(statistics.median(walls), 4),
+        "median_recollect_s": round(statistics.median(rewalls), 4),
+    }))
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -22,7 +22,9 @@ import uuid
 from collections import Counter, deque
 from contextlib import nullcontext
 from dataclasses import dataclass
+from datetime import datetime
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
@@ -141,9 +143,12 @@ class DrainRecord:
     ``batches`` holds each completed micro-batch's ``batchId``,
     ``numInputRows`` and ``durationMs``; ``rows`` and ``duration_ms``
     are their totals. ``wall_ms`` runs from ``start()`` to termination,
-    ``outside_trigger_ms`` is the part of it outside every trigger. The
-    state figures are the last batch's, summed over its state operators.
-    ``error`` names the micro-batch a failed drain died in."""
+    ``outside_trigger_ms`` is the part of it outside every trigger and
+    ``start_to_first_batch_ms`` the part before the first trigger began
+    (its progress ``timestamp``). The state figures are the last batch's,
+    summed over its state operators. ``error`` is set when the drain
+    raised: the exception type, after the micro-batch it failed in when
+    the query itself failed (``_failed_at``)."""
 
     seq: int
     run_id: str
@@ -154,6 +159,7 @@ class DrainRecord:
     rows: int
     duration_ms: dict[str, int]
     outside_trigger_ms: float
+    start_to_first_batch_ms: float | None
     state_rows: int
     state_memory_bytes: int
     error: str | None
@@ -164,9 +170,11 @@ DRAINS: deque[DrainRecord] = deque(maxlen=DRAINS_KEPT)
 _DRAIN_SEQ = itertools.count(1)
 
 
-def _record(q: StreamingQuery, sink: str, mode: str, t0: float, exc=None):
+def _record(q: StreamingQuery, sink: str, mode: str, t0: float, epoch: float,
+            error: str | None = None):
     """Build the terminated ``q``'s record, keep it in ``DRAINS`` and
-    return it; ``exc`` is the exception the drain raised."""
+    return it; ``t0``/``epoch`` are the perf-counter and wall-clock
+    readings taken just before ``start()``."""
     wall_ms = (time.perf_counter() - t0) * 1000.0
     progress = q.recentProgress
     batches = tuple(
@@ -177,7 +185,11 @@ def _record(q: StreamingQuery, sink: str, mode: str, t0: float, exc=None):
     for b in batches:
         totals.update(b["durationMs"])
     state = progress[-1]["stateOperators"] if progress else []
-    failed = batches[-1]["batchId"] + 1 if batches else 0
+    first = (
+        datetime.fromisoformat(progress[0]["timestamp"]).timestamp() - epoch
+        if progress
+        else None
+    )
     rec = DrainRecord(
         seq=next(_DRAIN_SEQ),
         run_id=str(q.runId),
@@ -188,12 +200,30 @@ def _record(q: StreamingQuery, sink: str, mode: str, t0: float, exc=None):
         rows=sum(b["numInputRows"] for b in batches),
         duration_ms=dict(totals),
         outside_trigger_ms=round(wall_ms - totals["triggerExecution"], 1),
+        start_to_first_batch_ms=None if first is None else round(first * 1000.0, 1),
         state_rows=sum(o["numRowsTotal"] for o in state),
         state_memory_bytes=sum(o["memoryUsedBytes"] for o in state),
-        error=None if exc is None else f"micro-batch {failed}: {type(exc).__name__}",
+        error=error,
     )
     DRAINS.append(rec)
     return rec
+
+
+def _failed_at(q: StreamingQuery, exc: Exception, resumed: bool) -> str:
+    """Where a drain that raised ``exc`` stopped. A query failure
+    (``StreamingQueryException``) names its micro-batch: the one after
+    the last completed batch, or batch 0 when a fresh checkpoint
+    completed none; a passed checkpoint may hold earlier batches, so
+    there the first failing batch is not named. Any other raise (say,
+    ``drain_to_memory_until``'s timeout) is not a batch's."""
+    if not isinstance(exc, StreamingQueryException):
+        return type(exc).__name__
+    done = q.recentProgress
+    if done:
+        at = f"micro-batch {done[-1]['batchId'] + 1}"
+    else:
+        at = "before its first completed batch" if resumed else "micro-batch 0"
+    return f"{at}: {type(exc).__name__}"
 
 
 def _run(
@@ -212,7 +242,7 @@ def _run(
     ``DrainRecord``. The per-drain confs are restored to the session's
     previous values afterwards, also when the query raises; so is a
     fresh ``ckpt_dir()`` made when no ``checkpoint`` is given. A raise
-    is recorded too, and noted with the micro-batch it failed in.
+    is recorded too, and noted with where it failed (``_failed_at``).
 
     The shuffle width is captured into the query's checkpoint at start,
     so restoring the batch setting afterwards does not affect the drain.
@@ -221,6 +251,7 @@ def _run(
     emission in append mode) buys nothing there; append-mode drains keep
     it: their last rows emit in that batch. The session-wide drain confs
     (``session.RUNTIME_CONFS``) ride ``apply_runtime_confs`` instead."""
+    resumed = bool(checkpoint)
     with nullcontext(checkpoint) if checkpoint else ckpt_dir() as checkpoint:
         writer = df.writeStream.outputMode(mode).option(
             "checkpointLocation", checkpoint
@@ -245,18 +276,18 @@ def _run(
             spark.conf.set(k, v)
         sink = "foreachBatch" if callable(sink) else sink
         try:
-            t0 = time.perf_counter()
+            t0, epoch = time.perf_counter(), time.time()
             q = writer.trigger(**trigger).start()
             try:
                 until(q)
             except Exception as exc:
-                rec = _record(q, sink, mode, t0, exc)
+                rec = _record(q, sink, mode, t0, epoch, _failed_at(q, exc, resumed))
                 exc.add_note(
-                    f"streaming drain failed in {rec.error} "
+                    f"streaming drain failed, {rec.error} "
                     f"(runId {rec.run_id}, {sink} sink)"
                 )
                 raise
-            return _record(q, sink, mode, t0)
+            return _record(q, sink, mode, t0, epoch)
         finally:
             for k, v in prev.items():
                 spark.conf.set(k, v)
@@ -274,7 +305,7 @@ def drain(
     """THE streaming query lifecycle: run ``df`` to completion with
     ``trigger(availableNow=True)`` and return its ``DrainRecord`` (also
     kept in ``DRAINS``). A failed drain raises the query's exception,
-    noted with the micro-batch it failed in.
+    noted with the micro-batch it failed in (``_failed_at``).
 
     ``sink`` is a format name (``memory``/``parquet``/``noop``; the memory
     sink takes ``query_name``, file sinks take ``path``) or a

@@ -338,6 +338,37 @@ def test_failed_drain_names_its_batch(spark):
 
 
 @pytest.mark.fast
+def test_resumed_drain_does_not_name_batch_zero(spark):
+    """A drain on a passed checkpoint continues its batch ids, so one that
+    fails before completing a batch names no batch; a raise that is not
+    the query's (a timeout) names none either."""
+    d = scratch_dir("nm_drain_resume_")
+
+    def add(i):
+        f = os.path.join(d, f"part-{i:05d}.parquet")
+        pq.write_table(pa.table({"k": [f"a{i}"]}), f)
+        os.utime(f, (1_700_000_000 + i * 1000,) * 2)
+
+    def sink(batch_df, batch_id):
+        if batch_id == 2:
+            raise RuntimeError("fold failed")
+
+    for i in range(2):
+        add(i)
+    with ckpt_dir() as ckpt:
+        first = drain(staged_stream(spark, d, "k string"), sink, checkpoint=ckpt)
+        assert [b["batchId"] for b in first.batches] == [0, 1]
+        for i in range(2, 4):
+            add(i)
+        with pytest.raises(StreamingQueryException, match="fold failed") as info:
+            drain(staged_stream(spark, d, "k string"), sink, checkpoint=ckpt)
+    error = "before its first completed batch: StreamingQueryException"
+    assert core.DRAINS[-1].error == error
+    assert any(error in n for n in getattr(info.value, "__notes__", []))
+    assert core._failed_at(_Ended(), TimeoutError(), False) == "TimeoutError"
+
+
+@pytest.mark.fast
 def test_memory_drain_records_one_batch_of_every_event(spark):
     name = "nm_mem_record_test"
     try:
@@ -373,6 +404,7 @@ def test_foreach_batch_drain_records_its_batches_and_jobs(spark):
     assert rec.outside_trigger_ms == pytest.approx(
         rec.wall_ms - rec.duration_ms["triggerExecution"], abs=0.2
     )
+    assert -1 < rec.start_to_first_batch_ms < rec.wall_ms
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(rec.run_id)
     assert len(jobs) >= 4
     json.dumps(dataclasses.asdict(rec))
@@ -410,6 +442,6 @@ class _Ended:
 def test_drains_keeps_at_most_its_bound():
     t0 = time.perf_counter()
     for _ in range(core.DRAINS_KEPT + 1):
-        last = core._record(_Ended(), "noop", "append", t0)
+        last = core._record(_Ended(), "noop", "append", t0, time.time())
     assert len(core.DRAINS) == core.DRAINS_KEPT
     assert core.DRAINS[-1] is last

@@ -546,7 +546,9 @@ def test_cli_list_and_run():
         [d] = c["drains"]
         assert (len(d["batches"]), d["error"]) == (4, None)
         assert d["jobs"] >= 4 and c["wall_s"] > 0
-    assert median["median_wall_s"] > 0
+        assert set(c["jobs"]) == {"build", "collect", "recollect"}
+        assert c["recollect_s"] > 0
+    assert median["median_wall_s"] > 0 and median["median_recollect_s"] > 0
 
 
 def test_lloyd_round_semantics(spark):

@@ -8,9 +8,11 @@ ids (replicate_rows' id-fanout discipline), so the stateful aggregation
 the default sf0.1 — then drains it under each state-store provider in a
 fresh subprocess and records:
 
-- drain wall seconds (sum of batch trigger executions),
-- ``stateOperators[0].memoryUsedBytes`` (the provider's own accounting:
-  JVM-object heap for HDFS, native block-cache+memtable for RocksDB),
+- drain wall seconds, from ``start()`` to termination,
+- the last batch's state rows and ``memoryUsedBytes`` (the provider's
+  own accounting: JVM-object heap for HDFS, native block-cache+memtable
+  for RocksDB), both read from the ``streaming.core.DrainRecord`` that
+  ``drain`` returns,
 - JVM used heap after a System.gc() post-drain (the OOM-relevant number:
   RocksDB keeps state OFF this heap, HDFS keeps every key's state ON it).
 
@@ -66,7 +68,8 @@ def child(provider: str, src: str) -> None:
     so the JVM heap measurement is uncontaminated)."""
     from pyspark.sql import SparkSession, functions as F
 
-    from storm_netmonitor_spark.session import RUNTIME_CONFS
+    from storm_netmonitor_spark.session import RUNTIME_CONFS, apply_runtime_confs
+    from storm_netmonitor_spark.streaming.core import drain
 
     builder = (
         SparkSession.builder.master(
@@ -80,6 +83,9 @@ def child(provider: str, src: str) -> None:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    # pin the runtime confs first: drain() applies them once per session,
+    # and they name the default provider
+    apply_runtime_confs(spark)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
@@ -90,24 +96,18 @@ def child(provider: str, src: str) -> None:
         ),
     )
     schema = spark.read.parquet(src).schema
+    counts = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .groupBy("event_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     with scratch(f"nm_statecard_ckpt_{provider}_") as ckpt:
-        t0 = time.perf_counter()
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .groupBy("event_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        rec = drain(
+            counts, "noop", "update", checkpoint=ckpt,
+            state_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
         )
-        q.awaitTermination()
-        wall = time.perf_counter() - t0
-    progresses = [p for p in q.recentProgress if p.get("stateOperators")]
-    last = progresses[-1]["stateOperators"][0] if progresses else {}
     rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
     rt.gc()
     time.sleep(1.0)
@@ -118,11 +118,11 @@ def child(provider: str, src: str) -> None:
         + json.dumps(
             {
                 "provider": provider,
-                "wall_sec": round(wall, 2),
-                "n_state_keys": last.get("numRowsTotal"),
-                "state_memory_used_bytes": last.get("memoryUsedBytes"),
+                "wall_sec": round(rec.wall_ms / 1000.0, 2),
+                "n_state_keys": rec.state_rows,
+                "state_memory_used_bytes": rec.state_memory_bytes,
                 "jvm_heap_after_gc_bytes": heap_used,
-                "n_batches": len(q.recentProgress),
+                "n_batches": len(rec.batches),
             }
         )
     )
