@@ -12,7 +12,8 @@ memory-sink drain also drops its sink. A partials fold counts a retried
 batch once, reads an all-empty stream as an empty frame typed by its
 ddl, and deletes its landings also when the fold fails. Every query the
 core starts leaves a plain-data record of its batches in ``DRAINS``, a
-failed one too, whose exception names the micro-batch it died in.
+failed one too, whose exception is noted with the micro-batch it died
+in when that batch is known.
 """
 
 from __future__ import annotations
